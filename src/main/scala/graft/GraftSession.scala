@@ -13,7 +13,22 @@ import org.apache.spark.sql.SparkSession
   *   - ANSI off matches the PySpark 3.5 reference semantics (x/0 → NULL,
   *     no overflow errors) rather than Spark 4's ANSI default;
   *   - nanos-as-long lets the TIMESTAMP(NANOS) events table load
-  *     (truncated to micros in [[graft.sources.Tables.events]]).
+  *     (truncated to micros in [[graft.sources.Tables.events]]);
+  *   - a 256-entry codegen cache keeps a streaming sink's generated
+  *     classes compiled across micro-batches. Spark keys the cache on
+  *     (context class loader, code body), and in local mode each body
+  *     is cached under both the driver thread's loader and the
+  *     executor's per-session loader. One steady-state
+  *     [[graft.streaming.EventStream.curationSink]] batch with the LM
+  *     stage on touches 171 such entries (106 bodies), and up to 190
+  *     across two consecutive batches; Guava splits the cache into 4
+  *     LRU segments of cap/4, and the fullest segment held up to 60 of
+  *     them. Spark's default of 100 evicted most entries before their
+  *     next use, so each batch recompiled about 155 classes. Each extra
+  *     entry pins its session loader (about 33 KB), hence no more than
+  *     this. The conf is static and JVM-global: Spark reads it once,
+  *     at the JVM's first code generation, so it takes effect only if
+  *     this builder builds the JVM's first session.
   *
   * Cluster deployments use the same builder with a cluster master URL —
   * nothing here is local-mode-specific except the defaults.
@@ -29,6 +44,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "256")
       // Runtime bloom-filter pruning for fact⋈fact shuffle joins
       // (lineitem⋈orders): the filtered side's join keys are sketched and
       // applied to the big side's scan before the exchange. Pinned on;

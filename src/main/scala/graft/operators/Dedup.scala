@@ -289,14 +289,22 @@ object Dedup {
     * ~1e-9 deterministic collision caveat the blocked Jaccard path
     * documents.
     */
-  def minhashFromShingled(docs: DataFrame, threshold: Double): DataFrame = {
+  def minhashFromShingled(docs: DataFrame, threshold: Double): DataFrame =
+    minhashFromShingledUnordered(docs, threshold)
+      .orderBy(col("da"), col("db"))
+
+  /** [[minhashFromShingled]] without the final (da, db) sort, for callers
+    * that cut or aggregate the pairs anyway: the global sort costs a
+    * range-sampling job plus a sort whose order nobody reads.
+    */
+  private[graft] def minhashFromShingledUnordered(docs: DataFrame,
+      threshold: Double): DataFrame = {
     val cands = candidatePairs(signatures(docs))
     cands.join(hashedSets(docs, "da", "hsa", "na"), "da")
       .join(hashedSets(docs, "db", "hsb", "nb"), "db")
       .withColumn("jaccard", kernelJaccard)
       .filter(col("jaccard") >= threshold)
       .select(col("da"), col("db"), col("jaccard"))
-      .orderBy(col("da"), col("db"))
   }
 
   /** Per-doc sorted xxhash64 shingle set, aliased for a join side — the
@@ -474,6 +482,7 @@ object Dedup {
       .repartition(col("band"))
       .sortWithinPartitions(col("h"))
       .write.mode("append").partitionBy("band").parquet(s"$path/bands")
+    graft.Materialize.release(bs)
   }
 
   /** [[minhashJoinOn]] with the corpus side served from a materialized
@@ -1413,8 +1422,11 @@ object Dedup {
       val s = lblSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
+      // `next` landed with the sum's job, so the round's input is dead
+      graft.Materialize.release(labels)
       labels = next
     }
+    Seq(p, edges).foreach(graft.Materialize.release)
     (labels.select(col("n").as("doc_id"), col("lbl").as("cluster_id"))
       .orderBy(col("doc_id")), rounds)
   }

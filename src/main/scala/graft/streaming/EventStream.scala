@@ -1262,21 +1262,23 @@ object EventStream {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
     import graft.pipeline.TextCuration
-    // static one-row eval hash set, built once and broadcast per batch
+    // static one-row eval hash set, cut once here and broadcast per
+    // batch: a lazy frame would re-run its explode/distinct/collect_set
+    // shuffles on every trigger
     val evalHashes = evalSet
       .select(explode(
         Dedup.shingleHashes(col("text"), cfg.decontamK)).as("h"))
       .distinct()
       .agg(collect_set(col("h")).as("eval_hashes"))
+      .cutLineage(eager = true)
     docs.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
+        val nInput = batch.count()
+        if (nInput > 0) {
           val spark = batch.sparkSession
           import spark.implicits._
-          import graft.Materialize.MatOps
-          val nInput = batch.count()
           // 1. quality — the batch pipeline's own gate
           val qual = TextCuration.qualityGateOn(batch.toDF(), cfg)
             .cutLineage(eager = true)
@@ -1293,8 +1295,10 @@ object EventStream {
             .cutLineage(eager = true)
           val nClean = clean.count()
           // 3. near-dup: intra-batch keep-first, then the stored index
-          val pairs = Dedup.minhashNearDupOn(
-            clean.select(col("doc_id"), col("text")), cfg.dedupThreshold)
+          // unordered: clustersFromPairs cuts the pairs straight away
+          val pairs = Dedup.minhashFromShingledUnordered(
+            clean.select(col("doc_id"), Dedup.shingles(col("text")).as("sh")),
+            cfg.dedupThreshold)
           val clusters = Dedup.clustersFromPairs(
             pairs.select(col("da"), col("db")))
           val intraLosers = clusters
@@ -1432,7 +1436,7 @@ object EventStream {
             if (idxExists) Dedup.appendToMinhashIndex(toIndex, indexPath)
             else Dedup.writeMinhashIndex(toIndex, indexPath)
           }
-          (Seq(qual, clean, admitted, landed) ++
+          (Seq(qual, clean, clusters, admitted, landed) ++
             (if (lmModelPath.isDefined) Seq(fluent) else Nil))
             .foreach(graft.Materialize.release)
         }

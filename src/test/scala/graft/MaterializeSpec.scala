@@ -72,6 +72,36 @@ class MaterializeSpec extends AnyFunSuite {
       Seq(2, 4, 6, 8), "consumer must still serve from its own cut")
   }
 
+  test("clustersFromPairs and appendToMinhashIndex release their own " +
+      "cuts: after each call the persistent RDDs hold only the returned " +
+      "frame's") {
+    import graft.operators.Dedup
+    val s = sessionWithMode("local")
+    import s.implicits._
+    def persisted() = s.sparkContext.getPersistentRDDs.keySet
+    // a chain takes more than one round, so a round's labels are released
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+      .toDF("da", "db")
+    val before = persisted()
+    val clusters = Dedup.clustersFromPairs(pairs)
+    val returned = clusters.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    assert(persisted() -- before == returned,
+      s"left behind: ${persisted() -- before -- returned}")
+    assert(clusters.select("cluster_id").distinct().count() == 2)
+    val docs = (1L to 6L).map(i =>
+      (i, s"doc $i words alpha beta gamma delta epsilon zeta eta"))
+      .toDF("doc_id", "text")
+    val idx = java.nio.file.Files.createTempDirectory("graft_mat_idx")
+      .toString
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") <= 3), idx)
+    val beforeAppend = persisted()
+    Dedup.appendToMinhashIndex(docs.filter(col("doc_id") > 3), idx)
+    assert((persisted() -- beforeAppend).isEmpty)
+    assert(s.read.parquet(s"$idx/shingles").count() == 6)
+  }
+
   test("release refuses a frame that is not exactly one cut: a derived " +
       "frame joining two cuts would release blocks shared with other " +
       "consumers") {

@@ -829,6 +829,55 @@ class EventStreamSpec extends AnyFunSuite {
     assert(ledgerAfter == batchRef, "replay must not change the ledger")
   }
 
+  test("curationSink reuses its generated code across micro-batches: a " +
+    "steady-state batch compiles only a few classes") {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = java.nio.file.Files.createTempDirectory("graft_curcodegen")
+    def text(seed: Int) = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(40)(s"w${r.nextInt(400)}").mkString(" ")
+    }
+    val evalTexts = (1 to 3).map(i => text(-i))
+    // five batches of 40 docs with rising batch ids, as in production.
+    // Each later batch re-sends a doc of the one before (index match),
+    // doc 3 quotes an eval text (decontamination), every 8th doc is a
+    // near-dup of its predecessor (intra-batch cluster), and ids ≡ 0
+    // mod 20 are eval ids.
+    val batches = (0 until 5).map { b =>
+      (1 to 40).map { k =>
+        val t = if (k == 1 && b > 0) text(100 * (b - 1) + 2)
+          else if (k == 3) evalTexts(b % 3) + " tail"
+          else if (k % 8 == 1 && k > 1)
+            text(100 * b + k - 1).replaceFirst("\\S+$", "changed")
+          else text(100 * b + k)
+        (100L * b + k, t, s"s${k % 3}", "en")
+      }
+    }
+    val evalSet = evalTexts.zipWithIndex.map { case (t, i) =>
+      (20L * (i + 1), t, "s0", "en")
+    }.toDF("doc_id", "text", "source", "lang")
+    val input = MemoryStream[(Long, String, String, String)]
+    val q = EventStream.curationSink(
+      input.toDF().toDF("doc_id", "text", "source", "lang"), evalSet,
+      root.resolve("idx").toString, root.resolve("out").toString,
+      root.resolve("ck").toString)
+    val compiles = try batches.map { b =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      input.addData(b: _*); q.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    } finally q.stop()
+    val ledger = spark.read.parquet(root.resolve("out/ledger").toString)
+      .collect().map(r => (r.getAs[String]("stage"),
+        r.getAs[Int]("ingest_batch")) -> r.getAs[Long]("n_docs")).toMap
+    assert((0 until 5).forall(b =>
+      ledger(("3_decontam", b)) < ledger(("2_quality", b)) &&
+        ledger(("4_dedup", b)) < ledger(("3_decontam", b))),
+      s"every gate must drop docs in every batch: $ledger")
+    assert(compiles.last <= 30, s"classes compiled per batch: $compiles")
+  }
+
   test("curationSink with the LM stage: streamed admissions equal the " +
     "batch composition (stages 1-4 pass-through corpus, 5_lm = the " +
     "batch Stupid-Backoff gate, cap renumbers to 6_cap)") {
