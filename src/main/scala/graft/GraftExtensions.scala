@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import graft.functions.{AHash64, DeflateSize, DotProduct, L2Sq, LmGrams, SampleCdfPos, SignBands, SimHash64, SortedIntersectCount, TriProducts, WordShingles}
+import graft.functions.{AHash64, DeflateSize, DotProduct, HashedSet, L2Sq, LmGrams, OrderedSum, SampleCdfPos, SignBands, SimHash64, SortedIntersectCount, TriProducts, WordNgrams, WordShingleHashes, WordShingles}
+import scala.reflect.{ClassTag, classTag}
 
 /** Session plugin registering graft's native Catalyst expressions.
   *
@@ -24,6 +25,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         build(args)
       })
 
+  /** The value of a plan-time constant argument, e.g. a shingle width. */
+  private def lit[T: ClassTag](name: String, param: String,
+      e: Expression): T = e match {
+    case Literal(v: T, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$name: $param must be a literal ${classTag[T]}, got $other")
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(fn("vec_dot", 2)(a => DotProduct(a(0), a(1))))
     ext.injectFunction(fn("vec_l2sq", 2)(a => L2Sq(a(0), a(1))))
@@ -36,33 +45,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(
       fn("sorted_intersect_count", 2)(a => SortedIntersectCount(a(0), a(1))))
     ext.injectFunction(fn("sample_cdf_pos", 2)(a => SampleCdfPos(a(0), a(1))))
-    ext.injectFunction(fn("word_shingles", 2) { a =>
-      val k = a(1) match {
-        case Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"word_shingles: k must be an integer literal, got $other")
-      }
-      WordShingles(a(0), k)
-    })
-    ext.injectFunction(fn("word_shingle_hashes", 3) { a =>
-      (a(1), a(2)) match {
-        case (Literal(k: Int, _), Literal(sorted: Boolean, _)) =>
-          graft.functions.WordShingleHashes(a(0), k, sorted)
-        case other => throw new IllegalArgumentException(
-          "word_shingle_hashes: k and sorted must be int/boolean " +
-            s"literals, got $other")
-      }
-    })
-    ext.injectFunction(
-      fn("hashed_set", 1)(a => graft.functions.HashedSet(a(0))))
-    ext.injectFunction(
-      fn("ordered_sum", 1)(a => graft.functions.OrderedSum(a(0))))
-    ext.injectFunction(fn("word_ngrams", 2) { a =>
-      a(1) match {
-        case Literal(n: Int, _) => graft.functions.WordNgrams(a(0), n)
-        case other => throw new IllegalArgumentException(
-          s"word_ngrams: n must be an integer literal, got $other")
-      }
-    })
+    ext.injectFunction(fn("word_shingles", 2)(a =>
+      WordShingles(a(0), lit[Int]("word_shingles", "k", a(1)))))
+    ext.injectFunction(fn("word_shingle_hashes", 3)(a =>
+      WordShingleHashes(a(0), lit[Int]("word_shingle_hashes", "k", a(1)),
+        lit[Boolean]("word_shingle_hashes", "sorted", a(2)))))
+    ext.injectFunction(fn("hashed_set", 1)(a => HashedSet(a(0))))
+    ext.injectFunction(fn("ordered_sum", 1)(a => OrderedSum(a(0))))
+    ext.injectFunction(fn("word_ngrams", 2)(a =>
+      WordNgrams(a(0), lit[Int]("word_ngrams", "n", a(1)))))
   }
 }

@@ -63,9 +63,9 @@ object ScaleGen {
       println(s"scalegen: wrote $t")
     }
     // one scan branch per table: replicate via crossJoin with a
-    // factor-row frame (the Profile.rep10 codegen lesson — a union of
-    // literal-shifted branches Janino-compiles each operator factor
-    // times)
+    // factor-row frame (a union of literal-shifted branches would
+    // Janino-compile each operator factor times, since each branch's
+    // distinct literal defeats the codegen cache)
     val reps = spark.range(factor).toDF("rep")
     def rep(df: DataFrame, keys: String*): DataFrame = {
       val wide = df.crossJoin(broadcast(reps))

@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Average-hash (aHash) kernel over a byte payload: resample the stream
   * into 64 contiguous blocks (block b covers bytes [n·b/64, n·(b+1)/64)),
@@ -43,9 +44,9 @@ object AHashKernel {
 /** `ahash64(blob)` — 64-bit average-hash of a binary payload. One
   * generated kernel call per row, codegen'd like [[SimHash64]].
   */
-case class AHash64(child: Expression) extends UnaryExpression {
+case class AHash64(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "ahash64"
-  override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
@@ -53,12 +54,9 @@ case class AHash64(child: Expression) extends UnaryExpression {
       s"ahash64 requires a binary column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    AHashKernel.compute(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.AHashKernel.compute($c)")
+  override lazy val replacement: Expression = StaticInvoke(
+    AHashKernel.getClass, LongType, "compute", Seq(child),
+    returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): AHash64 =
     copy(child = newChild)

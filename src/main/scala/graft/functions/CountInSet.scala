@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Stop-list hit counter — bit-identical to
@@ -29,14 +30,14 @@ object CountInSetKernel {
 }
 
 /** `count_in_set(toks)` over a compile-time word list — see
-  * [[CountInSetKernel]].
+  * [[CountInSetKernel]]. The word set rides into the kernel call as an
+  * object literal, so both evaluation paths share the one instance.
   */
 case class CountInSet(child: Expression, words: Seq[String])
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   require(words.nonEmpty, "count_in_set: word list must be non-empty")
 
   override def prettyName: String = "count_in_set"
-  override def dataType: DataType = IntegerType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -44,23 +45,11 @@ case class CountInSet(child: Expression, words: Seq[String])
       s"count_in_set requires array<string>, got ${other.simpleString}")
   }
 
-  @transient private lazy val set: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](words.size * 2)
-    words.foreach(w => s.add(UTF8String.fromString(w)))
-    s
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    CountInSetKernel.compute(input.asInstanceOf[ArrayData], set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the word set is instance state: ship it into the generated class
-    // as a reference object (the standard Catalyst pattern for
-    // non-literal constants)
-    val setRef = ctx.addReferenceObj("wordSet", set,
-      "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.CountInSetKernel.compute($c, $setRef)")
+  override lazy val replacement: Expression = {
+    val set = new java.util.HashSet[UTF8String](words.size * 2)
+    words.foreach(w => set.add(UTF8String.fromString(w)))
+    StaticInvoke(CountInSetKernel.getClass, IntegerType, "compute",
+      Seq(child, Literal.fromObject(set)), returnNullable = false)
   }
 
   override protected def withNewChildInternal(newChild: Expression): CountInSet =

@@ -2,9 +2,10 @@ package graft.functions
 
 import java.util.zip.Deflater
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DEFLATE kernel for the compression-ratio quality signal: the byte
@@ -55,9 +56,9 @@ object DeflateKernel {
   * kernel call per row inside whole-stage codegen (the generated code
   * calls the static kernel, same pattern as [[SimHash64]]).
   */
-case class DeflateSize(child: Expression) extends UnaryExpression {
+case class DeflateSize(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "deflate_size"
-  override def dataType: DataType = IntegerType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -65,12 +66,9 @@ case class DeflateSize(child: Expression) extends UnaryExpression {
       s"deflate_size requires a string column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    DeflateKernel.deflatedSize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.DeflateKernel.deflatedSize($c)")
+  override lazy val replacement: Expression = StaticInvoke(
+    DeflateKernel.getClass, IntegerType, "deflatedSize", Seq(child),
+    returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): DeflateSize =
     copy(child = newChild)

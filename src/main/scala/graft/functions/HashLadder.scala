@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Positional k-gram hash ladder kernel — one call per document row,
@@ -71,12 +72,11 @@ object HashLadderKernel {
   * constants, like [[graft.functions.TopKPairs]]'s k.
   */
 case class HashLadder(child: Expression, base: Int, doublings: Int)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   require(base >= 1 && doublings >= 0,
     s"need base >= 1 and doublings >= 0, got $base/$doublings")
 
   override def prettyName: String = "hash_ladder"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -84,14 +84,10 @@ case class HashLadder(child: Expression, base: Int, doublings: Int)
       s"hash_ladder requires array<string>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    HashLadderKernel.compute(input.asInstanceOf[ArrayData], base,
-      doublings, 42L)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashLadderKernel.compute($c, $base, $doublings, 42L)")
+  override lazy val replacement: Expression = StaticInvoke(
+    HashLadderKernel.getClass, ArrayType(LongType, containsNull = false),
+    "compute", Seq(child, Literal(base), Literal(doublings), Literal(42L)),
+    returnNullable = false)
 
   override protected def withNewChildInternal(
       newChild: Expression): HashLadder = copy(child = newChild)

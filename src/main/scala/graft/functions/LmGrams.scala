@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-position n-gram context kernel for the Stupid-Backoff n-gram LM
@@ -66,17 +67,9 @@ object LmGramKernel {
 /** `lm_grams(text)` — one struct per token position carrying every
   * n-gram the order-3 Stupid-Backoff chain needs; see [[LmGramKernel]].
   */
-case class LmGrams(child: Expression) extends UnaryExpression {
+case class LmGrams(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "lm_grams"
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("g1", StringType, nullable = false),
-      StructField("p2", StringType, nullable = true),
-      StructField("g2", StringType, nullable = true),
-      StructField("p3", StringType, nullable = true),
-      StructField("g3", StringType, nullable = true))),
-    containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -84,11 +77,17 @@ case class LmGrams(child: Expression) extends UnaryExpression {
       s"lm_grams requires a string column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    LmGramKernel.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LmGramKernel.compute($c)")
+  override lazy val replacement: Expression = StaticInvoke(
+    LmGramKernel.getClass,
+    ArrayType(
+      StructType(Seq(
+        StructField("g1", StringType, nullable = false),
+        StructField("p2", StringType, nullable = true),
+        StructField("g2", StringType, nullable = true),
+        StructField("p3", StringType, nullable = true),
+        StructField("g3", StringType, nullable = true))),
+      containsNull = false),
+    "compute", Seq(child), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): LmGrams =
     copy(child = newChild)

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Left-to-right IEEE double sum of an `array<double>` — bit-identical
   * to `aggregate(arr, 0.0D, (acc, x) -> acc + x)`, which Spark evaluates
@@ -29,11 +29,9 @@ object OrderedSumKernel {
 }
 
 /** `ordered_sum(arr)` — see [[OrderedSumKernel]]. */
-case class OrderedSum(child: Expression) extends UnaryExpression {
+case class OrderedSum(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "ordered_sum"
-  override def dataType: DataType = DoubleType
-  // the fold yields NULL on a NULL element even when the array is non-null
-  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -41,27 +39,10 @@ case class OrderedSum(child: Expression) extends UnaryExpression {
       s"ordered_sum requires array<double>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    OrderedSumKernel.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val boxed = ctx.freshName("boxedSum")
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${c.isNull}) {
-          java.lang.Double $boxed =
-            graft.functions.OrderedSumKernel.compute(${c.value});
-          if ($boxed != null) {
-            ${ev.isNull} = false;
-            ${ev.value} = $boxed.doubleValue();
-          }
-        }
-      """)
-  }
+  // the fold yields NULL on a NULL element even when the array is
+  // non-null: the boxed kernel return carries it (returnNullable)
+  override lazy val replacement: Expression = StaticInvoke(
+    OrderedSumKernel.getClass, DoubleType, "compute", Seq(child))
 
   override protected def withNewChildInternal(
       newChild: Expression): OrderedSum = copy(child = newChild)

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashed word k-shingle kernel — [[ShingleKernel]] fused with the
@@ -108,9 +109,9 @@ object HashedSetKernel {
 /** `hashed_set(arr)` — sorted distinct xxhash64(seed 42) values of an
   * `array<string>` as `array<long>` ([[HashedSetKernel]]).
   */
-case class HashedSet(child: Expression) extends UnaryExpression {
+case class HashedSet(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "hashed_set"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -118,11 +119,9 @@ case class HashedSet(child: Expression) extends UnaryExpression {
       s"hashed_set requires array<string>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    HashedSetKernel.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashedSetKernel.compute($c)")
+  override lazy val replacement: Expression = StaticInvoke(
+    HashedSetKernel.getClass, ArrayType(LongType, containsNull = false),
+    "compute", Seq(child), returnNullable = false)
 
   override protected def withNewChildInternal(
       newChild: Expression): HashedSet = copy(child = newChild)
@@ -133,11 +132,10 @@ case class HashedSet(child: Expression) extends UnaryExpression {
   * dedups and ascending-sorts the hash values (the ppjoin set shape).
   */
 case class WordShingleHashes(child: Expression, k: Int, sorted: Boolean)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   require(k >= 1, s"word_shingle_hashes: k must be >= 1, got $k")
 
   override def prettyName: String = "word_shingle_hashes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -145,12 +143,10 @@ case class WordShingleHashes(child: Expression, k: Int, sorted: Boolean)
       s"word_shingle_hashes requires a string column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashKernel.compute(input.asInstanceOf[UTF8String], k, sorted)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleHashKernel.compute($c, $k, $sorted)")
+  override lazy val replacement: Expression = StaticInvoke(
+    ShingleHashKernel.getClass, ArrayType(LongType, containsNull = false),
+    "compute", Seq(child, Literal(k), Literal(sorted)),
+    returnNullable = false)
 
   override protected def withNewChildInternal(
       newChild: Expression): WordShingleHashes = copy(child = newChild)

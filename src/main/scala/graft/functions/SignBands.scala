@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Graft's fixed sign-LSH codebook: deterministic pseudo-random
   * hyperplanes (seed 42) so every run, plan, and cluster node produces
@@ -65,21 +66,16 @@ object SignBandKernel {
   * `when(vec_dot(v, plane_i) > 0, …)` columns: the unrolled formulation
   * generated a huge whole-stage-codegen method that Janino recompiled for
   * every join branch referencing it — compile time dwarfed execution on
-  * the LSH self-join. The expression carries NO plane data — the codebook
-  * is the process-wide [[Hyperplanes]] constant (deterministic seed), so
-  * plan canonicalization/equality/explain never touch 4096 doubles.
+  * the LSH self-join. The expression carries NO plane data — its kernel
+  * call takes the process-wide [[Hyperplanes]] constant (deterministic
+  * seed) as an object literal, which compares by reference, so plan
+  * canonicalization/equality/explain never touch 4096 doubles.
   *
   * Assumes dense vectors (no null elements), the embedding-table contract.
   */
-case class SignBands(child: Expression) extends UnaryExpression {
-
-  private def rowsPerBand: Int = Hyperplanes.RowsPerBand
-  private def bands: Int = Hyperplanes.Bands
-  @transient private lazy val planeArr: Array[Array[Double]] =
-    Hyperplanes.planes
-
+case class SignBands(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "sign_bands"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -87,16 +83,11 @@ case class SignBands(child: Expression) extends UnaryExpression {
       s"sign_bands requires array<double>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    SignBandKernel.compute(input.asInstanceOf[ArrayData], planeArr, bands,
-      rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("planes", planeArr, "double[][]")
-      s"${ev.value} = graft.functions.SignBandKernel.compute($c, $ref, " +
-        s"$bands, $rowsPerBand);"
-    })
+  override lazy val replacement: Expression = StaticInvoke(
+    SignBandKernel.getClass, ArrayType(IntegerType, containsNull = false),
+    "compute", Seq(child, Literal.fromObject(Hyperplanes.planes),
+      Literal(Hyperplanes.Bands), Literal(Hyperplanes.RowsPerBand)),
+    returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): SignBands =
     copy(child = newChild)

@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SimHash kernel, bit-identical to the declarative formulation it
@@ -41,9 +42,9 @@ object SimHashKernel {
   * One generated kernel call per row; the higher-order-function chain it
   * replaces evaluated 64 interpreted lambda steps per token.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "simhash64"
-  override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -51,12 +52,9 @@ case class SimHash64(child: Expression) extends UnaryExpression {
       s"simhash64 requires a string column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    SimHashKernel.compute(input.asInstanceOf[UTF8String], 42L)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SimHashKernel.compute($c, 42L)")
+  override lazy val replacement: Expression = StaticInvoke(
+    SimHashKernel.getClass, LongType, "compute", Seq(child, Literal(42L)),
+    returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Two-pointer merge count over two SORTED long arrays — the verify
   * kernel of the set-similarity family. `array_intersect` is the wrong
@@ -39,9 +40,8 @@ object SortedIntersectKernel {
   * One generated kernel call per row, codegen'd like [[AHash64]].
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends RuntimeReplaceable with BinaryLike[Expression] {
   override def prettyName: String = "sorted_intersect_count"
-  override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -52,14 +52,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
           s"got ${l.simpleString} and ${r.simpleString}")
     }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectKernel.count(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.SortedIntersectKernel.count($a, $b)")
+  override lazy val replacement: Expression = StaticInvoke(
+    SortedIntersectKernel.getClass, LongType, "count", Seq(left, right),
+    returnNullable = false)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): SortedIntersectCount =

@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, If, IsNotNull, IsNull, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Binary-search rank kernel over a SORTED `array<double>`.
   *
@@ -54,10 +53,8 @@ object SortedRankKernel {
 
 /** `sample_cdf_pos(sorted_vs, v)` — see [[SortedRankKernel]]. */
 case class SampleCdfPos(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends RuntimeReplaceable with BinaryLike[Expression] {
   override def prettyName: String = "sample_cdf_pos"
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -68,34 +65,12 @@ case class SampleCdfPos(left: Expression, right: Expression)
           s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
     }
 
-  // custom null handling (NULL v → 0, not NULL) — can't use nullSafeEval
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) return null
-    val v = right.eval(input)
-    if (v == null) return 0
-    SortedRankKernel.countLe(a.asInstanceOf[ArrayData],
-      v.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${l.code}
-        boolean ${ev.isNull} = ${l.isNull};
-        int ${ev.value} = 0;
-        if (!${ev.isNull}) {
-          ${r.code}
-          if (!${r.isNull}) {
-            ${ev.value} =
-              graft.functions.SortedRankKernel.countLe(${l.value}, ${r.value});
-          }
-        }
-      """)
-  }
+  // NULL v with a non-NULL array → 0; a NULL array reaches the kernel
+  // call, which propagates it to NULL
+  override lazy val replacement: Expression = If(
+    And(IsNotNull(left), IsNull(right)), Literal(0),
+    StaticInvoke(SortedRankKernel.getClass, IntegerType, "countLe",
+      Seq(left, right), returnNullable = false))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SampleCdfPos =

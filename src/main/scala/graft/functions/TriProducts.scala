@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Upper-triangle self-product kernel shared by interpreted eval and
   * codegen: for a d-vector, the d(d+1)/2 products vᵢ·vⱼ (i ≤ j) in
@@ -42,9 +43,9 @@ object TriProdKernel {
   * Assumes dense vectors (no null elements), the embedding-table
   * contract (same as `sign_bands`).
   */
-case class TriProducts(child: Expression) extends UnaryExpression {
+case class TriProducts(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   override def prettyName: String = "vec_tri_prods"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -52,12 +53,9 @@ case class TriProducts(child: Expression) extends UnaryExpression {
       s"vec_tri_prods requires array<double>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    TriProdKernel.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.TriProdKernel.compute($c);")
+  override lazy val replacement: Expression = StaticInvoke(
+    TriProdKernel.getClass, ArrayType(DoubleType, containsNull = false),
+    "compute", Seq(child), returnNullable = false)
 
   override protected def withNewChildInternal(
       newChild: Expression): TriProducts = copy(child = newChild)

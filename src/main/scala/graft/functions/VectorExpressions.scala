@@ -1,19 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Codegen'd vector kernels for `array<double>` embedding columns.
   *
   * Spark's higher-order functions (`zip_with`/`aggregate`) are evaluated
   * interpreted — each element trip goes through a lambda-variable
   * indirection and boxes — which makes an O(n·d) similarity scan
-  * lambda-bound rather than CPU-bound. These expressions generate a tight
-  * Java loop over the underlying `ArrayData` inside whole-stage codegen,
-  * so a 64-dim dot product is 64 fused multiply-adds on unboxed doubles.
+  * lambda-bound rather than CPU-bound. These expressions call one tight
+  * loop over the underlying `ArrayData` ([[VectorKernel]]) from inside
+  * whole-stage codegen, so a 64-dim dot product is 64 fused multiply-adds
+  * on unboxed doubles.
   *
   * Null semantics deliberately mirror the HOF formulation they replace
   * (`aggregate(zip_with(a, b, _ * _), 0.0, _ + _)`): any null element or a
@@ -22,10 +24,31 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * sequential left-to-right fold, so results are bit-identical to both the
   * HOF version and DuckDB's `list_sum(list_transform(...))` oracle.
   */
-abstract class VectorFoldExpression extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+object VectorKernel {
+  def dot(a: ArrayData, b: ArrayData): java.lang.Double = fold(a, b, diff = false)
+  def l2sq(a: ArrayData, b: ArrayData): java.lang.Double = fold(a, b, diff = true)
 
+  // the boxed return carries the NULL of a length mismatch or null element
+  private def fold(a: ArrayData, b: ArrayData,
+      diff: Boolean): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      val x = a.getDouble(i)
+      val y = b.getDouble(i)
+      acc += (if (diff) (x - y) * (x - y) else x * y)
+      i += 1
+    }
+    java.lang.Double.valueOf(acc)
+  }
+}
+
+/** A [[VectorKernel]] fold over two `array<double>` columns. */
+abstract class VectorFoldExpression(kernel: String)
+    extends RuntimeReplaceable with BinaryLike[Expression] {
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
@@ -35,54 +58,14 @@ abstract class VectorFoldExpression extends BinaryExpression {
           s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
     }
 
-  /** Java expression combining element values `x` and `y` into the
-    * accumulated term, e.g. `x * y`.
-    */
-  protected def termJava(x: String, y: String): String
-  protected def termEval(x: Double, y: Double): Double
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      acc += termEval(x.getDouble(i), y.getDouble(i))
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += ${termJava(s"$a.getDouble($i)", s"$b.getDouble($i)")};
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = StaticInvoke(
+    VectorKernel.getClass, DoubleType, kernel, Seq(left, right))
 }
 
 /** `vec_dot(a, b)` = Σ aᵢ·bᵢ — sequential IEEE-double fold. */
 case class DotProduct(left: Expression, right: Expression)
-    extends VectorFoldExpression {
+    extends VectorFoldExpression("dot") {
   override def prettyName: String = "vec_dot"
-  override protected def termJava(x: String, y: String): String = s"$x * $y"
-  override protected def termEval(x: Double, y: Double): Double = x * y
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
@@ -92,12 +75,8 @@ case class DotProduct(left: Expression, right: Expression)
   * top-k ordering never needs the sqrt.
   */
 case class L2Sq(left: Expression, right: Expression)
-    extends VectorFoldExpression {
+    extends VectorFoldExpression("l2sq") {
   override def prettyName: String = "vec_l2sq"
-  override protected def termJava(x: String, y: String): String =
-    s"($x - $y) * ($x - $y)"
-  override protected def termEval(x: Double, y: Double): Double =
-    (x - y) * (x - y)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2Sq =
     copy(left = newLeft, right = newRight)

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Multiset word n-gram kernel — ALL adjacent n-grams of a document in
@@ -52,11 +53,11 @@ object NgramKernel {
 }
 
 /** `word_ngrams(text, n)` — see [[NgramKernel]]. */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNgrams(child: Expression, n: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   require(n >= 1, s"word_ngrams: n must be >= 1, got $n")
 
   override def prettyName: String = "word_ngrams"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -64,11 +65,9 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
       s"word_ngrams requires a string column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    NgramKernel.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NgramKernel.compute($c, $n)")
+  override lazy val replacement: Expression = StaticInvoke(
+    NgramKernel.getClass, ArrayType(StringType, containsNull = false),
+    "compute", Seq(child, Literal(n)), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): WordNgrams =
     copy(child = newChild)

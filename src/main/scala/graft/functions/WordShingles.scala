@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct word k-shingle kernel shared by eval and generated code.
@@ -61,11 +62,11 @@ object ShingleKernel {
   * O(n²-ish) `array_distinct`) and dominated the dedup operators' runtime;
   * here shingling is one generated call into [[ShingleKernel]].
   */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, k: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   require(k >= 1, s"word_shingles: k must be >= 1, got $k")
 
   override def prettyName: String = "word_shingles"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -73,11 +74,9 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
       s"word_shingles requires a string column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernel.compute($c, $k)")
+  override lazy val replacement: Expression = StaticInvoke(
+    ShingleKernel.getClass, ArrayType(StringType, containsNull = false),
+    "compute", Seq(child, Literal(k)), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
     copy(child = newChild)

@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fixed-width line re-wrap kernel — bit-identical to the declarative
@@ -35,11 +36,11 @@ object WrapLinesKernel {
 }
 
 /** `wrap_lines(text, width)` — see [[WrapLinesKernel]]. */
-case class WrapLines(child: Expression, width: Int) extends UnaryExpression {
+case class WrapLines(child: Expression, width: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
   require(width >= 1, s"wrap_lines: width must be >= 1, got $width")
 
   override def prettyName: String = "wrap_lines"
-  override def dataType: DataType = StringType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -47,12 +48,9 @@ case class WrapLines(child: Expression, width: Int) extends UnaryExpression {
       s"wrap_lines requires a string column, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any =
-    WrapLinesKernel.compute(input.asInstanceOf[UTF8String], width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WrapLinesKernel.compute($c, $width)")
+  override lazy val replacement: Expression = StaticInvoke(
+    WrapLinesKernel.getClass, StringType, "compute", Seq(child, Literal(width)),
+    returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): WrapLines =
     copy(child = newChild)

@@ -235,7 +235,7 @@ object Dedup {
     * corpus.
     *
     * The `*On` variants below stay fresh-compute: they exist for
-    * arbitrary in-flight frames (specs, Profile stress corpora,
+    * arbitrary in-flight frames (specs, replicated stress corpora,
     * streaming batches) whose contents have no stable identity to key
     * on.
     */
@@ -357,11 +357,6 @@ object Dedup {
       threshold: Double = 0.7): DataFrame =
     dupSourceMatrixFromPairs(nearDupPairs(spark, dir, threshold),
       Tables.documents(spark, dir))
-
-  /** [[dupSourceMatrix]] over any documents-shaped frame. */
-  def dupSourceMatrixOn(docs: DataFrame,
-      threshold: Double = 0.7): DataFrame =
-    dupSourceMatrixFromPairs(minhashNearDupOn(docs, threshold), docs)
 
   /** [[dupSourceMatrix]] over a pre-computed verified pair frame —
     * the [[nearDupPairs]]-serving path.

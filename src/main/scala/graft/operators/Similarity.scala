@@ -1234,8 +1234,8 @@ object Similarity {
     * expression: without the cut, round r's TakeOrdered would replay
     * all r prior `l2sq` kernels from lineage — O(k²·n·d) total and a
     * k-deep expression tree — where the cut keeps it O(k·n·d) with a
-    * flat plan at any coreset budget (the k=64 Profile row pins
-    * ~linear round cost). The only collects are the k selected rows
+    * flat plan at any coreset budget (round cost stays ~linear in k).
+    * The only collects are the k selected rows
     * themselves — a k-row driver artifact, same bounded-artifact
     * discipline as PCA's covariance.
     * Exactness: every d2 is the same chain of IEEE subtract/multiply/
@@ -1296,7 +1296,7 @@ object Similarity {
     * proportionally to their current d²(x, C) (the k-means‖ sampling
     * rule), then finish with driver-side Gonzalez over the bounded
     * candidate set. Total Spark rounds drop from k to `rounds`
-    * (sub-linear in k; the Profile `kcenter_*` rows pin the ratio) at
+    * (sub-linear in k; SCALING.md records the measured ratio) at
     * the price of an approximation the covering-radius spec bounds
     * against the sequential traversal.
     *
@@ -1681,43 +1681,12 @@ object Similarity {
     // artifact — exactly the frames [[writeIvfPqIndex]] persists
     val (coarse, cb, codes) = graft.ArtifactMemo.cached(spark,
       s"ivfpq:$m:$ksub:$dim:$dir")(ivfPqArtifactOn(emb, m, ksub, dim))
-    ivfPqServe(emb, coarse, cb, _ => codes,
-      queryId, k, nprobe, m, dim, rerank)
-  }
-
-  /** Same, over any (vec_id, v: array<double>) frame — trains inline
-    * (arbitrary frames have no artifact identity to memo under) and
-    * codes ONLY the probed cells' residuals, lazily: a one-off ad-hoc
-    * probe should pay nprobe cells' coding, not the full corpus pass
-    * the stored artifact amortizes over many queries.
-    */
-  def ivfPqTopKOn(emb: DataFrame, queryId: Long = 0,
-      k: Int = 20, nprobe: Int = 4, m: Int = 16, ksub: Int = 16,
-      dim: Int = 64, rerank: Int = 4): DataFrame = {
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    val coarse = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    // checkpointed: the training explode and the probed-cell coding
-    // both read the residual frame
-    val residuals = assignNearest(emb, coarse).join(broadcast(coarse), "cid")
-      .select(col("vec_id"), col("cid").as("cell"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"))
-      .cutLineage()
-    val cb = pqCodebook(
-      subVectors(residuals.select(col("vec_id"), col("r").as("v")), m, dsub),
-      ksub, seedFrom = 16L)
-    def codesFor(probeCells: DataFrame): DataFrame = codeResiduals(
-      subVectors(residuals
-        .join(broadcast(probeCells.select(col("cell"))), "cell")
-        .select(col("vec_id"), col("cell"), col("r").as("v")), m, dsub), cb)
-    ivfPqServe(emb, coarse, cb, codesFor, queryId, k, nprobe, m, dim, rerank)
+    ivfPqServe(emb, coarse, cb, codes, queryId, k, nprobe, m, dim, rerank)
   }
 
   /** Nearest-codeword coding of residual subvectors: (vec_id, cell,
-    * sub, cid) — shared by the full-corpus artifact pass and the
-    * probed-cells-only ad-hoc pass (identical values either way, so
-    * coding all cells then pruning commutes with coding probed cells).
+    * sub, cid) — shared by the full-corpus artifact pass, the rebalance
+    * recode and the append path.
     */
   private def codeResiduals(residualSubs: DataFrame,
       cb: DataFrame): DataFrame =
@@ -1759,13 +1728,12 @@ object Similarity {
   }
 
   /** The probe every IVF-PQ path shares: per-probed-cell residual LUTs,
-    * ADC over the probed cells' code rows only (`codesFor(probeCells)`
-    * supplies them — the full stored table pruned by the broadcast LUT
-    * join, or an ad-hoc lazy coding of just those cells), exact re-rank
-    * over the shortlist's raw vectors.
+    * ADC over the probed cells' code rows only (the full stored `codes`
+    * table, pruned by the broadcast LUT join), exact re-rank over the
+    * shortlist's raw vectors.
     */
   private def ivfPqServe(emb: DataFrame, coarse: DataFrame, cb: DataFrame,
-      codesFor: DataFrame => DataFrame, queryId: Long, k: Int, nprobe: Int,
+      codes: DataFrame, queryId: Long, k: Int, nprobe: Int,
       m: Int, dim: Int, rerank: Int): DataFrame = {
     val dsub = dim / m
     // the one-row query vector is referenced by three branches (probe,
@@ -1792,7 +1760,7 @@ object Similarity {
     // order-stable fold, same rationale as [[pqTopK]]: the serving
     // shortlist is ranked on the exact value the eval and the DuckDB
     // twin compute, so q_ivfpq is oracle-checkable
-    val adc = codesFor(probeCells)
+    val adc = codes
       .join(broadcast(lut), Seq("cell", "sub", "cid"))
       .groupBy(col("vec_id"))
       .agg(adcOrderedSum(col("sub"), col("d")).as("adist"))
@@ -2582,12 +2550,7 @@ object Similarity {
     val x = Tables.embeddings(spark, dir)
       .select(col("vec_id"), vecD(col("embedding")).as("v"))
       .cutLineage()
-    // mode knob: `spark.graft.pca.gram` (default true) picks the
-    // per-partition Gram accumulation; false keeps the declarative
-    // explode path. Bit-identical either way (spec-pinned at d=64).
-    val useGram = spark.conf
-      .getOption("spark.graft.pca.gram").forall(_.toBoolean)
-    val (micro, n) = triangleMicroMoments(x, useGram)
+    val (micro, n) = triangleMicroMoments(x)
     val means = x.select(posexplode(col("v")).as(Seq("i", "xi")))
       .groupBy(col("i")).agg(davg(col("xi")).as("m"))
     val meansArr = means.collect()
@@ -2617,19 +2580,10 @@ object Similarity {
 
   /** The exact second-moment triangle in long micro-units, as an
     * artifact-sized driver array — the distributed half of
-    * [[covarianceArtifact]], in two plan shapes that are BIT-IDENTICAL
-    * by construction (spec-pinned in `AnalyticsSpec`):
+    * [[covarianceArtifact]].
     *
-    * `useGram = false` — the declarative shape: posexplode the native
-    * `vec_tri_prods` kernel's upper-triangle products (d(d+1)/2 unboxed
-    * multiplies in whole-stage codegen), give each product its
-    * DECIMAL(18,6) image (HALF_UP at 6 dp — the same per-row value
-    * `dsum` feeds) carried as an exact long, and run ONE
-    * map-side-combinable per-position sum. The shuffle carries d(d+1)/2
-    * partial rows per map task.
-    *
-    * `useGram = true` (default) — the per-partition Gram shape the 100 TB
-    * deployment wants, QUADRATIC-IN-d ROW FAN-OUT REMOVED: one
+    * The per-partition Gram shape the 100 TB deployment wants,
+    * QUADRATIC-IN-d ROW FAN-OUT REMOVED: one
     * `mapPartitions` pass accumulates the whole triangle into a single
     * long[] per partition (a tight i≤j loop over each vector — the BLAS
     * `dsyr` access pattern on the micro-unit image), emitting ONE row of
@@ -2639,99 +2593,109 @@ object Similarity {
     * Gram shape generates none — the d² cost runs as raw array adds in
     * the partition loop. Per-element rounding uses the same
     * shortest-repr HALF_UP image Spark's double→decimal cast applies
-    * ([[microImage]]), so partial sums commute with the explode path's
-    * exactly (integer adds are associative — the whole point of the
-    * micro-unit idiom).
+    * ([[microImage]]), so partial sums commute with
+    * [[triangleMicroMomentsExplode]]'s exactly (integer adds are
+    * associative — the whole point of the micro-unit idiom); the two
+    * are BIT-IDENTICAL (spec-pinned in `OperatorsSpec`).
     *
     * Σ|micros| < 2⁵³ bound (n-shaped, not d²-shaped — each cell sums ONE
     * product per corpus vector): unit-scale components hold to ~9·10⁹
-    * vectors; past that switch the explode path's aggregation back to
-    * `dsum(p)` — see the git history of this file for the measured
-    * decimal-vs-long trade (6.3 s → 2.5 s at sf0.1).
+    * vectors; past that, aggregate in `dsum(p)` instead — see the git
+    * history of this file for the measured decimal-vs-long trade
+    * (6.3 s → 2.5 s at sf0.1).
     */
-  private[graft] def triangleMicroMoments(x: DataFrame,
-      useGram: Boolean): (Array[Long], Long) = {
+  private[graft] def triangleMicroMoments(
+      x: DataFrame): (Array[Long], Long) = {
     val spark = x.sparkSession
     import spark.implicits._
-    if (useGram) {
-      // the Gram pass's parallelism IS the partition count (one long[]
-      // accumulator per partition). A small local corpus often scans as
-      // 1–2 partitions; spreading VECTORS (d doubles/row) costs far
-      // less than the explode path's d(d+1)/2-partials exchange, and at
-      // production scale the scan already has ≥ core-count partitions
-      // so this branch is a no-op.
-      val par = spark.sparkContext.defaultParallelism
-      val xs = x.select(col("v"))
-      val xp = if (xs.rdd.getNumPartitions < par) xs.repartition(par) else xs
-      val parts = xp.as[Seq[Double]].mapPartitions { it =>
-        var acc: Array[Long] = null
-        var n = 0L
-        it.foreach { vs =>
-          // materialize the row ONCE: the encoder's Seq is list-like in
-          // this Spark, so positional v(j) inside the triangle loop
-          // would be O(d) each — O(d³)/vector, a 10× wall-time cliff at
-          // d=256 (measured); the array copy is O(d) and indexing O(1)
-          val v = vs.toArray
-          val d = v.length
-          if (acc == null) acc = new Array[Long](d * (d + 1) / 2)
-          var pos = 0
-          var i = 0
-          while (i < d) {
-            val vi = v(i)
-            var j = i
-            while (j < d) {
-              acc(pos) += microImage(vi * v(j))
-              pos += 1
-              j += 1
-            }
-            i += 1
+    // the Gram pass's parallelism IS the partition count (one long[]
+    // accumulator per partition). A small local corpus often scans as
+    // 1–2 partitions; spreading VECTORS (d doubles/row) costs far
+    // less than the explode shape's d(d+1)/2-partials exchange, and at
+    // production scale the scan already has ≥ core-count partitions
+    // so this branch is a no-op.
+    val par = spark.sparkContext.defaultParallelism
+    val xs = x.select(col("v"))
+    val xp = if (xs.rdd.getNumPartitions < par) xs.repartition(par) else xs
+    val parts = xp.as[Seq[Double]].mapPartitions { it =>
+      var acc: Array[Long] = null
+      var n = 0L
+      it.foreach { vs =>
+        // materialize the row ONCE: the encoder's Seq is list-like in
+        // this Spark, so positional v(j) inside the triangle loop
+        // would be O(d) each — O(d³)/vector, a 10× wall-time cliff at
+        // d=256 (measured); the array copy is O(d) and indexing O(1)
+        val v = vs.toArray
+        val d = v.length
+        if (acc == null) acc = new Array[Long](d * (d + 1) / 2)
+        var pos = 0
+        var i = 0
+        while (i < d) {
+          val vi = v(i)
+          var j = i
+          while (j < d) {
+            acc(pos) += microImage(vi * v(j))
+            pos += 1
+            j += 1
           }
-          n += 1L
+          i += 1
         }
-        if (acc == null) Iterator.empty else Iterator((acc.toSeq, n))
-      }.collect() // ≤ #partitions rows of d(d+1)/2 longs — bounded artifact
-      val micro = new Array[Long](parts.map(_._1.length).foldLeft(0)(math.max))
-      parts.foreach { case (p, _) =>
-        // materialize before indexing — the collected Seq[Long] is
-        // list-like, and positional p(k) in this loop would be O(k)
-        // each: O(triangle²) total, ~100 s at d=256 (measured) for
-        // what is otherwise a memcpy-speed merge
-        val pa = p.toArray
-        var k = 0
-        while (k < pa.length) { micro(k) += pa(k); k += 1 }
+        n += 1L
       }
-      (micro, parts.map(_._2).sum)
-    } else {
-      import graft.functions.Stable.dec
-      import graft.functions.VectorFunctions.triProds
-      val rows = x
-        .select(posexplode(triProds(col("v"))).as(Seq("pos", "p")))
-        // same loud failure mode as the Gram path's [[microImage]]: past
-        // the shared |p| bound the DECIMAL(18,6) cast would overflow to
-        // NULL and silently DROP the product from the sum — raise instead,
-        // so flipping spark.graft.pca.gram never trades a crash for a
-        // silently-wrong covariance
-        .select(col("pos"), when(abs(col("p")) >= lit(MicroBound),
-            raise_error(concat(lit("covariance product out of micro-unit " +
-              s"range (|p| >= $MicroBound): "), col("p").cast("string"))))
-          .otherwise((dec(col("p")) * 1000000).cast("long")).as("pm"))
-        .groupBy(col("pos"))
-        .agg(sum(col("pm")).as("sm"), count(lit(1)).as("n"))
-        .collect()
-      val micro = new Array[Long](rows.length)
-      rows.foreach(r => micro(r.getAs[Int]("pos")) = r.getAs[Long]("sm"))
-      (micro, if (rows.isEmpty) 0L else rows.head.getAs[Long]("n"))
+      if (acc == null) Iterator.empty else Iterator((acc.toSeq, n))
+    }.collect() // ≤ #partitions rows of d(d+1)/2 longs — bounded artifact
+    val micro = new Array[Long](parts.map(_._1.length).foldLeft(0)(math.max))
+    parts.foreach { case (p, _) =>
+      // materialize before indexing — the collected Seq[Long] is
+      // list-like, and positional p(k) in this loop would be O(k)
+      // each: O(triangle²) total, ~100 s at d=256 (measured) for
+      // what is otherwise a memcpy-speed merge
+      val pa = p.toArray
+      var k = 0
+      while (k < pa.length) { micro(k) += pa(k); k += 1 }
     }
+    (micro, parts.map(_._2).sum)
   }
 
-  /** Shared |product| bound of the two [[triangleMicroMoments]] plan
-    * shapes: DECIMAL(18,6) holds 12 integer digits, so the explode
+  /** The declarative shape of [[triangleMicroMoments]], kept as the
+    * reference its Gram pass is spec-pinned against: posexplode the
+    * native `vec_tri_prods` kernel's upper-triangle products, give each
+    * product its DECIMAL(18,6) image (HALF_UP at 6 dp — the same per-row
+    * value `dsum` feeds) carried as an exact long, and run ONE
+    * map-side-combinable per-position sum. The shuffle carries d(d+1)/2
+    * partial rows per map task.
+    */
+  private[graft] def triangleMicroMomentsExplode(
+      x: DataFrame): (Array[Long], Long) = {
+    import graft.functions.Stable.dec
+    import graft.functions.VectorFunctions.triProds
+    val rows = x
+      .select(posexplode(triProds(col("v"))).as(Seq("pos", "p")))
+      // same loud failure mode as the Gram path's [[microImage]]: past
+      // the shared |p| bound the DECIMAL(18,6) cast would overflow to
+      // NULL and silently DROP the product from the sum — raise instead,
+      // so the reference never trades the Gram path's crash for a
+      // silently-wrong covariance
+      .select(col("pos"), when(abs(col("p")) >= lit(MicroBound),
+          raise_error(concat(lit("covariance product out of micro-unit " +
+            s"range (|p| >= $MicroBound): "), col("p").cast("string"))))
+        .otherwise((dec(col("p")) * 1000000).cast("long")).as("pm"))
+      .groupBy(col("pos"))
+      .agg(sum(col("pm")).as("sm"), count(lit(1)).as("n"))
+      .collect()
+    val micro = new Array[Long](rows.length)
+    rows.foreach(r => micro(r.getAs[Int]("pos")) = r.getAs[Long]("sm"))
+    (micro, if (rows.isEmpty) 0L else rows.head.getAs[Long]("n"))
+  }
+
+  /** Shared |product| bound of [[triangleMicroMoments]] and its explode
+    * reference: DECIMAL(18,6) holds 12 integer digits, so the explode
     * path's cast NULLs (silently) at |p| ≥ 1e12 while the raw
     * `longValueExact` would only throw near 9.2e12 — both paths now
     * fail LOUDLY at this one threshold, the tighter of the two, so the
-    * `spark.graft.pca.gram` knob can never turn a crash into a
-    * silently-wrong covariance (or vice versa). Unit-scale embedding
-    * components (|x| ≲ 1e3) sit ~6 orders of magnitude under it.
+    * two shapes never differ by a crash against a silently-wrong
+    * covariance. Unit-scale embedding components (|x| ≲ 1e3) sit ~6
+    * orders of magnitude under it.
     */
   private[graft] val MicroBound: Double = 1e12
 

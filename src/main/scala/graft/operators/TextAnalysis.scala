@@ -492,7 +492,7 @@ object TextAnalysis {
       chunkTokens: Int = 40): DataFrame =
     langMixOn(Tables.documents(spark, dir), chunkTokens)
 
-  /** [[langMix]] over any (doc_id, text) frame — the profiled path. */
+  /** [[langMix]] over any (doc_id, text) frame. */
   private[graft] def langMixOn(documents: DataFrame,
       chunkTokens: Int = 40): DataFrame = {
     val chunks = docChunksOn(documents, chunkTokens, overlap = 0)
@@ -1465,9 +1465,7 @@ object TextAnalysis {
   def topNgramShare(spark: SparkSession, dir: String): DataFrame =
     topNgramShareOn(Tables.documents(spark, dir))
 
-  /** Same, over any (doc_id, text) frame — also the profiled path, so
-    * scaling numbers always measure the shipped operator.
-    */
+  /** Same, over any (doc_id, text) frame. */
   def topNgramShareOn(documents: DataFrame): DataFrame = {
     val t = tokens(col("text"))
     val docs = documents
@@ -1702,16 +1700,6 @@ object TextAnalysis {
       minCount: Long = 5, k: Int = 50): DataFrame =
     collocationsFromCab(lmArtifact(spark, dir)._1, minCount, k)
 
-  /** [[collocations]] over any (doc_id, text) frame — trains the bigram
-    * table fresh (no memo); the profiled path.
-    */
-  private[graft] def collocationsOn(documents: DataFrame,
-      minCount: Long = 5, k: Int = 50): DataFrame =
-    collocationsFromCab(
-      docBigramCounts(documents).groupBy(col("a"), col("b"))
-        .agg(sum(col("kab")).as("cab")).cutLineage(),
-      minCount, k)
-
   private def collocationsFromCab(cabT: DataFrame, minCount: Long,
       k: Int): DataFrame = {
     val ca = cabT.groupBy(col("a")).agg(sum(col("cab")).as("ca"))
@@ -1747,7 +1735,7 @@ object TextAnalysis {
   def tokenRarity(spark: SparkSession, dir: String): DataFrame =
     tokenRarityOn(Tables.documents(spark, dir))
 
-  /** Same, over any (doc_id, text) frame — also the profiled path. */
+  /** Same, over any (doc_id, text) frame. */
   def tokenRarityOn(documents: DataFrame): DataFrame = {
     val exploded = documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))

@@ -47,7 +47,7 @@ object TextCuration {
       Some(Dedup.nearDupPairs(spark, dir, cfg.dedupThreshold)))
 
   /** [[run]] over any documents-shaped frame — the same pipeline runs on
-    * the table fixture and on the Profile stress corpus. `fullPairs`, when
+    * the table fixture and on any in-flight corpus. `fullPairs`, when
     * given, is the FULL-corpus verified near-dup pair frame (the memoized
     * [[Dedup.nearDupPairs]] artifact): the dedup stage then restricts it
     * to the surviving population ([[Dedup.restrictPairs]] — exact, the

@@ -504,7 +504,7 @@ object EventStream {
     * drift monitor's PCA reads): each micro-batch of (vec_id,
     * v: array<double>) vectors is collapsed to its exact long-micro
     * moment partials — the d(d+1)/2 second-moment triangle
-    * ([[graft.operators.Similarity.triangleMicroMoments]], Gram path)
+    * ([[graft.operators.Similarity.triangleMicroMoments]])
     * plus the d first-moment sums ([[Similarity.dimMicroSums]]) and the
     * row count — and element-wise long addition merges them onto the
     * stored one-row artifact. Integer adds are associative and
@@ -529,8 +529,7 @@ object EventStream {
           val spark = batch.sparkSession
           import spark.implicits._
           val x = batch.select(col("v"))
-          val (tri, n) = graft.operators.Similarity
-            .triangleMicroMoments(x, useGram = true)
+          val (tri, n) = graft.operators.Similarity.triangleMicroMoments(x)
           val dims = graft.operators.Similarity.dimMicroSums(x)
           // head() drains the read before the overwrite below, so no
           // lazy plan ever reads the files being replaced (the

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -16,8 +19,49 @@ import graft.pipeline.Transforms
   *
   * Generation is seeded, so the suite is deterministic run-to-run.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
+
+  /** Runs a kernel pin's frame on both evaluation paths and returns its
+    * rows. Over a local frame, `ConvertToLocalRelation` folds the
+    * projection into a `LocalTableScan` at plan time, so the default run
+    * evaluates the kernels interpreted. The second run excludes that
+    * rule (from the adaptive re-optimizer too) and keeps only the
+    * `kernelCols` (all columns if none are named), since an interpreted
+    * higher-order reference column in the same projection would keep it
+    * out of whole-stage codegen. That plan must call a graft kernel
+    * inside a `WholeStageCodegenExec`, and its rows must equal the
+    * interpreted ones (compared as strings, so -0.0 and NaN count too;
+    * order-insensitive, for the joined pins).
+    */
+  private def bothPaths(df: DataFrame, kernelCols: String*): Array[Row] = {
+    val interpreted = df.collect()
+    val cols = if (kernelCols.isEmpty) df.columns.toSeq else kernelCols
+    val keys = Seq("spark.sql.optimizer.excludedRules",
+      "spark.sql.adaptive.optimizer.excludedRules")
+    val prev = keys.map(spark.conf.getOption)
+    keys.foreach(spark.conf.set(_,
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))
+    try {
+      val gen = df.select(cols.map(col): _*)
+      val generated = gen.collect()
+      val plan = gen.queryExecution.executedPlan
+      assert(collect(plan) { case w: WholeStageCodegenExec => w }
+        .exists(_.child.exists(_.expressions.exists(_.exists {
+          case s: StaticInvoke => s.staticObject.getName.startsWith("graft.")
+          case _ => false
+        }))), s"no graft kernel inside whole-stage codegen:\n$plan")
+      val expected = interpreted.map(r =>
+        Row.fromSeq(cols.map(c => r.get(r.fieldIndex(c)))))
+      assert(generated.map(_.toString).sorted.toSeq
+        == expected.map(_.toString).sorted.toSeq,
+        "generated rows differ from interpreted rows")
+    } finally keys.zip(prev).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    interpreted
+  }
 
   private def sample[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
     LazyList.iterate(Seed(seed))(_.next)
@@ -102,11 +146,12 @@ class PropertySpec extends AnyFunSuite {
     def fold(f: (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
         => org.apache.spark.sql.Column) =
       aggregate(zip_with(col("a"), col("b"), f), lit(0.0), (acc, v) => acc + v)
-    val out = df.select(
+    val out = bothPaths(df.select(
       VectorFunctions.dot(col("a"), col("b")).as("native_dot"),
       fold((x, y) => x * y).as("hof_dot"),
       VectorFunctions.l2sq(col("a"), col("b")).as("native_l2"),
-      fold((x, y) => (x - y) * (x - y)).as("hof_l2")).collect()
+      fold((x, y) => (x - y) * (x - y)).as("hof_l2")),
+      "native_dot", "native_l2")
     out.foreach { r =>
       assert(Option(r.get(r.fieldIndex("native_dot")))
         == Option(r.get(r.fieldIndex("hof_dot"))), s"dot mismatch: $r")
@@ -201,9 +246,9 @@ class PropertySpec extends AnyFunSuite {
         (v, j) => when(v > 0, call_function("shiftleft", lit(1L), j))
           .otherwise(0L)),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
-    val out = graft.operators.Dedup.simhashOn(df)
-      .join(df.select(col("doc_id"), packed.as("hof")), "doc_id")
-      .collect()
+    val out = bothPaths(graft.operators.Dedup.simhashOn(df)
+      .join(df.select(col("doc_id"), packed.as("hof")), "doc_id"),
+      "doc_id", "simhash")
     out.foreach(r => assert(
       r.getAs[Long]("simhash") == r.getAs[Long]("hof"), s"doc ${r.getLong(0)}"))
   }
@@ -222,8 +267,8 @@ class PropertySpec extends AnyFunSuite {
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
         .SeqHasAsJava(rows).asJava), schema)
-    val got = df.selectExpr("vec_id", "emb_sign_bands(v) AS bands")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val got = bothPaths(df.selectExpr("vec_id", "emb_sign_bands(v) AS bands"))
+      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     vecs.zipWithIndex.foreach { case (v, i) =>
       val expected = (0 until Hyperplanes.Bands).map { band =>
         (0 until Hyperplanes.RowsPerBand).map { r =>
@@ -255,8 +300,8 @@ class PropertySpec extends AnyFunSuite {
       sequence(lit(0), size(col("v")) - 1), i =>
         transform(sequence(i, size(col("v")) - 1), j =>
           element_at(col("v"), i + 1) * element_at(col("v"), j + 1))))
-    df.select(VectorFunctions.triProds(col("v")).as("native"),
-        hof.as("hof")).collect().foreach { r =>
+    bothPaths(df.select(VectorFunctions.triProds(col("v")).as("native"),
+        hof.as("hof")), "native").foreach { r =>
       assert(r.getSeq[Double](0) == r.getSeq[Double](1), r.toString)
     }
     // position decode (k -> (i, j)) mirrors the spine pcaTopComponent
@@ -288,8 +333,16 @@ class PropertySpec extends AnyFunSuite {
         8 -> Gen.choose(64, 800))
       bs <- Gen.listOfN(n, Gen.choose(0, 255))
     } yield bs.map(_.toByte).toArray
-    sample(payload, 300, seed = 23L).foreach { p =>
-      assert(graft.functions.AHashKernel.compute(p) == ref(p))
+    val payloads = sample(payload, 300, seed = 23L)
+    val df = spark.createDataFrame(
+      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
+        .SeqHasAsJava(payloads.zipWithIndex.map { case (p, i) =>
+          Row(i.toLong, p) }).asJava),
+      StructType(Seq(StructField("id", LongType),
+        StructField("p", BinaryType))))
+    bothPaths(df.selectExpr("id", "ahash64(p)")).foreach { r =>
+      assert(r.getLong(1) == ref(payloads(r.getLong(0).toInt)),
+        s"payload ${r.getLong(0)}")
     }
     // doubling every byte (repeat each twice) preserves every block
     // mean when block boundaries are clean (64 | n), so the hash is
@@ -345,12 +398,22 @@ class PropertySpec extends AnyFunSuite {
       """SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
         |       vec_l2sq(array(0.0d, 0.0d), array(3.0d, 4.0d)) AS l2,
         |       size(word_shingles('a b c d', 3)) AS n_sh,
-        |       ahash64(cast('aaaa' as binary)) AS ah""".stripMargin)
+        |       ahash64(cast('aaaa' as binary)) AS ah,
+        |       simhash64('tok') = xxhash64('tok') AS sh,
+        |       word_shingle_hashes('a b c d', 3, true) = array_sort(
+        |         array(xxhash64('a b c'), xxhash64('b c d'))) AS wsh,
+        |       hashed_set(array('b c d', 'a b c', 'a b c')) = array_sort(
+        |         array(xxhash64('a b c'), xxhash64('b c d'))) AS hs""".stripMargin)
       .collect().head
     assert(r.getDouble(0) == 11.0)
     assert(r.getDouble(1) == 25.0)
     assert(r.getInt(2) == 2)
     assert(r.getLong(3) == 0L) // constant payload: no block above mean
+    // one token: every vote is that token's hash bit
+    assert(r.getBoolean(4), "simhash64 of one token is its xxhash64")
+    // two distinct shingles, hashed, deduped and ascending
+    assert(r.getBoolean(5), "word_shingle_hashes sorted set")
+    assert(r.getBoolean(6), "hashed_set")
     // lm_grams: array of per-position context structs; position 3 of
     // "a b c" carries the full trigram
     val g = spark.sql(
@@ -384,9 +447,9 @@ class PropertySpec extends AnyFunSuite {
       array_distinct(transform(sequence(lit(0), size(w) - k), i =>
         concat_ws(" ", (0 until k).map(j => element_at(w, i + j + 1)): _*))))
       .otherwise(array(col("text")))
-    val out = df.select(
+    val out = bothPaths(df.select(
       graft.operators.Dedup.shingles(col("text"), k).as("native"),
-      declarative.as("hof")).collect()
+      declarative.as("hof")), "native")
     out.foreach { r =>
       assert(r.getSeq[String](0) == r.getSeq[String](1),
         s"shingle mismatch: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}")
@@ -414,14 +477,15 @@ class PropertySpec extends AnyFunSuite {
         .SeqHasAsJava(rows).asJava), schema)
     for (k <- Seq(3, 8)) {
       val sh = graft.operators.Dedup.shingles(col("text"), k)
-      val out = df.select(
+      val out = bothPaths(df.select(
         graft.operators.Dedup.shingleHashes(col("text"), k).as("fusedU"),
         transform(sh, s => xxhash64(s)).as("hofU"),
         graft.operators.Dedup.shingleHashes(col("text"), k, sorted = true)
           .as("fusedS"),
         array_sort(array_distinct(transform(sh, s => xxhash64(s))))
           .as("hofS"),
-        graft.operators.Dedup.hashedSet(sh).as("fusedSet")).collect()
+        graft.operators.Dedup.hashedSet(sh).as("fusedSet")),
+        "fusedU", "fusedS", "fusedSet")
       out.foreach { r =>
         assert(r.getSeq[Long](0) == r.getSeq[Long](1),
           s"k=$k unsorted mismatch: ${r.getSeq[Long](0)} vs ${r.getSeq[Long](1)}")
@@ -451,7 +515,7 @@ class PropertySpec extends AnyFunSuite {
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
         .SeqHasAsJava(rows).asJava), schema)
     for (n <- Seq(2, 3)) {
-      val out = df
+      val out = bothPaths(df
         .withColumn("toks", split(col("text"), " "))
         .select(
           expr(s"word_ngrams(text, $n)").as("kernel"),
@@ -459,7 +523,7 @@ class PropertySpec extends AnyFunSuite {
             expr(s"transform(sequence(1, size(toks) - ${n - 1}), i -> " +
               (0 until n).map(j => s"element_at(toks, i + $j)")
                 .mkString("concat(", ", ' ', ", ")") + ")"))
-            .otherwise(array().cast("array<string>")).as("hof")).collect()
+            .otherwise(array().cast("array<string>")).as("hof")), "kernel")
       out.foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
           s"n=$n mismatch: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}")
@@ -489,11 +553,11 @@ class PropertySpec extends AnyFunSuite {
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
         .SeqHasAsJava(rows).asJava), schema)
     import org.apache.spark.sql.graft.ColumnBridge
-    val out = df.select(
+    val out = bothPaths(df.select(
       ColumnBridge.column(graft.functions.CountInSet(
         ColumnBridge.expression(col("toks")), stop)).as("kernel"),
-      size(filter(col("toks"), t => t.isInCollection(stop))).as("hof"))
-      .collect()
+      size(filter(col("toks"), t => t.isInCollection(stop))).as("hof")),
+      "kernel")
     out.foreach { r =>
       assert(r.getInt(0) == r.getInt(1),
         s"count_in_set mismatch: ${r.getInt(0)} vs ${r.getInt(1)}")
@@ -519,7 +583,7 @@ class PropertySpec extends AnyFunSuite {
         .SeqHasAsJava(rows).asJava), schema)
     for (w <- Seq(1, 10)) {
       import org.apache.spark.sql.graft.ColumnBridge
-      val out = df
+      val out = bothPaths(df
         .withColumn("w", split(col("text"), " "))
         .select(
           ColumnBridge.column(graft.functions.WrapLines(
@@ -527,7 +591,7 @@ class PropertySpec extends AnyFunSuite {
           concat_ws("\n", transform(
             sequence(lit(0), expr(s"(size(w) - 1) div $w").cast("int")),
             i => concat_ws(" ", slice(col("w"), i * w + 1, lit(w)))))
-            .as("hof")).collect()
+            .as("hof")), "kernel")
       out.foreach { r =>
         assert(r.getString(0) == r.getString(1),
           s"width=$w mismatch: '${r.getString(0)}' vs '${r.getString(1)}'")
@@ -557,9 +621,10 @@ class PropertySpec extends AnyFunSuite {
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
         .SeqHasAsJava(rows).asJava), schema)
-    val out = df.select(
+    val out = bothPaths(df.select(
       expr("ordered_sum(vs)").as("kernel"),
-      aggregate(col("vs"), lit(0.0), (acc, x) => acc + x).as("hof")).collect()
+      aggregate(col("vs"), lit(0.0), (acc, x) => acc + x).as("hof")),
+      "kernel")
     out.foreach { r =>
       val k = if (r.isNullAt(0)) None else Some(r.getDouble(0))
       val h = if (r.isNullAt(1)) None else Some(r.getDouble(1))
@@ -708,10 +773,10 @@ class PropertySpec extends AnyFunSuite {
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
         .SeqHasAsJava(rows).asJava), schema)
-    val out = df.select(col("id"),
+    val out = bothPaths(df.select(col("id"),
         graft.functions.SortedRank.cdfPos(col("vs"), col("v")).as("native"),
-        size(filter(col("vs"), x => x <= col("v"))).as("hof"))
-      .collect()
+        size(filter(col("vs"), x => x <= col("v"))).as("hof")),
+      "id", "native")
     out.foreach { r =>
       assert(r.getInt(1) == r.getInt(2),
         s"id ${r.getLong(0)}: native=${r.getInt(1)} hof=${r.getInt(2)}")

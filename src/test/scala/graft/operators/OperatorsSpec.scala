@@ -404,7 +404,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("pca covariance: the per-partition Gram path is bit-identical to " +
-    "the declarative explode path, wired through the conf knob") {
+    "the declarative explode path") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions.vecD
     // multiple partitions so the Gram path's partial-merge order is
@@ -412,35 +412,18 @@ class OperatorsSpec extends AnyFunSuite {
     val x = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), vecD(col("embedding")).as("v"))
       .repartition(7)
-    val (g, ng) = Similarity.triangleMicroMoments(x, useGram = true)
-    val (e, ne) = Similarity.triangleMicroMoments(x, useGram = false)
+    val (g, ng) = Similarity.triangleMicroMoments(x)
+    val (e, ne) = Similarity.triangleMicroMomentsExplode(x)
     assert(ng == ne, s"vector counts differ: $ng vs $ne")
     assert(g.length == e.length, s"triangle sizes: ${g.length} vs ${e.length}")
     val firstDiff = g.indices.find(i => g(i) != e(i))
     assert(firstDiff.isEmpty,
       firstDiff.map(i => s"micro-moments diverge at pos $i: " +
         s"gram=${g(i)} explode=${e(i)}").getOrElse(""))
-    // end-to-end through the knob: identical PCA output either way
-    def pcaRows() = Similarity.pcaTopComponent(spark, dir).collect()
-      .map(r => (r.getAs[Int]("pos"), r.getAs[Double]("dim_mean"),
-        java.lang.Double.doubleToLongBits(r.getAs[Double]("loading")),
-        java.lang.Double.doubleToLongBits(r.getAs[Double]("eigenvalue"))))
-      .toSeq
-    val prev = spark.conf.getOption("spark.graft.pca.gram")
-    try {
-      spark.conf.set("spark.graft.pca.gram", "false")
-      val viaExplode = pcaRows()
-      spark.conf.set("spark.graft.pca.gram", "true")
-      val viaGram = pcaRows()
-      assert(viaExplode == viaGram, "PCA output differs across modes")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.pca.gram", v)
-      case None => spark.conf.unset("spark.graft.pca.gram")
-    }
   }
 
   test("pca covariance: BOTH moment paths fail loudly at the shared " +
-    "micro-unit bound — the gram knob never trades a crash for a " +
+    "micro-unit bound — neither trades a crash for a " +
     "silently-dropped product") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -450,7 +433,8 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("vec_id", "v")
     Seq(true, false).foreach { gram =>
       val ex = intercept[Exception] {
-        Similarity.triangleMicroMoments(x, useGram = gram)
+        if (gram) Similarity.triangleMicroMoments(x)
+        else Similarity.triangleMicroMomentsExplode(x)
       }
       def causes(t: Throwable): Seq[Throwable] =
         Option(t).toSeq.flatMap(e => e +: causes(e.getCause))

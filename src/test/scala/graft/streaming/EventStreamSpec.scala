@@ -1509,7 +1509,7 @@ class EventStreamSpec extends AnyFunSuite {
     // commute — the maintainer's whole claim)
     val art = spark.read.parquet(artDir).head()
     val (triFull, nFull) = graft.operators.Similarity
-      .triangleMicroMoments(emb.select(col("v")), useGram = true)
+      .triangleMicroMoments(emb.select(col("v")))
     assert(art.getAs[Long]("n") == nFull)
     assert(art.getAs[Seq[Long]]("tri").toArray.toSeq == triFull.toSeq,
       "maintained triangle diverges from the from-scratch pass")

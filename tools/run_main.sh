@@ -1,8 +1,8 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes — no sbt, no project
 # lock, no 10-minute tool timeout. Usage:
-#   tools/run_main.sh graft.Profile /tmp/graft_sf1 [more args...]
-# Env passes through (SPARK_GRAFT_PROF_ONLY, SPARK_GRAFT_CPUS, ...).
+#   SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 tools/run_main.sh graft.Bench [args...]
+# Env passes through (SPARK_GRAFT_BENCH_ONLY, SPARK_GRAFT_CPUS, ...).
 set -euo pipefail
 MAIN="$1"; shift
 SCALA_LIB=$(ls /root/.cache/coursier/v1/https/*/artifactory/maven-all/org/scala-lang/scala-library/2.13.17/scala-library-2.13.17.jar 2>/dev/null | head -1)
