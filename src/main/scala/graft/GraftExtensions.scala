@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import graft.functions.{AHash64, DeflateSize, DotProduct, HashedSet, L2Sq, LmGrams, OrderedSum, SampleCdfPos, SignBands, SimHash64, SortedIntersectCount, TriProducts, WordNgrams, WordShingleHashes, WordShingles}
+import graft.functions.{AHash64, DeflateSize, DotProduct, HashedSet, L2Sq, LmGrams, MinhashBands, OrderedSum, SampleCdfPos, SignBands, SimHash64, SortedIntersectCount, TriProducts, WordNgrams, WordShingleHashes, WordShingles}
 import scala.reflect.{ClassTag, classTag}
 
 /** Session plugin registering graft's native Catalyst expressions.
@@ -51,6 +51,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       WordShingleHashes(a(0), lit[Int]("word_shingle_hashes", "k", a(1)),
         lit[Boolean]("word_shingle_hashes", "sorted", a(2)))))
     ext.injectFunction(fn("hashed_set", 1)(a => HashedSet(a(0))))
+    ext.injectFunction(fn("minhash_bands", 3)(a =>
+      MinhashBands(a(0), lit[Int]("minhash_bands", "bands", a(1)),
+        lit[Int]("minhash_bands", "rows", a(2)))))
     ext.injectFunction(fn("ordered_sum", 1)(a => OrderedSum(a(0))))
     ext.injectFunction(fn("word_ngrams", 2)(a =>
       WordNgrams(a(0), lit[Int]("word_ngrams", "n", a(1)))))

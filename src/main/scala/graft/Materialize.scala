@@ -190,6 +190,14 @@ object Materialize {
       ()
     } catch { case scala.util.control.NonFatal(_) => () }
 
+  /** Row count of a frame in ONE job: a plain RDD count, where
+    * `Dataset.count()` plans a partial-aggregate shuffle and pays a map
+    * job plus a result job. On a lazy [[MatOps.cutLineage]] frame that
+    * job is also the cut's materializer, so a cut-then-count costs what
+    * an eager cut alone costs.
+    */
+  def count(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
   /** Free the storage behind an ALREADY-CUT frame that will never be read
     * again. A pipeline that cuts two near-corpus-sized intermediates
     * back-to-back (tf then weighted postings in

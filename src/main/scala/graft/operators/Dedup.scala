@@ -129,26 +129,23 @@ object Dedup {
 
   private val BandRows = 3
   private val Bands = 21 // 63 hashes; see minhashNearDup for the r/b math
-  private val NumHashes = Bands * BandRows
 
-  /** Per-document MinHash signature columns sig_0..sig_62 via
-    * Kirsch–Mitzenmacher double hashing: each shingle is string-hashed
-    * exactly twice (h1, h2 = xxhash64 with two seeds) and the i-th hash
-    * family member is h1 + i·h2 (wrap-around 64-bit arithmetic).
-    *
-    * Shape: explode shingles once, then ONE whole-stage-codegen hash
-    * aggregation computing all 63 mins with map-side partial aggregation —
-    * the shuffle carries only 63 longs per document per map partition.
-    * This replaces a per-row higher-order `transform` formulation that
-    * string-hashed every shingle once per signature slot in interpreted lambdas.
+  /** (doc_id, band, h) bucket keys of a shingled (doc_id, sh) frame — the
+    * unit the LSH joins exchange: 21 rows per document, never the
+    * shingle sets. One generated kernel call per row
+    * ([[graft.functions.MinhashBandKernel]]: 63 Kirsch–Mitzenmacher
+    * MinHash slots from two xxhash64 string hashes per shingle, each
+    * 3-slot band xxhash64'd into its key), so no exchange or aggregation
+    * sits between the shingles and the keys. `band` is int and `h` is
+    * bigint, the on-disk [[writeMinhashIndex]] schema. Keys are per ROW:
+    * a frame that repeats a doc_id gets one key set per row, not one
+    * signature over the union of those rows' shingles.
     */
-  private def signatures(docs: DataFrame): DataFrame = {
-    val ex = docs.select(col("doc_id"), explode(col("sh")).as("s"))
-      .select(col("doc_id"),
-        xxhash64(col("s")).as("h1"), xxhash64(lit(1), col("s")).as("h2"))
-    val mins = (0 until NumHashes).map(i =>
-      min(col("h1") + lit(i.toLong) * col("h2")).as(s"sig_$i"))
-    ex.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  private def bandBuckets(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val keys = ColumnBridge.column(graft.functions.MinhashBands(
+      ColumnBridge.expression(col("sh")), Bands, BandRows))
+    docs.select(col("doc_id"), posexplode(keys).as(Seq("band", "h")))
   }
 
   /** Candidate pairs from banded LSH: docs sharing any 3-row band bucket.
@@ -158,20 +155,8 @@ object Dedup {
     * near-total recall at the threshold itself, where 4-row bands leave a
     * ~1% deterministic hole.
     */
-  /** (doc_id, band, h) bucket keys from a signature frame — the unit the
-    * LSH joins exchange: 21 rows per document, never the shingle sets.
-    */
-  private def bandBuckets(sig: DataFrame): DataFrame = {
-    val bandCols = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until BandRows).map(r => col(s"sig_${BandRows * b + r}")): _*).as("h"))
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.h").as("h"))
-  }
-
-  private def candidatePairs(sig: DataFrame): DataFrame = {
-    val buckets = bandBuckets(sig)
+  private def candidatePairs(docs: DataFrame): DataFrame = {
+    val buckets = bandBuckets(docs)
     val a = buckets.as("a")
     val b = buckets.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.h") === col("b.h")
@@ -299,7 +284,7 @@ object Dedup {
     */
   private[graft] def minhashFromShingledUnordered(docs: DataFrame,
       threshold: Double): DataFrame = {
-    val cands = candidatePairs(signatures(docs))
+    val cands = candidatePairs(docs)
     cands.join(hashedSets(docs, "da", "hsa", "na"), "da")
       .join(hashedSets(docs, "db", "hsb", "nb"), "db")
       .withColumn("jaccard", kernelJaccard)
@@ -395,8 +380,8 @@ object Dedup {
       threshold: Double): DataFrame = {
     val bs = batch.select(col("doc_id"), shingles(col("text")).as("sh"))
     val cs = corpus.select(col("doc_id"), shingles(col("text")).as("sh"))
-    val cands = bandBuckets(signatures(bs)).as("a")
-      .join(bandBuckets(signatures(cs)).as("b"),
+    val cands = bandBuckets(bs).as("a")
+      .join(bandBuckets(cs).as("b"),
         col("a.band") === col("b.band") && col("a.h") === col("b.h"))
       .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
       .distinct()
@@ -427,7 +412,7 @@ object Dedup {
     corpus.select(col("doc_id"), shingles(col("text")).as("sh"))
       .write.mode("overwrite").parquet(s"$path/shingles")
     val cs = spark.read.parquet(s"$path/shingles")
-    bandBuckets(signatures(cs))
+    bandBuckets(cs)
       .repartition(col("band"))
       .sortWithinPartitions(col("h"))
       .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
@@ -446,7 +431,7 @@ object Dedup {
     // the scan subtree with a LogicalRDD, so the spec asserts file
     // provenance on the UNCUT dataflow (same graph minus the cut)
     val bs = if (cut) sh.cutLineage(eager = true) else sh
-    (bs, bandBuckets(signatures(bs)))
+    (bs, bandBuckets(bs))
   }
 
   /** Incrementally admit a batch into a materialized
@@ -493,7 +478,7 @@ object Dedup {
     val bs = batch.select(col("doc_id"), shingles(col("text")).as("sh"))
     val corpusBands = spark.read.parquet(s"$indexPath/bands")
     val corpusSh = spark.read.parquet(s"$indexPath/shingles")
-    val cands = bandBuckets(signatures(bs)).as("a")
+    val cands = bandBuckets(bs).as("a")
       .join(corpusBands.as("b"),
         col("a.band") === col("b.band") && col("a.h") === col("b.h"))
       .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
@@ -1369,8 +1354,12 @@ object Dedup {
       pairs: DataFrame): (DataFrame, Int) = {
     // materialize the pair list BEFORE mirroring it: the union references
     // `pairs` twice, and without this the whole upstream candidate
-    // pipeline (LSH + verify) would run once per branch
-    val p = pairs.cutLineage(eager = true)
+    // pipeline (LSH + verify) would run once per branch. The count is
+    // the cut's materializer, and an empty list (a clean batch) returns
+    // here as the empty projection of that one cut, with no rounds run
+    val p = pairs.cutLineage()
+    if (graft.Materialize.count(p) == 0)
+      return (p.select(col("da").as("doc_id"), col("db").as("cluster_id")), 0)
     val edges = p.select(col("da").as("a"), col("db").as("b"))
       .union(p.select(col("db").as("a"), col("da").as("b")))
       .cutLineage(eager = true)
@@ -1389,9 +1378,7 @@ object Dedup {
     // a per-round shuffle join against the previous labels. DECIMAL(38,0)
     // keeps the sum exact out to ~10²⁶ node-ids-times-rows — far past any
     // corpus (int64 would overflow at ~10⁹ docs with 10¹²-range ids).
-    // ZERO fallback: on an empty pair list (clean corpus) the sum
-    // aggregate returns NULL; 0 == 0 then converges the loop on round 1
-    // and the operator yields an empty cluster frame instead of NPEing
+    // ZERO fallback: an all-NULL label column sums to NULL
     def lblSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head.getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)

@@ -1278,10 +1278,11 @@ object EventStream {
         if (nInput > 0) {
           val spark = batch.sparkSession
           import spark.implicits._
-          // 1. quality — the batch pipeline's own gate
+          // 1. quality — the batch pipeline's own gate. Each stage's cut
+          // is lazy: the count right after it is also its materializer
           val qual = TextCuration.qualityGateOn(batch.toDF(), cfg)
-            .cutLineage(eager = true)
-          val nQual = qual.count()
+            .cutLineage()
+          val nQual = graft.Materialize.count(qual)
           // 2. decontam: eval ids out, eval k-gram overlap out
           val clean = qual
             .filter(col("doc_id") % Dedup.EvalModulus =!= 0)
@@ -1291,8 +1292,8 @@ object EventStream {
             .filter(!coalesce(
               arrays_overlap(col("hs"), col("eval_hashes")), lit(false)))
             .drop("hs", "eval_hashes")
-            .cutLineage(eager = true)
-          val nClean = clean.count()
+            .cutLineage()
+          val nClean = graft.Materialize.count(clean)
           // 3. near-dup: intra-batch keep-first, then the stored index
           // unordered: clustersFromPairs cuts the pairs straight away
           val pairs = Dedup.minhashFromShingledUnordered(
@@ -1330,8 +1331,8 @@ object EventStream {
               .join(broadcast(ownIndexed), Seq("corpus_id"), "left_anti")
               .select(col("batch_id").as("doc_id")).distinct()
             intraKept.join(dups, Seq("doc_id"), "left_anti")
-          } else intraKept).cutLineage(eager = true)
-          val nDedup = admitted.count()
+          } else intraKept).cutLineage()
+          val nDedup = graft.Materialize.count(admitted)
           // 4. (optional) CCNet-style Stupid-Backoff fluency gate
           // against a STORED reference model — the streaming LM stage
           // between dedup and the cap, [[sbGateSink]]'s filter inlined
@@ -1350,10 +1351,11 @@ object EventStream {
                 .filter(col("avg_micro") >= lmMinAvgMicro)
                 .select(col("doc_id"))
               admitted.join(keep, Seq("doc_id"), "left_semi")
-                .cutLineage(eager = true)
+                .cutLineage()
             case None => admitted
           }
-          val nLm = if (lmModelPath.isDefined) fluent.count() else nDedup
+          val nLm =
+            if (lmModelPath.isDefined) graft.Materialize.count(fluent) else nDedup
           // 5. per-source cap net of PRIOR batches' landed docs
           val docsPath = s"$outPath/docs"
           // strictly EARLIER batches only: a replayed batch must see the
@@ -1376,8 +1378,8 @@ object EventStream {
             .filter(col("pick") + col("n_prior") <= cfg.capPerSource)
             .select(col("doc_id"), col("source"), col("lang"),
               col("n_tokens"), col("text"))
-            .cutLineage(eager = true)
-          val nCap = landed.count()
+            .cutLineage()
+          val nCap = graft.Materialize.count(landed)
           // Retract-then-write, same hole [[sbGateSink]] closes:
           // dynamic overwrite only replaces partitions the NEW write
           // touches, so a replay whose survivor set shrinks to ZERO
@@ -1389,8 +1391,8 @@ object EventStream {
           // first makes the rewrite unconditional: on-disk state is
           // exactly the current survivor set, empty included. One
           // idempotent FS delete per batch; `landed` is already
-          // eagerly materialized (cutLineage above), so the delete
-          // cannot race the `prior` read of the same directory.
+          // materialized (its cut landed with the count above), so the
+          // delete cannot race the `prior` read of the same directory.
           val docsBatchPart = new org.apache.hadoop.fs.Path(
             s"$docsPath/ingest_batch=$batchId")
           docsBatchPart

@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import graft.KernelPaths.bothPaths
 import graft.functions.VectorFunctions
 import graft.pipeline.Transforms
 
@@ -19,49 +17,8 @@ import graft.pipeline.Transforms
   *
   * Generation is seeded, so the suite is deterministic run-to-run.
   */
-class PropertySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class PropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  /** Runs a kernel pin's frame on both evaluation paths and returns its
-    * rows. Over a local frame, `ConvertToLocalRelation` folds the
-    * projection into a `LocalTableScan` at plan time, so the default run
-    * evaluates the kernels interpreted. The second run excludes that
-    * rule (from the adaptive re-optimizer too) and keeps only the
-    * `kernelCols` (all columns if none are named), since an interpreted
-    * higher-order reference column in the same projection would keep it
-    * out of whole-stage codegen. That plan must call a graft kernel
-    * inside a `WholeStageCodegenExec`, and its rows must equal the
-    * interpreted ones (compared as strings, so -0.0 and NaN count too;
-    * order-insensitive, for the joined pins).
-    */
-  private def bothPaths(df: DataFrame, kernelCols: String*): Array[Row] = {
-    val interpreted = df.collect()
-    val cols = if (kernelCols.isEmpty) df.columns.toSeq else kernelCols
-    val keys = Seq("spark.sql.optimizer.excludedRules",
-      "spark.sql.adaptive.optimizer.excludedRules")
-    val prev = keys.map(spark.conf.getOption)
-    keys.foreach(spark.conf.set(_,
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))
-    try {
-      val gen = df.select(cols.map(col): _*)
-      val generated = gen.collect()
-      val plan = gen.queryExecution.executedPlan
-      assert(collect(plan) { case w: WholeStageCodegenExec => w }
-        .exists(_.child.exists(_.expressions.exists(_.exists {
-          case s: StaticInvoke => s.staticObject.getName.startsWith("graft.")
-          case _ => false
-        }))), s"no graft kernel inside whole-stage codegen:\n$plan")
-      val expected = interpreted.map(r =>
-        Row.fromSeq(cols.map(c => r.get(r.fieldIndex(c)))))
-      assert(generated.map(_.toString).sorted.toSeq
-        == expected.map(_.toString).sorted.toSeq,
-        "generated rows differ from interpreted rows")
-    } finally keys.zip(prev).foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-    interpreted
-  }
 
   private def sample[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
     LazyList.iterate(Seed(seed))(_.next)
@@ -403,7 +360,11 @@ class PropertySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         |       word_shingle_hashes('a b c d', 3, true) = array_sort(
         |         array(xxhash64('a b c'), xxhash64('b c d'))) AS wsh,
         |       hashed_set(array('b c d', 'a b c', 'a b c')) = array_sort(
-        |         array(xxhash64('a b c'), xxhash64('b c d'))) AS hs""".stripMargin)
+        |         array(xxhash64('a b c'), xxhash64('b c d'))) AS hs,
+        |       minhash_bands(array('x'), 1, 1) = array(xxhash64(xxhash64('x')))
+        |         AS mb,
+        |       size(minhash_bands(array('a b c', 'b c d'), 21, 3)) AS n_mb"""
+        .stripMargin)
       .collect().head
     assert(r.getDouble(0) == 11.0)
     assert(r.getDouble(1) == 25.0)
@@ -414,6 +375,9 @@ class PropertySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // two distinct shingles, hashed, deduped and ascending
     assert(r.getBoolean(5), "word_shingle_hashes sorted set")
     assert(r.getBoolean(6), "hashed_set")
+    // one shingle, one 1-slot band: the key is xxhash64 of its min-hash
+    assert(r.getBoolean(7), "minhash_bands of one shingle")
+    assert(r.getInt(8) == 21)
     // lm_grams: array of per-position context structs; position 3 of
     // "a b c" carries the full trigram
     val g = spark.sql(
@@ -495,6 +459,66 @@ class PropertySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           s"k=$k hashed_set mismatch: ${r.getSeq[Long](4)} vs ${r.getSeq[Long](3)}")
       }
     }
+  }
+
+  /** The declarative MinHash chain `minhash_bands` replaced: explode the
+    * shingles, hash each twice, 63 `min` aggregates per doc_id, then one
+    * `xxhash64` per 3-slot band — (doc_id, band, h) rows.
+    */
+  private def declarativeBands(docs: DataFrame): DataFrame = {
+    val ex = docs.select(col("doc_id"), explode(col("sh")).as("s"))
+      .select(col("doc_id"),
+        xxhash64(col("s")).as("h1"), xxhash64(lit(1), col("s")).as("h2"))
+    val mins = (0 until 63).map(i =>
+      min(col("h1") + lit(i.toLong) * col("h2")).as(s"sig_$i"))
+    val sig = ex.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+    val bandCols = (0 until 21).map { b =>
+      struct(lit(b).as("band"),
+        xxhash64((0 until 3).map(r => col(s"sig_${3 * b + r}")): _*).as("h"))
+    }
+    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.h").as("h"))
+  }
+
+  test("minhash_bands matches the explode/63-min-aggregate/xxhash64 band " +
+    "chain on random shingle sets, including NULL and empty arrays, NULL " +
+    "elements, duplicates and non-ASCII text") {
+    val shingle: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None),
+      6 -> Gen.choose(0, 15).map(i => Some(s"w$i w${i + 1} w${i + 2}")),
+      1 -> Gen.const(Some("é™ straße ü")),
+      1 -> Gen.const(Some("")))
+    val set: Gen[Option[Seq[Option[String]]]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.const(Some(Nil)),
+      2 -> shingle.map(s => Some(Seq(s))),
+      6 -> Gen.choose(2, 30).flatMap(Gen.listOfN(_, shingle)).map(Some(_)))
+    val edges: Seq[Option[Seq[Option[String]]]] = Seq(None, Some(Nil),
+      Some(Seq(None)), Some(Seq(Some("a b c"))),
+      Some(Seq(Some("a b c"), Some("a b c"))), Some(Seq(Some("é™ ü"))))
+    val rows = (edges ++ sample(set, 300, seed = 31L)).zipWithIndex
+      .map { case (a, i) => Row(i.toLong, a.map(_.map(_.orNull)).orNull) }
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("sh", ArrayType(StringType))))
+    val df = spark.createDataFrame(
+      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
+        .SeqHasAsJava(rows).asJava), schema)
+    val out = bothPaths(df.select(col("doc_id"), col("sh"),
+      expr("minhash_bands(sh, 21, 3)").as("kb")), "doc_id", "kb")
+    out.foreach { r =>
+      if (r.isNullAt(1)) assert(r.isNullAt(2), s"doc ${r.getLong(0)}")
+      else assert(r.getSeq[Long](2).length ==
+        (if (r.getSeq[String](1).isEmpty) 0 else 21), s"doc ${r.getLong(0)}")
+    }
+    val got = out.toSeq.filterNot(_.isNullAt(2)).flatMap(r =>
+      r.getSeq[Long](2).zipWithIndex.map { case (h, b) => (r.getLong(0), b, h) })
+    val ref = declarativeBands(df).collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    assert(got.sorted == ref.sorted)
+    val exploded = df.select(col("doc_id"),
+      posexplode(expr("minhash_bands(sh, 21, 3)")).as(Seq("band", "h")))
+    assert(exploded.schema.map(_.dataType) ==
+      Seq(LongType, IntegerType, LongType))
   }
 
   test("word_ngrams matches the guarded transform/element_at chain on " +

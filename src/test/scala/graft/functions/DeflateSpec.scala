@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+import graft.KernelPaths.bothPaths
 import graft.TestSpark
 
 /** Invariants for the deflate_size kernel and the compression-ratio
@@ -30,10 +31,9 @@ class DeflateSpec extends AnyFunSuite {
 
   test("SQL surface: deflate_size registered via GraftExtensions") {
     import spark.implicits._
-    val out = Seq("aaaa aaaa aaaa aaaa", "zq xv jk wp mn bt")
+    val out = bothPaths(Seq("aaaa aaaa aaaa aaaa", "zq xv jk wp mn bt")
       .toDF("text")
-      .selectExpr("deflate_size(text) AS dz", "length(text) AS n")
-      .collect()
+      .selectExpr("deflate_size(text) AS dz", "length(text) AS n"))
     // per-row kernel parity with the direct call
     assert(out(0).getInt(0) == size("aaaa aaaa aaaa aaaa"))
     assert(out(1).getInt(0) == size("zq xv jk wp mn bt"))

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.KernelPaths.bothPaths
 import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -46,7 +47,7 @@ class HashLadderSpec extends AnyFunSuite {
           xxhash64(col("h"), col("hr")).as("h"))
       len *= 2
     }
-    (kernel.orderBy("doc_id", "start").collect().toSeq,
+    (bothPaths(kernel.orderBy("doc_id", "start")).toSeq,
       ref.orderBy("doc_id", "start").collect().toSeq)
   }
 
@@ -71,7 +72,7 @@ class HashLadderSpec extends AnyFunSuite {
       .select(col("doc_id"), split(col("text"), " ").as("arr"))
     val kcol = ColumnBridge.column(HashLadder(
       ColumnBridge.expression(col("arr")), 4, 2))
-    assert(docs.select(col("doc_id"),
-      posexplode(kcol).as(Seq("start", "h"))).count() == 0)
+    assert(bothPaths(docs.select(col("doc_id"),
+      posexplode(kcol).as(Seq("start", "h")))).isEmpty)
   }
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.KernelPaths.bothPaths
 import graft.TestSpark
 
 /** The sorted_intersect_count kernel: merge-count semantics against a
@@ -41,8 +42,8 @@ class SortedIntersectSpec extends AnyFunSuite {
       (Seq(1L, 4L, 9L, 16L), Seq(2L, 4L, 16L, 32L)),
       (Seq.empty[Long], Seq(1L, 2L)),
       (Seq(7L), Seq(7L))).toDF("a", "b")
-    val got = df.selectExpr("sorted_intersect_count(a, b) AS c")
-      .collect().map(_.getLong(0)).toSeq
+    val got = bothPaths(df.selectExpr("sorted_intersect_count(a, b) AS c"))
+      .map(_.getLong(0)).toSeq
     val ref = df.select(size(array_intersect(col("a"), col("b")))
       .cast("long")).collect().map(_.getLong(0)).toSeq
     assert(got == ref && got == Seq(2L, 0L, 1L))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.KernelPaths.bothPaths
 import graft.TestSpark
 
 /** Stupid-Backoff n-gram LM: kernel parity with the declarative
@@ -28,7 +29,7 @@ class NgramLmSpec extends AnyFunSuite {
     def key(t: (Long, String, String, String, String, String)) =
       (t._1, t._2, String.valueOf(t._3), String.valueOf(t._4),
         String.valueOf(t._5), String.valueOf(t._6))
-    val got = NgramLm.positions(df).collect()
+    val got = bothPaths(NgramLm.positions(df))
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getString(4), r.getString(5)))
       .sortBy(key)
