@@ -23,9 +23,13 @@ import org.apache.spark.sql.SparkSession
   *     stage on touches 171 such entries (106 bodies), and up to 190
   *     across two consecutive batches; Guava splits the cache into 4
   *     LRU segments of cap/4, and the fullest segment held up to 60 of
-  *     them. Without the LM stage a batch touches 152–153 entries (95–96
+  *     them. Without the LM stage a batch touched 152–153 entries (95–96
   *     bodies), up to 174 across two batches, fullest segment 52; the
-  *     LM figures predate the MinHash band kernel. Spark's default of
+  *     LM figures predate the MinHash band kernel. Since the near-dup
+  *     stage became one band join over the decontam cut, a steady batch
+  *     without the LM stage touches 137–147 entries (counted as the
+  *     compiles of a batch run on an emptied cache) and compiles 2–10
+  *     classes on a warm one. Spark's default of
   *     100 evicted most entries before their next use, so each batch
   *     recompiled about 155 classes. Each extra
   *     entry pins its session loader (about 33 KB), hence no more than

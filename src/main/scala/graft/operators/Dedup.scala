@@ -141,11 +141,14 @@ object Dedup {
     * a frame that repeats a doc_id gets one key set per row, not one
     * signature over the union of those rows' shingles.
     */
-  private def bandBuckets(docs: DataFrame): DataFrame = {
+  private def bandBuckets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), posexplode(bandKeys(col("sh"))).as(Seq("band", "h")))
+
+  /** The 21 band keys of a shingle array, in band order. */
+  private def bandKeys(sh: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
-    val keys = ColumnBridge.column(graft.functions.MinhashBands(
-      ColumnBridge.expression(col("sh")), Bands, BandRows))
-    docs.select(col("doc_id"), posexplode(keys).as(Seq("band", "h")))
+    ColumnBridge.column(graft.functions.MinhashBands(
+      ColumnBridge.expression(sh), Bands, BandRows))
   }
 
   /** Candidate pairs from banded LSH: docs sharing any 3-row band bucket.
@@ -395,52 +398,76 @@ object Dedup {
   }
 
   /** Materialize the corpus side of [[minhashJoinOn]] as an on-disk
-    * admission index: `path/shingles` = (doc_id, sh) shingle sets for
-    * the exact-verify stage, `path/bands` = (band, h, doc_id) LSH bucket
-    * keys partitioned by band and sorted by bucket hash within each band
-    * directory (tight parquet row-group stats for probe scans).
+    * admission index of two flat parquet directories:
     *
-    * The corpus text is scanned ONCE: the shingle store is written
-    * first and the signature/band pass derives from reading it back, so
-    * the expensive shingle kernel never runs twice. At 100 TB this is
-    * the difference between "re-shingle + re-sign the corpus per
-    * admission batch" and "pay the corpus pass once per index refresh";
-    * each batch then probes two precomputed frames.
+    *   - `path/sets` = (doc_id, hs, n): each doc's sorted xxhash64
+    *     shingle set and its size, exactly what the verify reads (the
+    *     [[writePpjoinIndex]] `sets/` shape);
+    *   - `path/bands` = (band, h, doc_id): the doc's 21 LSH bucket keys,
+    *     each writing task's rows sorted by (band, h).
+    *
+    * `bands/` is not partitioned by band: every non-empty doc has a key
+    * in all 21 bands, so every probe reads every band and a per-band
+    * directory would prune nothing while costing each append one file
+    * per band.
+    *
+    * The corpus text is shingled ONCE ([[minhashSigned]], cut and read
+    * by both writes). At 100 TB this is the difference between
+    * "re-shingle + re-sign the corpus per admission batch" and "pay the
+    * corpus pass once per index refresh"; each batch then probes two
+    * precomputed frames.
     */
   def writeMinhashIndex(corpus: DataFrame, path: String): Unit = {
-    val spark = corpus.sparkSession
-    corpus.select(col("doc_id"), shingles(col("text")).as("sh"))
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    val cs = spark.read.parquet(s"$path/shingles")
-    bandBuckets(cs)
-      .repartition(col("band"))
-      .sortWithinPartitions(col("h"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
+    val signed = minhashSigned(corpus.select(col("doc_id"), col("text")))
+      .cutLineage()
+    writeMinhashFrames(signed, path, "overwrite")
+    graft.Materialize.release(signed)
   }
 
-  /** The two frames an index append writes, derived ONCE from the batch
-    * text: the shingle kernel runs a single time (eager cut, read by
-    * both writes) and NOTHING here reads the existing index or the
-    * original corpus — package-private so the spec can pin that scan
-    * provenance on the un-written frames.
+  /** (hs, n, keys) added to a (doc_id, text, …) frame from ONE
+    * `word_shingles` call per row: `hs` is the verify's sorted hashed
+    * set ([[hashedSet]]), `n` its size, `keys` the 21 band keys in band
+    * order (`minhash_bands`, see [[bandBuckets]]). A frame read by more
+    * than one branch must be cut: each branch of an uncut plan re-runs
+    * the kernels.
     */
-  private[operators] def minhashAppendFrames(batch: DataFrame,
-      cut: Boolean = true): (DataFrame, DataFrame) = {
-    val sh = batch.select(col("doc_id"), shingles(col("text")).as("sh"))
-    // `cut = false` only in the provenance spec: the eager cut replaces
-    // the scan subtree with a LogicalRDD, so the spec asserts file
-    // provenance on the UNCUT dataflow (same graph minus the cut)
-    val bs = if (cut) sh.cutLineage(eager = true) else sh
-    (bs, bandBuckets(bs))
+  private[graft] def minhashSigned(docs: DataFrame): DataFrame = {
+    val sh = col("__mh_sh")
+    docs.withColumn("__mh_sh", shingles(col("text")))
+      .withColumn("hs", hashedSet(sh))
+      .withColumn("keys", bandKeys(sh))
+      .withColumn("n", size(col("hs")))
+      .drop("__mh_sh")
+  }
+
+  /** The two frames an index write lands, projected from a
+    * [[minhashSigned]] frame: (doc_id, hs, n) for `sets/` and
+    * (band, h, doc_id) for `bands/`. Package-private so the spec can pin
+    * that they read the batch alone.
+    */
+  private[operators] def minhashIndexFrames(
+      signed: DataFrame): (DataFrame, DataFrame) =
+    (signed.select(col("doc_id"), col("hs"), col("n")),
+      signed.select(col("doc_id"), posexplode(col("keys")).as(Seq("band", "h")))
+        .select(col("band"), col("h"), col("doc_id")))
+
+  /** Write a [[minhashSigned]] frame's sets and band keys into the
+    * [[writeMinhashIndex]] layout at `path` under save `mode`. Both
+    * writes read `signed`, so it should be a cut.
+    */
+  private[graft] def writeMinhashFrames(signed: DataFrame, path: String,
+      mode: String): Unit = {
+    val (sets, bands) = minhashIndexFrames(signed)
+    sets.write.mode(mode).parquet(s"$path/sets")
+    bands.sortWithinPartitions(col("band"), col("h"))
+      .write.mode(mode).parquet(s"$path/bands")
   }
 
   /** Incrementally admit a batch into a materialized
     * [[writeMinhashIndex]] layout — the fuzzy-dedup twin of
-    * [[Similarity.appendToIvfIndex]]: append the batch's shingle sets
-    * to `shingles/` and its band keys into the per-band directories of
-    * `bands/` (partition-scoped appends — new files land next to the
-    * old ones, no existing file is rewritten, no unaffected band is
-    * touched). Without this, admitting a batch at 100 TB means
+    * [[Similarity.appendToIvfIndex]]: the batch's sets and band keys
+    * land as new files in `sets/` and `bands/`; no existing file is
+    * rewritten. Without this, admitting a batch at 100 TB means
     * refresh-by-rewrite: re-shingling the ENTIRE corpus to add a day's
     * documents. With it, the steady-state index lifecycle matches the
     * IVF family: build once, append per batch, rebuild only on
@@ -451,46 +478,90 @@ object Dedup {
     * and shingling are pure per-document functions — so probing an
     * appended index is identical to probing a rebuilt index over the
     * union corpus (spec-proved, `MinhashIndexSpec`). The append itself
-    * scans ONLY the batch text: one shingle pass (eagerly cut, shared
-    * by both writes), no read of the existing index, no read of the
-    * original corpus (plan-proved).
+    * scans ONLY the batch text, shingling it once (plan-proved).
     */
   def appendToMinhashIndex(batch: DataFrame, path: String): Unit = {
-    val (bs, bands) = minhashAppendFrames(batch)
-    bs.write.mode("append").parquet(s"$path/shingles")
-    bands
-      .repartition(col("band"))
-      .sortWithinPartitions(col("h"))
-      .write.mode("append").partitionBy("band").parquet(s"$path/bands")
-    graft.Materialize.release(bs)
+    requireMinhashSets(batch.sparkSession, path)
+    val signed = minhashSigned(batch.select(col("doc_id"), col("text")))
+      .cutLineage()
+    writeMinhashFrames(signed, path, "append")
+    graft.Materialize.release(signed)
+  }
+
+  /** An index with `bands/` but no `sets/` predates the `sets/` layout
+    * (it stored `shingles/`): fail rather than probe or append half an
+    * index.
+    */
+  private def requireMinhashSets(spark: SparkSession, path: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/bands")) ||
+      fs.exists(new org.apache.hadoop.fs.Path(s"$path/sets")),
+      s"MinHash index at $path has bands/ but no sets/: it was written " +
+        "with the older shingles/ layout; rebuild it with " +
+        "Dedup.writeMinhashIndex")
+  }
+
+  /** Verified near-dup pairs of a [[minhashSigned]] batch against the
+    * stored index at `indexPath` and, with `withinBatch`, against
+    * itself — candidates from ONE band join of the batch's keys against
+    * batch keys ∪ stored `bands/`. The verify reads the batch side's
+    * `hs` from `signed` and the stored side's from `sets/`, keeping only
+    * candidate ids (the candidates are the broadcast build side, so no
+    * per-batch hash table grows with the index); nothing here shingles.
+    * `signed` is read by several branches, so pass a cut. Stored frames
+    * are read with pinned schemas, doc_id typed as the batch's. Output
+    * (da, db, stored, jaccard): `da` is a batch id; `db` is a stored id
+    * when `stored`, else a batch id above `da`.
+    */
+  private[graft] def minhashProbe(signed: DataFrame, indexPath: Option[String],
+      withinBatch: Boolean, threshold: Double): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+    val idType = signed.schema("doc_id").dataType
+    val sides = (if (withinBatch) Seq(minhashIndexFrames(signed) -> false)
+      else Nil) ++ indexPath.map { p =>
+        requireMinhashSets(signed.sparkSession, p)
+        def read(dir: String, fields: (String, DataType)*) =
+          Tables.pinned(signed.sparkSession, s"$p/$dir", fields: _*)
+        (read("sets", "doc_id" -> idType, "hs" -> ArrayType(LongType),
+          "n" -> IntegerType),
+          read("bands", "band" -> IntegerType, "h" -> LongType,
+            "doc_id" -> idType)) -> true
+      }
+    def others(frame: ((DataFrame, DataFrame)) => DataFrame): DataFrame =
+      sides.map { case (f, st) => frame(f).withColumn("stored", lit(st)) }
+        .reduce(_ union _).withColumnRenamed("doc_id", "db")
+    val cands = minhashIndexFrames(signed)._2.withColumnRenamed("doc_id", "da")
+      .join(others(_._2), Seq("band", "h"))
+      .filter(col("stored") || col("da") < col("db"))
+      .select(col("da"), col("db"), col("stored"))
+      .distinct()
+      .join(signed.select(col("doc_id").as("da"), col("hs").as("hsa"),
+        col("n").as("na")), "da")
+    others(_._1).select(col("db"), col("stored"), col("hs").as("hsb"),
+        col("n").as("nb"))
+      .join(broadcast(cands), Seq("db", "stored"))
+      .withColumn("jaccard", kernelJaccard)
+      .filter(col("jaccard") >= threshold)
+      .select(col("da"), col("db"), col("stored"), col("jaccard"))
   }
 
   /** [[minhashJoinOn]] with the corpus side served from a materialized
-    * [[writeMinhashIndex]] layout: the batch is shingled/signed live;
-    * the corpus contributes only stored band keys to the candidate join
-    * and stored shingle sets to the verify join — no corpus re-shingle,
-    * no corpus signature pass (plan-proved in `MinhashIndexSpec`).
-    * Results are identical to the in-memory path by construction (same
-    * kernels, same band hashing, same verify metric).
+    * [[writeMinhashIndex]] layout: the batch is shingled and signed once
+    * (one cut); the corpus contributes only stored band keys to the
+    * candidate join and stored `sets/` to the verify — no corpus
+    * re-shingle, no corpus signature pass (plan-proved in
+    * `MinhashIndexSpec`). Results are identical to the in-memory path by
+    * construction (same kernels, same band hashing, same verify metric).
     */
   def minhashJoinFromIndex(spark: SparkSession, batch: DataFrame,
-      indexPath: String, threshold: Double): DataFrame = {
-    val bs = batch.select(col("doc_id"), shingles(col("text")).as("sh"))
-    val corpusBands = spark.read.parquet(s"$indexPath/bands")
-    val corpusSh = spark.read.parquet(s"$indexPath/shingles")
-    val cands = bandBuckets(bs).as("a")
-      .join(corpusBands.as("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h"))
-      .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
-      .distinct()
-    cands
-      .join(hashedSets(bs, "batch_id", "hsa", "na"), "batch_id")
-      .join(hashedSets(corpusSh, "corpus_id", "hsb", "nb"), "corpus_id")
-      .withColumn("jaccard", kernelJaccard)
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+      indexPath: String, threshold: Double): DataFrame =
+    minhashProbe(
+      minhashSigned(batch.select(col("doc_id"), col("text"))).cutLineage(),
+      Some(indexPath), withinBatch = false, threshold)
+      .select(col("da").as("batch_id"), col("db").as("corpus_id"),
+        col("jaccard"))
       .orderBy(col("batch_id"), col("corpus_id"))
-  }
 
   /** [[minhashJoinOn]] over the documents table, doc_id ≡ 7 (mod 10) as
     * the incoming batch against the rest as corpus (the
@@ -1363,11 +1434,13 @@ object Dedup {
     val edges = p.select(col("da").as("a"), col("db").as("b"))
       .union(p.select(col("db").as("a"), col("da").as("b")))
       .cutLineage(eager = true)
-    // LAZY local checkpoints inside the loop: the convergence-sum action
-    // below is then also the materializer, so each round costs ONE Spark
-    // job (compute + checkpoint + sum) instead of an eager-checkpoint job
-    // plus a check job. Lineage still truncates every round — the
-    // checkpoint lands when the sum's job finishes.
+    // LAZY local checkpoints inside the loop: the convergence sum below
+    // is then also the materializer, so no round pays a separate
+    // eager-checkpoint job. Lineage still truncates every round — the
+    // checkpoint lands when the sum's job finishes. A round still runs
+    // 6 to 9 jobs on the pairs of a few hundred docs: making the cut
+    // runs the round's shuffle map stages and broadcasts (AQE executes
+    // them when the cut's RDD is built), then the sum runs one.
     var labels = edges.select(col("a").as("n")).distinct()
       .withColumn("lbl", col("n"))
       .cutLineage()
@@ -1378,10 +1451,14 @@ object Dedup {
     // a per-round shuffle join against the previous labels. DECIMAL(38,0)
     // keeps the sum exact out to ~10²⁶ node-ids-times-rows — far past any
     // corpus (int64 would overflow at ~10⁹ docs with 10¹²-range ids).
-    // ZERO fallback: an all-NULL label column sums to NULL
+    // A NULL label counts as 0. One RDD fold, one job (as
+    // Materialize.count): `agg(sum).head` plans a partial-aggregate
+    // shuffle and pays a map job plus a result job
     def lblSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
+      df.select(col("lbl").cast("decimal(38,0)")).queryExecution.toRdd
+        .map(r => if (r.isNullAt(0)) java.math.BigDecimal.ZERO
+          else r.getDecimal(0, 38, 0).toJavaBigDecimal)
+        .fold(java.math.BigDecimal.ZERO)(_ add _)
     var prevSum = lblSum(labels)
     var converged = false
     var rounds = 0

@@ -1088,8 +1088,9 @@ object Multimodal {
   /** Materialize the phash admission index: the corpus's band keys
     * written band-partitioned and sorted by `bh` within each file, so
     * a probe's (band, bh) lookups ride parquet row-group min/max
-    * instead of scanning the band — the media twin of
-    * [[Dedup.writeMinhashIndex]]'s layout. Payloads are NOT stored;
+    * instead of scanning the band — the media counterpart of
+    * [[Dedup.writeMinhashIndex]], whose band keys are stored flat
+    * instead. Payloads are NOT stored;
     * the 64-bit hash is the whole retained state per (doc, band).
     */
   def writePhashIndex(media: DataFrame, path: String): Unit =

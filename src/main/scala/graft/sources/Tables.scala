@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table registry over a testdata scale-factor directory.
   *
@@ -22,6 +22,15 @@ object Tables {
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Read a parquet directory the engine wrote itself, with the columns
+    * it needs pinned: an unpinned read runs a footer-inference job first.
+    * A missing directory still fails at this call.
+    */
+  private[graft] def pinned(spark: SparkSession, path: String,
+      fields: (String, DataType)*): DataFrame =
+    spark.read.schema(StructType(fields.map(f => StructField(f._1, f._2))))
+      .parquet(path)
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -1220,13 +1220,16 @@ object EventStream {
     *      is dropped ([[curateDocs]]' broadcast one-row hash-set
     *      shape; no redaction here — counts must mirror the batch
     *      stage, compose [[curateDocs]] upstream for ingest PII);
-    *   3. near-dup: intra-batch MinHash clusters collapse to their
-    *      lowest-id member, then survivors probe the
+    *   3. near-dup: each doc is shingled once (its set and band keys
+    *      ride the decontam cut), and ONE band join of the batch's keys
+    *      against its own keys ∪ the
     *      [[graft.operators.Dedup.writeMinhashIndex]] layout at
-    *      `indexPath` (created on first batch, APPENDED after each —
-    *      keep-first across batches); matches against ids THIS batchId
-    *      itself indexed (recorded in the `batches/` sidecar) are
-    *      ignored, so a replayed batch — whose docs are already
+    *      `indexPath` (created on first batch, APPENDED from the same
+    *      cut after each — keep-first across batches) finds both kinds
+    *      of pairs. Intra-batch MinHash clusters collapse to their
+    *      lowest-id member, and survivors with a stored near-dup drop;
+    *      matches against ids THIS batchId itself indexed (recorded in
+    *      the `batches/` sidecar) are ignored, so a replayed batch — whose docs are already
     *      indexed — reproduces its original decisions instead of
     *      self-matching to zero, while a doc REDELIVERED under a new
     *      batchId still matches its earlier indexed copy and is
@@ -1274,44 +1277,51 @@ object EventStream {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val nInput = batch.count()
+        val nInput = graft.Materialize.count(batch)
         if (nInput > 0) {
           val spark = batch.sparkSession
           import spark.implicits._
+          import org.apache.spark.sql.types.{DataType, LongType}
+          // the sink's own directories, schema pinned; a missing one
+          // fails inside the Try
+          def readOwn(path: String, fields: (String, DataType)*) =
+            scala.util.Try(graft.sources.Tables.pinned(spark, path, fields: _*))
+              .toOption
           // 1. quality — the batch pipeline's own gate. Each stage's cut
           // is lazy: the count right after it is also its materializer
           val qual = TextCuration.qualityGateOn(batch.toDF(), cfg)
             .cutLineage()
           val nQual = graft.Materialize.count(qual)
-          // 2. decontam: eval ids out, eval k-gram overlap out
-          val clean = qual
+          // 2. decontam: eval ids out, eval k-gram overlap out. The same
+          // cut carries each survivor's MinHash set and band keys
+          // (hs, n, keys), shingled once for every near-dup step below
+          val clean = Dedup.minhashSigned(qual
             .filter(col("doc_id") % Dedup.EvalModulus =!= 0)
             .withColumn("hs",
               Dedup.shingleHashes(col("text"), cfg.decontamK))
             .crossJoin(broadcast(evalHashes))
             .filter(!coalesce(
               arrays_overlap(col("hs"), col("eval_hashes")), lit(false)))
-            .drop("hs", "eval_hashes")
+            .drop("hs", "eval_hashes"))
             .cutLineage()
           val nClean = graft.Materialize.count(clean)
-          // 3. near-dup: intra-batch keep-first, then the stored index
-          // unordered: clustersFromPairs cuts the pairs straight away
-          val pairs = Dedup.minhashFromShingledUnordered(
-            clean.select(col("doc_id"), Dedup.shingles(col("text")).as("sh")),
-            cfg.dedupThreshold)
+          // 3. near-dup: ONE band join finds intra-batch pairs and
+          // stored-index pairs; intra-batch clusters keep their lowest
+          // id (the cluster label), then index matches drop
+          val idxPath = new org.apache.hadoop.fs.Path(s"$indexPath/bands")
+          val idxExists = idxPath
+            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .exists(idxPath)
+          val pairs = Dedup.minhashProbe(clean,
+              Some(indexPath).filter(_ => idxExists), withinBatch = true,
+              cfg.dedupThreshold)
+            .cutLineage()
           val clusters = Dedup.clustersFromPairs(
-            pairs.select(col("da"), col("db")))
+            pairs.filter(!col("stored")).select(col("da"), col("db")))
           val intraLosers = clusters
-            .join(clusters.groupBy(col("cluster_id"))
-                .agg(min(col("doc_id")).as("keep")),
-              "cluster_id")
-            .filter(col("doc_id") =!= col("keep"))
+            .filter(col("doc_id") =!= col("cluster_id"))
             .select(col("doc_id"))
           val intraKept = clean.join(intraLosers, Seq("doc_id"), "left_anti")
-          val shPath = new org.apache.hadoop.fs.Path(s"$indexPath/shingles")
-          val idxExists = shPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(shPath)
           val admitted = (if (idxExists) {
             // replay contract: exclude ONLY matches against ids THIS
             // batchId itself indexed (the `batches/` sidecar, partition-
@@ -1320,16 +1330,15 @@ object EventStream {
             // redelivers an already-landed doc under a NEW batchId still
             // self-matches its earlier indexed copy and is dropped
             // instead of double-landing in two ingest_batch partitions.
-            val ownIndexed = scala.util.Try(
-                spark.read.parquet(s"$indexPath/batches")).toOption
+            val ownIndexed = readOwn(s"$indexPath/batches",
+                "doc_id" -> clean.schema("doc_id").dataType,
+                "ingest_batch" -> LongType)
               .map(_.filter(col("ingest_batch") === batchId)
-                .select(col("doc_id").as("corpus_id")))
-              .getOrElse(Seq.empty[Long].toDF("corpus_id"))
-            val dups = Dedup.minhashJoinFromIndex(spark,
-              intraKept.select(col("doc_id"), col("text")), indexPath,
-              cfg.dedupThreshold)
-              .join(broadcast(ownIndexed), Seq("corpus_id"), "left_anti")
-              .select(col("batch_id").as("doc_id")).distinct()
+                .select(col("doc_id").as("db")))
+              .getOrElse(Seq.empty[Long].toDF("db"))
+            val dups = pairs.filter(col("stored"))
+              .join(broadcast(ownIndexed), Seq("db"), "left_anti")
+              .select(col("da").as("doc_id"))
             intraKept.join(dups, Seq("doc_id"), "left_anti")
           } else intraKept).cutLineage()
           val nDedup = graft.Materialize.count(admitted)
@@ -1361,7 +1370,9 @@ object EventStream {
           // strictly EARLIER batches only: a replayed batch must see the
           // same prior state it saw originally, never its own partition
           // nor a later batch that happened to land before the retry
-          val prior = scala.util.Try(spark.read.parquet(docsPath)).toOption
+          val prior = readOwn(docsPath,
+              "source" -> clean.schema("source").dataType,
+              "ingest_batch" -> LongType)
             .map(_.filter(col("ingest_batch") < batchId)
               .groupBy(col("source")).agg(count(lit(1)).as("n_prior")))
           val withPrior = prior
@@ -1421,7 +1432,6 @@ object EventStream {
           // keep-first index admission: what the DEDUP stage admitted
           // (pre-cap — a capped-out doc still represents its cluster)
           if (nDedup > 0) {
-            val toIndex = admitted.select(col("doc_id"), col("text"))
             // sidecar BEFORE the index data: if a crash lands between
             // them, a replay sees ids in `batches/` that are not yet in
             // the index — the anti-join excludes nothing extra and the
@@ -1434,10 +1444,12 @@ object EventStream {
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("ingest_batch").parquet(s"$indexPath/batches")
-            if (idxExists) Dedup.appendToMinhashIndex(toIndex, indexPath)
-            else Dedup.writeMinhashIndex(toIndex, indexPath)
+            // straight from the cut: its (hs, n, keys) are the rows the
+            // index stores, so nothing re-shingles
+            Dedup.writeMinhashFrames(admitted, indexPath,
+              if (idxExists) "append" else "overwrite")
           }
-          (Seq(qual, clean, clusters, admitted, landed) ++
+          (Seq(qual, clean, pairs, clusters, admitted, landed) ++
             (if (lmModelPath.isDefined) Seq(fluent) else Nil))
             .foreach(graft.Materialize.release)
         }

@@ -99,7 +99,7 @@ class MaterializeSpec extends AnyFunSuite {
     val beforeAppend = persisted()
     Dedup.appendToMinhashIndex(docs.filter(col("doc_id") > 3), idx)
     assert((persisted() -- beforeAppend).isEmpty)
-    assert(s.read.parquet(s"$idx/shingles").count() == 6)
+    assert(s.read.parquet(s"$idx/sets").count() == 6)
   }
 
   test("release refuses a frame that is not exactly one cut: a derived " +

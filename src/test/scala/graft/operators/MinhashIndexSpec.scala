@@ -65,10 +65,11 @@ class MinhashIndexSpec extends AnyFunSuite {
     val bdir = Files.createTempDirectory("graft_mhbatch").toString
     batch.write.mode("overwrite").parquet(bdir + "/batchdocs")
     val batchFromDisk = spark.read.parquet(bdir + "/batchdocs")
-    // cut = false exposes the real dataflow (the shipped path only adds
-    // a lineage cut on the same graph)
-    val (bs, bands) = Dedup.minhashAppendFrames(batchFromDisk, cut = false)
-    val roots = Seq(bs, bands).flatMap(_.queryExecution.analyzed.collect {
+    // the uncut signed frame exposes the real dataflow (the shipped path
+    // only adds a lineage cut on the same graph)
+    val (sets, bands) =
+      Dedup.minhashIndexFrames(Dedup.minhashSigned(batchFromDisk))
+    val roots = Seq(sets, bands).flatMap(_.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation match {
         case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
         case _ => Seq()
@@ -98,6 +99,26 @@ class MinhashIndexSpec extends AnyFunSuite {
     assert(scansOf(probe, "documents") < scansOf(direct, "documents"),
       s"probe ${scansOf(probe, "documents")} vs direct ${scansOf(direct, "documents")}")
     // both index frames come off disk
-    assert(scansOf(probe, "bands") >= 1 && scansOf(probe, "shingles") >= 1)
+    assert(scansOf(probe, "bands") >= 1 && scansOf(probe, "sets") >= 1)
+  }
+
+  test("an index with bands/ but no sets/ (the older shingles/ layout) " +
+    "fails loudly on probe and on append, asking for a rebuild") {
+    val old = Files.createTempDirectory("graft_mhold").toString
+    corpus.filter(col("doc_id") < 20)
+      .select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
+      .write.parquet(s"$old/shingles")
+    Dedup.minhashIndexFrames(Dedup.minhashSigned(
+        corpus.filter(col("doc_id") < 20)))._2
+      .write.partitionBy("band").parquet(s"$old/bands")
+    for (attempt <- Seq[() => Unit](
+        () => Dedup.minhashJoinFromIndex(spark, batch, old, 0.7).collect(),
+        () => Dedup.appendToMinhashIndex(batch, old))) {
+      val e = intercept[IllegalArgumentException](attempt())
+      assert(e.getMessage.contains("no sets/") &&
+        e.getMessage.contains("rebuild"), e.getMessage)
+    }
+    assert(!new java.io.File(s"$old/sets").exists,
+      "a failed append must write nothing")
   }
 }

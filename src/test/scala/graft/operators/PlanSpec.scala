@@ -574,4 +574,38 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin")
       && !p.contains("CartesianProduct"), p)
   }
+
+  test("MinHash near-dup per batch: word_shingles, hashed_set and " +
+    "minhash_bands run once each per doc, and not at all in the probe or " +
+    "the index write over the cut") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.functions.col
+    import graft.Materialize.MatOps
+    import graft.functions.{HashedSetKernel, MinhashBandKernel, ShingleKernel}
+    val kernels = Seq(ShingleKernel, HashedSetKernel, MinhashBandKernel)
+      .map(_.getClass)
+    // kernel calls in the optimized plan, after constraint inference
+    // and filter pushdown have had their chance to copy them
+    def calls(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case s: StaticInvoke if kernels.contains(s.staticObject) =>
+          s.staticObject.getSimpleName
+      }))
+    val docs = graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+    val idx = java.nio.file.Files.createTempDirectory("graft_plan_mh").toString
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 10 =!= 7), idx)
+    val signed = Dedup.minhashSigned(docs.filter(col("doc_id") % 10 === 7))
+    assert(calls(signed).sorted ==
+      Seq("HashedSetKernel$", "MinhashBandKernel$", "ShingleKernel$"),
+      calls(signed))
+    val cut = signed.cutLineage()
+    val probe = Dedup.minhashProbe(cut, Some(idx), withinBatch = true, 0.7)
+    val (sets, bands) = Dedup.minhashIndexFrames(cut)
+    for (df <- Seq(probe, sets, bands)) assert(calls(df).isEmpty, calls(df))
+    // the hazard the cut closes: over the uncut frame every branch, and
+    // every inferred isnotnull filter on a kernel column, re-runs a kernel
+    assert(calls(Dedup.minhashProbe(signed, Some(idx), withinBatch = true,
+      0.7)).size > 3)
+  }
 }

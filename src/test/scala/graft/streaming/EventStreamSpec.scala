@@ -858,16 +858,43 @@ class EventStreamSpec extends AnyFunSuite {
     val evalSet = evalTexts.zipWithIndex.map { case (t, i) =>
       (20L * (i + 1), t, "s0", "en")
     }.toDF("doc_id", "text", "source", "lang")
+    // Spark jobs per batch: the listener bus is asynchronous, so after
+    // each batch a marker job runs on this thread; once its start event
+    // arrives, every job of the batch has been counted
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == "census-marker"))
+          marker.put(jobs.getAndSet(0))
+        else jobs.incrementAndGet()
+    }
+    def jobsSinceMarker(): Int = {
+      spark.sparkContext.setJobGroup("census-marker", "census marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      marker.take()
+    }
     val input = MemoryStream[(Long, String, String, String)]
     val q = EventStream.curationSink(
       input.toDF().toDF("doc_id", "text", "source", "lang"), evalSet,
       root.resolve("idx").toString, root.resolve("out").toString,
       root.resolve("ck").toString)
-    val compiles = try batches.map { b =>
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      input.addData(b: _*); q.processAllAvailable()
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-    } finally q.stop()
+    spark.sparkContext.addSparkListener(listener)
+    val (compiles, jobCounts) = try {
+      jobsSinceMarker()
+      batches.map { b =>
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        input.addData(b: _*); q.processAllAvailable()
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+          jobsSinceMarker())
+      }.unzip
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
     val ledger = spark.read.parquet(root.resolve("out/ledger").toString)
       .collect().map(r => (r.getAs[String]("stage"),
         r.getAs[Int]("ingest_batch")) -> r.getAs[Long]("n_docs")).toMap
@@ -876,6 +903,9 @@ class EventStreamSpec extends AnyFunSuite {
         ledger(("4_dedup", b)) < ledger(("3_decontam", b))),
       s"every gate must drop docs in every batch: $ledger")
     assert(compiles.last <= 30, s"classes compiled per batch: $compiles")
+    // a steady batch runs 48 jobs here (56 before the near-dup stage
+    // became one band join over the decontam cut)
+    assert(jobCounts.last <= 52, s"Spark jobs per batch: $jobCounts")
   }
 
   test("curationSink with the LM stage: streamed admissions equal the " +
