@@ -1331,26 +1331,42 @@ object Dedup {
     clustersFromPairs(
       minhashNearDup(spark, dir, threshold).select(col("da"), col("db")))
 
-  /** Min-label propagation WITH pointer doubling over an undirected edge
-    * list (da, db) → one (doc_id, cluster_id) row per node that appears
-    * in any pair.
+  /** Connected components over an undirected edge list (da, db) → one
+    * (doc_id, cluster_id) row per node that appears in any pair, each
+    * node labeled with the smallest id in its component.
     *
-    * Each round does two things: (1) neighbor hop — every node takes the
-    * min of its own label and its neighbors' labels; (2) pointer jump —
-    * every node then replaces its label with its LABEL'S label. Labels
-    * are always node ids (they start as own-id and only ever move down
-    * via min over node ids), so the jump is a self-join of the label
-    * frame. The hop alone converges in O(component diameter) rounds —
-    * fine for dense near-dup clusters, but an adversarial chain A≈B≈C≈…
-    * of length d would take d rounds. The jump halves the remaining
-    * label-to-root distance each round, so the fixpoint arrives in
-    * O(log d) rounds regardless of shape (the classic pointer-doubling
-    * argument; cf. Kiveris et al., "Connected Components in MapReduce
-    * and Beyond"). Per-round cost: one edge join + one min-aggregate
-    * (map-side combinable) + one label self-join.
-    * `localCheckpoint` truncates lineage per round (same rationale as
-    * [[Similarity.kmeansCodebook]]); the convergence check rides on the
-    * checkpoint materialization instead of a second pass.
+    * Two paths, chosen by input size. The pair list is cut and counted
+    * once; if it fits under `spark.sql.autoBroadcastJoinThreshold` (row
+    * count × Spark's per-row size estimate), it is collected and solved
+    * on the driver with a union-find over primitive arrays, and the
+    * result is a local frame already sorted by doc_id. That is the size
+    * at which the loop below would broadcast its pair-derived frames
+    * every round anyway, so the pairs travel through the driver either
+    * way; a threshold of -1 (broadcast off) always runs the loop. Ids
+    * other than int or bigint also take the loop.
+    *
+    * The loop is min-label propagation WITH pointer doubling. Each round
+    * does two things: (1) neighbor hop — every node takes the min of its
+    * own label and its neighbors' labels; (2) pointer jump — every node
+    * then replaces its label with its LABEL'S label. Labels are always
+    * node ids (they start as own-id and only ever move down via min over
+    * node ids), so the jump is a self-join of the label frame. The hop
+    * alone converges in O(component diameter) rounds — fine for dense
+    * near-dup clusters, but an adversarial chain A≈B≈C≈… of length d
+    * would take d rounds. The jump halves the remaining label-to-root
+    * distance each round, so the fixpoint arrives in O(log d) rounds
+    * regardless of shape (the classic pointer-doubling argument; cf.
+    * Kiveris et al., "Connected Components in MapReduce and Beyond").
+    * Per-round cost: one edge join + one min-aggregate (map-side
+    * combinable) + one label self-join. `localCheckpoint` truncates
+    * lineage per round (same rationale as [[Similarity.kmeansCodebook]]);
+    * the convergence check rides on the checkpoint materialization
+    * instead of a second pass.
+    *
+    * A NULL endpoint gives both paths the same answer: the non-NULL
+    * endpoint is a node, a NULL node appears only when some pair pairs
+    * it with a non-NULL id, and then carries the smallest label among
+    * those ids' components; (NULL, NULL) pairs add nothing.
     */
   def clustersFromPairs(pairs: DataFrame): DataFrame =
     clustersFromPairsCounted(pairs)._1
@@ -1418,8 +1434,9 @@ object Dedup {
       .orderBy(col("da"), col("db"))
   }
 
-  /** [[clustersFromPairs]] plus the number of rounds it took — exposed so
-    * specs can assert the O(log d) convergence bound on chain graphs.
+  /** [[clustersFromPairs]] plus the number of loop rounds it took (0 when
+    * the pair list was empty or solved on the driver) — exposed so specs
+    * can assert the O(log d) convergence bound on chain graphs.
     */
   private[graft] def clustersFromPairsCounted(
       pairs: DataFrame): (DataFrame, Int) = {
@@ -1428,19 +1445,35 @@ object Dedup {
     // pipeline (LSH + verify) would run once per branch. The count is
     // the cut's materializer, and an empty list (a clean batch) returns
     // here as the empty projection of that one cut, with no rounds run
+    import org.apache.spark.sql.types.{IntegerType, LongType}
     val p = pairs.cutLineage()
-    if (graft.Materialize.count(p) == 0)
+    val nPairs = graft.Materialize.count(p)
+    if (nPairs == 0)
       return (p.select(col("da").as("doc_id"), col("db").as("cluster_id")), 0)
-    val edges = p.select(col("da").as("a"), col("db").as("b"))
+    val mirrored = p.select(col("da").as("a"), col("db").as("b"))
       .union(p.select(col("db").as("a"), col("da").as("b")))
-      .cutLineage(eager = true)
+    val node = mirrored.schema("a")
+    val ends = p.select(col("da"), col("db"))
+    val rowBytes = org.apache.spark.sql.catalyst.plans.logical
+      .statsEstimation.EstimationUtils
+      .getSizePerRow(ends.queryExecution.analyzed.output)
+    val threshold = p.queryExecution.sparkSession.sessionState.conf
+      .autoBroadcastJoinThreshold
+    if (Seq(IntegerType, LongType).contains(node.dataType) &&
+        BigInt(nPairs) * rowBytes <= threshold) {
+      val local = componentsOnDriver(ends, node)
+      graft.Materialize.release(p)
+      return (local, 0)
+    }
+    val edges = mirrored.cutLineage(eager = true)
     // LAZY local checkpoints inside the loop: the convergence sum below
     // is then also the materializer, so no round pays a separate
     // eager-checkpoint job. Lineage still truncates every round — the
     // checkpoint lands when the sum's job finishes. A round still runs
-    // 6 to 9 jobs on the pairs of a few hundred docs: making the cut
-    // runs the round's shuffle map stages and broadcasts (AQE executes
-    // them when the cut's RDD is built), then the sum runs one.
+    // several jobs (6 to 9 measured on the pairs of a few hundred docs):
+    // making the cut runs the round's shuffle map stages and broadcasts
+    // (AQE executes them when the cut's RDD is built), then the sum
+    // runs one
     var labels = edges.select(col("a").as("n")).distinct()
       .withColumn("lbl", col("n"))
       .cutLineage()
@@ -1451,11 +1484,16 @@ object Dedup {
     // a per-round shuffle join against the previous labels. DECIMAL(38,0)
     // keeps the sum exact out to ~10²⁶ node-ids-times-rows — far past any
     // corpus (int64 would overflow at ~10⁹ docs with 10¹²-range ids).
-    // A NULL label counts as 0. One RDD fold, one job (as
-    // Materialize.count): `agg(sum).head` plans a partial-aggregate
-    // shuffle and pays a map job plus a result job
+    // The NULL node is left out of the sum: its label rises from NULL on
+    // its first hop, which could cancel a decrease elsewhere and stop
+    // the loop early, and since no join leads out of it the other nodes
+    // reach their fixpoint without it (its own label is then settled in
+    // the same round). One RDD fold, one job (as Materialize.count):
+    // `agg(sum).head` plans a partial-aggregate shuffle and pays a map
+    // job plus a result job
     def lblSum(df: DataFrame): java.math.BigDecimal =
-      df.select(col("lbl").cast("decimal(38,0)")).queryExecution.toRdd
+      df.filter(col("n").isNotNull)
+        .select(col("lbl").cast("decimal(38,0)")).queryExecution.toRdd
         .map(r => if (r.isNullAt(0)) java.math.BigDecimal.ZERO
           else r.getDecimal(0, 38, 0).toJavaBigDecimal)
         .fold(java.math.BigDecimal.ZERO)(_ add _)
@@ -1488,6 +1526,77 @@ object Dedup {
     Seq(p, edges).foreach(graft.Materialize.release)
     (labels.select(col("n").as("doc_id"), col("lbl").as("cluster_id"))
       .orderBy(col("doc_id")), rounds)
+  }
+
+  /** [[clustersFromPairs]] for a pair list small enough to collect: one
+    * job ships each partition's endpoints as primitive arrays, and a
+    * union-find over the sorted distinct ids (an int parent array, the
+    * smaller root always wins, so a root is its component's smallest id)
+    * labels every node. The rows come back sorted by doc_id in a local
+    * frame typed like the loop's output, so consumers see exact stats.
+    */
+  private def componentsOnDriver(ends: DataFrame,
+      node: org.apache.spark.sql.types.StructField): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    // per pair: endpoint values (0 for NULL) and a NULL mask, bit 0 for
+    // da and bit 1 for db
+    val parts = ends.select(col("da").cast("bigint"), col("db").cast("bigint"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val a = Array.newBuilder[Long]
+        val b = Array.newBuilder[Long]
+        val mask = Array.newBuilder[Byte]
+        rows.foreach { r =>
+          a += (if (r.isNullAt(0)) 0L else r.getLong(0))
+          b += (if (r.isNullAt(1)) 0L else r.getLong(1))
+          mask += ((if (r.isNullAt(0)) 1 else 0) |
+            (if (r.isNullAt(1)) 2 else 0)).toByte
+        }
+        Iterator((a.result(), b.result(), mask.result()))
+      }.collect()
+    val a = Array.concat(parts.map(_._1).toIndexedSeq: _*)
+    val b = Array.concat(parts.map(_._2).toIndexedSeq: _*)
+    val mask = Array.concat(parts.map(_._3).toIndexedSeq: _*)
+    // sorted distinct non-NULL ids; a node is its index in `ids`
+    val all = new Array[Long](2 * a.length)
+    var m = 0
+    for (j <- a.indices) {
+      if ((mask(j) & 1) == 0) { all(m) = a(j); m += 1 }
+      if ((mask(j) & 2) == 0) { all(m) = b(j); m += 1 }
+    }
+    java.util.Arrays.sort(all, 0, m)
+    var nIds = 0
+    for (i <- 0 until m)
+      if (nIds == 0 || all(i) != all(nIds - 1)) { all(nIds) = all(i); nIds += 1 }
+    val ids = java.util.Arrays.copyOf(all, nIds)
+    def at(id: Long) = java.util.Arrays.binarySearch(ids, id)
+    val parent = Array.tabulate(nIds)(identity)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    for (j <- a.indices if mask(j) == 0) {
+      val ra = find(at(a(j)))
+      val rb = find(at(b(j)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // the NULL node: one exists where a pair joins NULL to an id, and
+    // takes the smallest root among those ids (the loop's min-label hop
+    // reaches a NULL node, but no join key ever reaches out of it)
+    var nullRoot = -1
+    for (j <- a.indices if mask(j) == 1 || mask(j) == 2) {
+      val r = find(at(if (mask(j) == 1) b(j) else a(j)))
+      if (nullRoot < 0 || r < nullRoot) nullRoot = r
+    }
+    val box: Long => Any =
+      if (node.dataType == IntegerType) _.toInt else identity
+    val rows = new java.util.ArrayList[Row](nIds + 1)
+    if (nullRoot >= 0) rows.add(Row(null, box(ids(nullRoot))))
+    for (i <- 0 until nIds) rows.add(Row(box(ids(i)), box(ids(find(i)))))
+    ends.sparkSession.createDataFrame(rows, StructType(Seq(
+      node.copy(name = "doc_id"),
+      StructField("cluster_id", node.dataType, nullable = true))))
   }
 
   /** The last step of the dedup story: pick each cluster's SURVIVOR —

@@ -5,9 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge lists, sharing the design rules of
-  * [[Dedup.clustersFromPairs]] (pointer-doubling CC): no driver-side
-  * collect of graph data, lineage truncated per round, and no floating
-  * point anywhere in the iteration.
+  * [[Dedup.clustersFromPairs]]'s pointer-doubling loop: graph data stays
+  * on the executors, lineage is truncated per round, and no floating
+  * point appears anywhere in the iteration. The one driver-side collect
+  * is [[Dedup.clustersFromPairs]]' own, for pair lists under the
+  * broadcast threshold, which the loop's joins would ship through the
+  * driver anyway.
   */
 object Graph {
 
@@ -213,7 +216,10 @@ object Graph {
           least(col("dist"), col("nd")).as("dist"),
           (!(col("dist") <=> least(col("dist"), col("nd")))).as("chg"))
         .cutLineage()
-      changed = next.agg(sum(when(col("chg"), 1L).otherwise(0L))).head.getLong(0)
+      // one RDD fold, one job (as Materialize.count); `agg(sum).head`
+      // pays a partial-aggregate map job plus a result job
+      changed = next.select(col("chg")).queryExecution.toRdd
+        .map(r => if (r.getBoolean(0)) 1L else 0L).fold(0L)(_ + _)
       state = next.drop("chg")
       rounds += 1
     }

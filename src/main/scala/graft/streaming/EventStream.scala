@@ -1449,7 +1449,12 @@ object EventStream {
             Dedup.writeMinhashFrames(admitted, indexPath,
               if (idxExists) "append" else "overwrite")
           }
-          (Seq(qual, clean, pairs, clusters, admitted, landed) ++
+          // a broadcast-sized pair list comes back as a local frame,
+          // which holds no cut to release
+          val clustersCut = !clusters.queryExecution.analyzed
+            .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+          (Seq(qual, clean, pairs, admitted, landed) ++
+            (if (clustersCut) Seq(clusters) else Nil) ++
             (if (lmModelPath.isDefined) Seq(fluent) else Nil))
             .foreach(graft.Materialize.release)
         }

@@ -7,8 +7,15 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.col
 import org.scalatest.Assertions
 
-/** The two-path check every native kernel pin runs its frame through. */
+/** The two-path checks: the one every native kernel pin runs its frame
+  * through, and the one for connected components.
+  */
 object KernelPaths extends AdaptiveSparkPlanHelper with Assertions {
+
+  /** Broadcast threshold setting that sends
+    * [[graft.operators.Dedup.clustersFromPairs]] down its loop.
+    */
+  val LoopOnly = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   /** Runs a kernel pin's frame on both evaluation paths and returns its
     * rows. The first run evaluates interpreted: whole-stage codegen and
@@ -48,7 +55,31 @@ object KernelPaths extends AdaptiveSparkPlanHelper with Assertions {
     interpreted
   }
 
-  private def withConf[T](df: DataFrame, kvs: Seq[(String, String)])(
+  /** Runs [[graft.operators.Dedup.clustersFromPairs]] on a non-empty
+    * pair list down both of its paths and returns the rows. At the
+    * session's broadcast threshold the pairs must be solved on the
+    * driver (a local frame, no loop rounds); under [[LoopOnly]] the loop
+    * must run. Schemas and rows, in order, must be equal.
+    */
+  def componentPaths(pairs: DataFrame): Array[Row] = {
+    import graft.operators.Dedup
+    val (local, noRounds) = Dedup.clustersFromPairsCounted(pairs)
+    assert(noRounds == 0 && local.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      s"expected the driver path:\n${local.queryExecution.analyzed}")
+    val (loop, rounds, loopRows) = withConf(pairs, LoopOnly) {
+      val (df, r) = Dedup.clustersFromPairsCounted(pairs)
+      (df, r, df.collect())
+    }
+    assert(rounds > 0, "expected the pointer-doubling loop")
+    assert(local.schema == loop.schema)
+    val localRows = local.collect()
+    assert(localRows.toSeq == loopRows.toSeq,
+      "driver and loop components differ")
+    localRows
+  }
+
+  private[graft] def withConf[T](df: DataFrame, kvs: Seq[(String, String)])(
       body: => T): T = {
     val conf = df.sparkSession.conf
     val prev = kvs.map { case (k, _) => k -> conf.getOption(k) }

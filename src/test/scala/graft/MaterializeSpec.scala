@@ -24,6 +24,8 @@ class MaterializeSpec extends AnyFunSuite {
       "multi-cut operator (connected components)") {
     val results = Seq("local", "reliable", "persist").map { m =>
       val s = sessionWithMode(m)
+      // broadcast off, so these few pairs take the loop, not the driver
+      KernelPaths.LoopOnly.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       // two chains and a singleton exercise >1 pointer-doubling round
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
@@ -82,14 +84,21 @@ class MaterializeSpec extends AnyFunSuite {
     // a chain takes more than one round, so a round's labels are released
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("da", "db")
-    val before = persisted()
-    val clusters = Dedup.clustersFromPairs(pairs)
-    val returned = clusters.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    assert(persisted() -- before == returned,
-      s"left behind: ${persisted() -- before -- returned}")
-    assert(clusters.select("cluster_id").distinct().count() == 2)
+    // both paths: the loop (broadcast off) returns its last labels cut,
+    // the driver path a local frame holding no cut at all
+    for (conf <- Seq(KernelPaths.LoopOnly, Nil))
+        KernelPaths.withConf(pairs, conf) {
+      val before = persisted()
+      val clusters = Dedup.clustersFromPairs(pairs)
+      val returned = clusters.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      val cuts = if (conf.nonEmpty) 1 else 0
+      assert(returned.size == cuts, s"$cuts cut(s) expected with $conf")
+      assert(persisted() -- before == returned,
+        s"left behind: ${persisted() -- before -- returned}")
+      assert(clusters.select("cluster_id").distinct().count() == 2)
+    }
     val docs = (1L to 6L).map(i =>
       (i, s"doc $i words alpha beta gamma delta epsilon zeta eta"))
       .toDF("doc_id", "text")

@@ -147,8 +147,12 @@ class SamplingSpec extends AnyFunSuite {
     val chain = (0L until 63L).map(i => Row(i, i + 1))
     val pairs = spark.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(chain).asJava, schema)
-    val (clusters, rounds) = Dedup.clustersFromPairsCounted(pairs)
-    val got = clusters.collect().map(r => r.getLong(0) -> r.getLong(1))
+    // broadcast off: 63 pairs would otherwise be solved on the driver
+    val (got, rounds) = graft.KernelPaths.withConf(pairs,
+        graft.KernelPaths.LoopOnly) {
+      val (clusters, rounds) = Dedup.clustersFromPairsCounted(pairs)
+      (clusters.collect().map(r => r.getLong(0) -> r.getLong(1)), rounds)
+    }
     assert(got.length == 64 && got.forall(_._2 == 0L),
       "chain must collapse to one cluster rooted at 0")
     assert(rounds <= 10,
