@@ -1022,7 +1022,7 @@ object Aggregates {
     val total = counts.agg(sum(col("n_obs")).as("n_total"))
     val obsShare =
       coalesce(col("n_obs"), lit(0L)).cast("double") / col("n_total")
-    broadcast(expected).join(counts, Seq("digit"), "left")
+    expected.join(counts, Seq("digit"), "left")
       .crossJoin(broadcast(total))
       .select(col("digit"), coalesce(col("n_obs"), lit(0L)).as("n_obs"),
         obsShare.as("obs_share"), col("exp_share"),

@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.Materialize.MatOps
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** Structured Streaming surface. The reference is daily-batch only
   * (SURVEY.md §2.4 "Streaming: None"), so this is engine capability beyond
@@ -356,21 +357,52 @@ object EventStream {
       col("source"), col("lang"))
   }
 
-  /** Stream → warehouse sink via foreachBatch: each micro-batch of the
-    * (Update-mode) hourly aggregate overwrites only the panes it touched —
-    * dynamic partition overwrite, so late updates replace a pane in place
-    * and re-running a batch is idempotent. This is the serving-table
-    * pattern the reference implements as SQLite truncate+reload (S9),
-    * minus the full-table rewrite.
-    *
-    * The physical partitioning is (hour, event_type) — the SAME key as
-    * the aggregation groups, which is load-bearing: Update mode emits
-    * only changed groups, so overwrite granularity coarser than group
-    * granularity (e.g. hour alone) would silently drop an hour's
-    * unchanged event types whenever one type in that hour updates.
-    *
-    * Returns the started query; the caller owns its lifecycle.
+  /** The one micro-batch skeleton of every sink below: a `foreachBatch`
+    * query on `checkpoint` that counts each batch once
+    * ([[graft.Materialize.count]], one job), skips an empty batch, and
+    * hands `body` the batch, its id and its row count. Returns the
+    * started query; the caller owns its lifecycle.
     */
+  private def microBatch(df: DataFrame, checkpoint: String,
+      mode: OutputMode = OutputMode.Append)(
+      body: (DataFrame, Long, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val n = graft.Materialize.count(batch)
+        if (n > 0) body(batch, batchId, n)
+      }
+      .start()
+
+  /** Land `frame` as batch `batchId`'s `ingest_batch=<batchId>` partition
+    * of `path`, retract-then-write. foreachBatch is at-least-once, so a
+    * replayed batch must rewrite its own partition instead of landing its
+    * rows a second time: the write is a per-writer DYNAMIC partition
+    * overwrite. Dynamic overwrite alone only replaces the partitions the
+    * new write touches, so a replay whose rows shrink to zero (an index,
+    * model, band or phrase-list refresh racing the redelivery) would
+    * write nothing and leave the previous attempt's rows standing.
+    * Deleting the partition first makes the rewrite unconditional: the
+    * batch's on-disk state is exactly its current rows, empty included.
+    * One idempotent FS delete per call.
+    *
+    * Precondition: `frame` must not lazily read the partition being
+    * retracted. A frame derived from it must be cut first, with a cut
+    * that drops its lineage ([[ownAdmitted]]'s `cutForOverwrite`, or a
+    * counted lazy cut in `local`/`reliable` materialize mode).
+    */
+  private def landBatch(frame: DataFrame, batchId: Long,
+      path: String): Unit = {
+    val part = new org.apache.hadoop.fs.Path(s"$path/ingest_batch=$batchId")
+    part.getFileSystem(frame.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(part, true)
+    frame.withColumn("ingest_batch", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_batch").parquet(path)
+  }
+
   /** Streaming CDC apply: maintain a parquet serving table from a change
     * feed — the streaming face of [[graft.operators.Cdc.mergeUpsert]] and
     * the true incremental replacement for the reference's
@@ -396,40 +428,57 @@ object EventStream {
     */
   def cdcApplyToParquet(changes: DataFrame, tablePath: String,
       checkpoint: String, keys: Seq[String], seqCol: String = "seq",
-      opCol: String = "_op"): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val tableCols = batch.columns.filterNot(_ == opCol)
-          // "table exists" = directory holding at least one part file (a
-          // bare empty directory would fail parquet schema inference);
-          // probed through the shared Hadoop-FS helper
-          // (graft.sources.Sinks) so URI-form and non-local paths
-          // (file://, hdfs://, s3a://) behave the same here as in the
-          // compaction pass.
-          val base =
-            if (graft.sources.Sinks.hasPartFiles(spark, tablePath))
-              spark.read.parquet(tablePath)
-            else batch.sparkSession.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              batch.drop(opCol).schema)
-          val latest = graft.operators.Cdc.latestPerKey(batch, keys, seqCol)
-          val baseSeq = base.select(
-            keys.map(col) :+ col(seqCol).as("_base_seq"): _*)
-          val eligible = latest.join(baseSeq, keys, "left")
-            .filter(col("_base_seq").isNull || col(seqCol) >= col("_base_seq"))
-            .drop("_base_seq")
-          val merged = graft.operators.Cdc
-            .mergeUpsert(base, eligible, keys, opCol)
-            .cutForOverwrite()
-          merged.select(tableCols.map(col): _*)
-            .write.mode("overwrite").parquet(tablePath)
-        }
-      }
-      .start()
+      opCol: String = "_op"): StreamingQuery =
+    microBatch(changes, checkpoint) { (batch, _, _) =>
+      val spark = batch.sparkSession
+      val tableCols = batch.columns.filterNot(_ == opCol)
+      // "table exists" = directory holding at least one part file (a
+      // bare empty directory would fail parquet schema inference);
+      // probed through the shared Hadoop-FS helper
+      // (graft.sources.Sinks) so URI-form and non-local paths
+      // (file://, hdfs://, s3a://) behave the same here as in the
+      // compaction pass.
+      val base =
+        if (graft.sources.Sinks.hasPartFiles(spark, tablePath))
+          spark.read.parquet(tablePath)
+        else spark.createDataFrame(new java.util.ArrayList[Row](),
+          batch.drop(opCol).schema)
+      val latest = graft.operators.Cdc.latestPerKey(batch, keys, seqCol)
+      val baseSeq = base.select(
+        keys.map(col) :+ col(seqCol).as("_base_seq"): _*)
+      val eligible = latest.join(baseSeq, keys, "left")
+        .filter(col("_base_seq").isNull || col(seqCol) >= col("_base_seq"))
+        .drop("_base_seq")
+      val merged = graft.operators.Cdc
+        .mergeUpsert(base, eligible, keys, opCol)
+        .cutForOverwrite()
+      merged.select(tableCols.map(col): _*)
+        .write.mode("overwrite").parquet(tablePath)
+    }
+
+  /** Replay guard of the additive maintainers ([[cmsMaintain]],
+    * [[kmvMaintain]], [[mgMaintain]], [[quantileMaintain]]): their
+    * merges are not idempotent, so each stored artifact carries the id
+    * of the last batch merged into it, and `merge` runs only when batch
+    * `batchId` is newer. `merge` gets the stored artifact (None before
+    * the first batch) as a LAZY read of `path`, so whatever it derives
+    * from it must be cut before it overwrites `path`.
+    */
+  private def unlessApplied(spark: SparkSession, path: String,
+      batchId: Long)(merge: Option[DataFrame] => Unit): Unit = {
+    val stored =
+      if (graft.sources.Sinks.hasPartFiles(spark, path))
+        Some(spark.read.parquet(path))
+      else None
+    // max() over zero rows is NULL (an interrupted overwrite can leave
+    // part files with no rows) — read it boxed and treat null as "no
+    // sketch yet" so the restart rebuilds instead of throwing NPE on
+    // every retry
+    val applied = stored.exists(s =>
+      Option(s.select(max(col("batch_id"))).head.get(0))
+        .exists(_.asInstanceOf[Long] >= batchId))
+    if (!applied) merge(stored)
+  }
 
   /** Incremental Count-Min maintenance: keep a running frequency sketch
     * of a stream's `itemCol` as a stored parquet artifact. Per
@@ -461,41 +510,23 @@ object EventStream {
     * query; the caller owns its lifecycle.
     */
   def cmsMaintain(events: DataFrame, itemCol: String, sketchPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     import graft.functions.{CountMinBuild, CountMinMerge}
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val cmsBuild = udaf(CountMinBuild)
-          val cmsMerge = udaf(CountMinMerge)
-          val batchSk = batch.agg(cmsBuild(col(itemCol)).as("sk"))
-            .withColumn("batch_id", lit(batchId))
-          val stored =
-            if (graft.sources.Sinks.hasPartFiles(spark, sketchPath))
-              Some(spark.read.parquet(sketchPath).cutForOverwrite())
-            else None
-          // max() over zero rows is NULL (an interrupted overwrite can
-          // leave part files with no rows) — read it boxed and treat
-          // null as "no sketch yet" so the restart rebuilds instead of
-          // throwing NPE on every retry
-          val alreadyApplied = stored.exists(s =>
-            Option(s.select(max(col("batch_id"))).head.get(0))
-              .exists(_.asInstanceOf[Long] >= batchId))
-          if (!alreadyApplied) {
-            val merged = stored match {
-              case Some(s) => s.unionAll(batchSk)
-                .agg(cmsMerge(col("sk")).as("sk"), max(col("batch_id")).as("batch_id"))
-              case None => batchSk
-            }
-            merged.cutForOverwrite()
-              .write.mode("overwrite").parquet(sketchPath)
-          }
+    microBatch(events, checkpoint) { (batch, batchId, _) =>
+      val cmsBuild = udaf(CountMinBuild)
+      val cmsMerge = udaf(CountMinMerge)
+      val batchSk = batch.agg(cmsBuild(col(itemCol)).as("sk"))
+        .withColumn("batch_id", lit(batchId))
+      unlessApplied(batch.sparkSession, sketchPath, batchId) { stored =>
+        val merged = stored match {
+          case Some(s) => s.unionAll(batchSk)
+            .agg(cmsMerge(col("sk")).as("sk"), max(col("batch_id")).as("batch_id"))
+          case None => batchSk
         }
+        merged.cutForOverwrite()
+          .write.mode("overwrite").parquet(sketchPath)
       }
-      .start()
+    }
   }
 
   /** Incremental covariance maintenance — the SECOND-MOMENT member of
@@ -520,51 +551,45 @@ object EventStream {
     * [[Similarity.triangleMicroMoments]]'s documented n-shaped bound.
     */
   def covMaintain(vectors: DataFrame, artifactPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val x = batch.select(col("v"))
-          val (tri, n) = graft.operators.Similarity.triangleMicroMoments(x)
-          val dims = graft.operators.Similarity.dimMicroSums(x)
-          // head() drains the read before the overwrite below, so no
-          // lazy plan ever reads the files being replaced (the
-          // cutForOverwrite concern, discharged by eager collection of
-          // the one-row artifact)
-          val stored =
-            if (graft.sources.Sinks.hasPartFiles(spark, artifactPath))
-              Some(spark.read.parquet(artifactPath).head())
-            else None
-          val alreadyApplied =
-            stored.exists(_.getAs[Long]("batch_id") >= batchId)
-          if (!alreadyApplied) {
-            val (mTri, mDims, mN) = stored match {
-              case Some(s) =>
-                // collected Seqs are list-like — materialize before the
-                // positional merge loops (the triangleMicroMoments lesson)
-                val st = s.getAs[Seq[Long]]("tri").toArray
-                val sd = s.getAs[Seq[Long]]("dims").toArray
-                require(st.length == tri.length && sd.length == dims.length,
-                  s"artifact dimensionality (${sd.length}) does not match " +
-                    s"the batch (${dims.length}) — moments cannot merge")
-                var k = 0
-                while (k < st.length) { st(k) += tri(k); k += 1 }
-                k = 0
-                while (k < sd.length) { sd(k) += dims(k); k += 1 }
-                (st, sd, s.getAs[Long]("n") + n)
-              case None => (tri, dims, n)
-            }
-            Seq((batchId, mN, mTri.toSeq, mDims.toSeq))
-              .toDF("batch_id", "n", "tri", "dims")
-              .write.mode("overwrite").parquet(artifactPath)
-          }
+      checkpoint: String): StreamingQuery =
+    microBatch(vectors, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val x = batch.select(col("v"))
+      val (tri, n) = graft.operators.Similarity.triangleMicroMoments(x)
+      val dims = graft.operators.Similarity.dimMicroSums(x)
+      // head() drains the read before the overwrite below, so no
+      // lazy plan ever reads the files being replaced (the
+      // cutForOverwrite concern, discharged by eager collection of
+      // the one-row artifact)
+      val stored =
+        if (graft.sources.Sinks.hasPartFiles(spark, artifactPath))
+          Some(spark.read.parquet(artifactPath).head())
+        else None
+      val alreadyApplied =
+        stored.exists(_.getAs[Long]("batch_id") >= batchId)
+      if (!alreadyApplied) {
+        val (mTri, mDims, mN) = stored match {
+          case Some(s) =>
+            // collected Seqs are list-like — materialize before the
+            // positional merge loops (the triangleMicroMoments lesson)
+            val st = s.getAs[Seq[Long]]("tri").toArray
+            val sd = s.getAs[Seq[Long]]("dims").toArray
+            require(st.length == tri.length && sd.length == dims.length,
+              s"artifact dimensionality (${sd.length}) does not match " +
+                s"the batch (${dims.length}) — moments cannot merge")
+            var k = 0
+            while (k < st.length) { st(k) += tri(k); k += 1 }
+            k = 0
+            while (k < sd.length) { sd(k) += dims(k); k += 1 }
+            (st, sd, s.getAs[Long]("n") + n)
+          case None => (tri, dims, n)
         }
+        Seq((batchId, mN, mTri.toSeq, mDims.toSeq))
+          .toDF("batch_id", "n", "tri", "dims")
+          .write.mode("overwrite").parquet(artifactPath)
       }
-      .start()
+    }
 
   /** Incremental n-gram LM maintenance — the COUNT-DICTIONARY member of
     * the artifact-maintainer family (CMS counts, KMV order statistics,
@@ -573,41 +598,30 @@ object EventStream {
     * micro-batch of (doc_id, text) documents is collapsed to its
     * (ord, gram, cnt) partial counts
     * ([[graft.operators.NgramLm.countsOn]] — model-sized, never
-    * corpus-sized) and lands as an `ingest_batch=<id>` partition under
-    * the model's `counts/` directory. Counts are mergeable sums, so
-    * serving ([[graft.operators.NgramLm.lmModelFromIndex]] re-sums per
-    * gram over the partials) is value-identical to a from-scratch
+    * corpus-sized) and lands as an `ingest_batch=<id>` partition
+    * ([[landBatch]]) under the model's `counts/` directory. Counts are
+    * mergeable sums, so serving
+    * ([[graft.operators.NgramLm.lmModelFromIndex]] re-sums per gram
+    * over the partials) is value-identical to a from-scratch
     * [[graft.operators.NgramLm.countsOn]] build over everything ever
     * streamed — the [[cmsMaintain]] contract, spec-pinned.
     *
     * Unlike the fixed-size sketch maintainers the stored state GROWS
     * (a Heaps-law-bounded dictionary, not a 32 KB sketch), so this
     * maintainer never rewrites it: each append is batch-sized, and
-    * replay safety needs no stored batch_id guard — DYNAMIC partition
-    * overwrite makes an at-least-once redelivery rewrite its own
-    * ingest_batch partition instead of double-counting, because
-    * partition identity IS the guard (the curation-sink discipline
-    * applied to model state). A maintained model owns its path:
-    * don't mix it with [[graft.operators.NgramLm.writeNgramLm]]'s
+    * replay safety needs no stored batch_id guard — the batch's
+    * partition is its guard ([[landBatch]]), so a redelivery rewrites
+    * its counts instead of double-counting. A maintained model owns its
+    * path: don't mix it with [[graft.operators.NgramLm.writeNgramLm]]'s
     * unpartitioned layout in one directory, or parquet partition
     * discovery rejects the union.
     */
   def lmMaintainSink(docs: DataFrame, modelPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.NgramLm.countsOn(batch.toDF())
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(modelPath + "/counts")
-        }
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      landBatch(graft.operators.NgramLm.countsOn(batch), batchId,
+        modelPath + "/counts")
+    }
 
   /** Streaming Stupid-Backoff quality gate — the BACKOFF sibling of
     * the bigram [[lmGateSink]] in the admission family's quality wing
@@ -629,50 +643,23 @@ object EventStream {
     * model joins — corpus-size-independent. Unlike the dedup gates, a
     * decision is a pure function of (batch, model): nothing this sink
     * admits feeds back into what it scores, so no own-batch replay
-    * exemption is needed — the batch's `ingest_batch` partition is
-    * DELETED then rewritten from the current survivor set, so an
-    * at-least-once redelivery rewrites its decisions even when a model
-    * refresh racing the replay shrinks the survivors to zero (dynamic
-    * overwrite alone would write no partition and leave the stale
-    * admissions standing). Consumers should treat an `outPath` with no
+    * exemption is needed — [[landBatch]] rewrites a redelivery's
+    * decisions even when a model refresh racing the replay shrinks the
+    * survivors to zero. Consumers should treat an `outPath` with no
     * part files yet as "nothing admitted" rather than scanning it —
     * parquet schema inference over an empty directory fails.
     */
   def sbGateSink(docs: DataFrame, modelPath: String, outPath: String,
-      checkpoint: String, minAvgMicro: Long = 100000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // Retract-then-write: dynamic partition overwrite only
-          // replaces partitions the NEW write touches, so a replayed
-          // batch that now admits ZERO docs (a model refresh racing an
-          // at-least-once redelivery) would write nothing and leave the
-          // stale previously-admitted partition standing — the one hole
-          // in "replay rewrites its decisions". Deleting this batch's
-          // partition path first makes the rewrite unconditional: the
-          // batch's on-disk state is exactly its current survivor set,
-          // empty included. One FS delete per batch, idempotent.
-          val part = new org.apache.hadoop.fs.Path(
-            s"$outPath/ingest_batch=$batchId")
-          part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(part, true)
-          val keep = graft.operators.NgramLm
-            .scoreOn(batch.toDF(),
-              graft.operators.NgramLm.lmModelFromIndex(spark, modelPath))
-            .filter(col("avg_micro") >= minAvgMicro)
-            .select(col("doc_id"))
-          batch.join(keep, Seq("doc_id"), "left_semi")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+      checkpoint: String, minAvgMicro: Long = 100000L): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val keep = graft.operators.NgramLm
+        .scoreOn(batch, graft.operators.NgramLm
+          .lmModelFromIndex(batch.sparkSession, modelPath))
+        .filter(col("avg_micro") >= minAvgMicro)
+        .select(col("doc_id"))
+      landBatch(batch.join(keep, Seq("doc_id"), "left_semi"), batchId,
+        outPath)
+    }
 
   /** Incremental KMV vocabulary-sketch maintenance — the order-statistic
     * sibling of [[cmsMaintain]]: each micro-batch's per-source bottom-k
@@ -688,43 +675,27 @@ object EventStream {
     * so the artifact is byte-stable under replay.
     */
   def kmvMaintain(docs: DataFrame, sketchPath: String, checkpoint: String,
-      k: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Aggregates
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val batchSk = Aggregates.kmvSketchOn(batch, k)
-            .withColumn("batch_id", lit(batchId))
-          val stored =
-            if (graft.sources.Sinks.hasPartFiles(spark, sketchPath))
-              Some(spark.read.parquet(sketchPath).cutForOverwrite())
-            else None
-          val alreadyApplied = stored.exists(s =>
-            Option(s.select(max(col("batch_id"))).head.get(0))
-              .exists(_.asInstanceOf[Long] >= batchId))
-          if (!alreadyApplied) {
-            val merged = stored match {
-              case Some(s) =>
-                val w = org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("source")).orderBy(col("h"))
-                s.unionByName(batchSk)
-                  .groupBy(col("source"), col("h"))
-                  .agg(min(col("batch_id")).as("batch_id"))
-                  .withColumn("r", row_number().over(w))
-                  .filter(col("r") <= k)
-                  .select(col("source"), col("h"), col("batch_id"))
-              case None => batchSk
-            }
-            merged.cutForOverwrite()
-              .write.mode("overwrite").parquet(sketchPath)
-          }
+      k: Int = 64): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val batchSk = graft.operators.Aggregates.kmvSketchOn(batch, k)
+        .withColumn("batch_id", lit(batchId))
+      unlessApplied(batch.sparkSession, sketchPath, batchId) { stored =>
+        val merged = stored match {
+          case Some(s) =>
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("source")).orderBy(col("h"))
+            s.unionByName(batchSk)
+              .groupBy(col("source"), col("h"))
+              .agg(min(col("batch_id")).as("batch_id"))
+              .withColumn("r", row_number().over(w))
+              .filter(col("r") <= k)
+              .select(col("source"), col("h"), col("batch_id"))
+          case None => batchSk
         }
+        merged.cutForOverwrite()
+          .write.mode("overwrite").parquet(sketchPath)
       }
-      .start()
-  }
+    }
 
   /** Incremental HLL register maintenance — the register-max member of
     * the artifact-maintainer family and the only IDEMPOTENT one: each
@@ -742,26 +713,20 @@ object EventStream {
     * serves distinct estimates from it without rescanning the stream.
     */
   def hllRegMaintain(orders: DataFrame, regPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    orders.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val batchRegs = graft.operators.Aggregates.hllTwinRegistersOn(batch)
-          val merged =
-            if (graft.sources.Sinks.hasPartFiles(spark, regPath))
-              spark.read.parquet(regPath).cutForOverwrite()
-                .unionByName(batchRegs)
-                .groupBy(col("o_orderstatus"), col("bucket"))
-                .agg(max(col("register")).as("register"))
-            else batchRegs
-          merged.cutForOverwrite()
-            .write.mode("overwrite").parquet(regPath)
-        }
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    microBatch(orders, checkpoint) { (batch, _, _) =>
+      val spark = batch.sparkSession
+      val batchRegs = graft.operators.Aggregates.hllTwinRegistersOn(batch)
+      val merged =
+        if (graft.sources.Sinks.hasPartFiles(spark, regPath))
+          spark.read.parquet(regPath)
+            .unionByName(batchRegs)
+            .groupBy(col("o_orderstatus"), col("bucket"))
+            .agg(max(col("register")).as("register"))
+        else batchRegs
+      merged.cutForOverwrite()
+        .write.mode("overwrite").parquet(regPath)
+    }
 
   /** Incremental Bloom set-bit maintenance — [[hllRegMaintain]]'s
     * membership sibling and the second idempotent maintainer: each
@@ -782,25 +747,19 @@ object EventStream {
     */
   def bloomBitsMaintain(keys: DataFrame, bitsPath: String,
       checkpoint: String, bits: Int = 4096,
-      k: Int = 3): org.apache.spark.sql.streaming.StreamingQuery =
-    keys.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val batchBits = graft.operators.Aggregates
-            .bloomTwinBits(batch.select(col("key")).distinct(), bits, k)
-          val merged =
-            if (graft.sources.Sinks.hasPartFiles(spark, bitsPath))
-              spark.read.parquet(bitsPath).cutForOverwrite()
-                .unionByName(batchBits).distinct()
-            else batchBits
-          merged.cutForOverwrite()
-            .write.mode("overwrite").parquet(bitsPath)
-        }
-      }
-      .start()
+      k: Int = 3): StreamingQuery =
+    microBatch(keys, checkpoint) { (batch, _, _) =>
+      val spark = batch.sparkSession
+      val batchBits = graft.operators.Aggregates
+        .bloomTwinBits(batch.select(col("key")).distinct(), bits, k)
+      val merged =
+        if (graft.sources.Sinks.hasPartFiles(spark, bitsPath))
+          spark.read.parquet(bitsPath)
+            .unionByName(batchBits).distinct()
+        else batchBits
+      merged.cutForOverwrite()
+        .write.mode("overwrite").parquet(bitsPath)
+    }
 
   /** Incremental Misra–Gries heavy-hitter maintenance — the
     * frequent-items sibling of [[kmvMaintain]]: each micro-batch is
@@ -820,48 +779,35 @@ object EventStream {
     * delivery.
     */
   def mgMaintain(docs: DataFrame, summaryPath: String, checkpoint: String,
-      k: Int = 256): org.apache.spark.sql.streaming.StreamingQuery = {
+      k: Int = 256): StreamingQuery = {
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val mg = new graft.functions.MisraGries(k)
-          val mgU = udaf(mg, ExpressionEncoder[String]())
-          val batchSummary: Map[String, Long] = batch
-            .select(explode(split(col("text"), " ")).as("term"))
-            .agg(mgU(col("term")))
-            .head.getAs[scala.collection.Map[String, Long]](0).toMap
-          val stored =
-            if (graft.sources.Sinks.hasPartFiles(spark, summaryPath))
-              Some(spark.read.parquet(summaryPath))
-            else None
-          val alreadyApplied = stored.exists(s =>
-            Option(s.select(max(col("batch_id"))).head.get(0))
-              .exists(_.asInstanceOf[Long] >= batchId))
-          if (!alreadyApplied) {
-            val storedMap: Map[String, Long] = stored
-              .map(_.select(col("term"), col("cnt")).collect()
-                .map(r => r.getString(0) -> r.getLong(1)).toMap)
-              .getOrElse(Map.empty)
-            // the merged frame is pure driver data (both summaries were
-            // already collected — bounded ≤k artifacts), so overwriting
-            // the stored dir needs no cutForOverwrite: nothing in this
-            // plan reads the files being replaced
-            // the artifact records its own k so consumers can validate
-            // the superset guarantee against THEIR support threshold
-            mg.merge(storedMap, batchSummary).toSeq
-              .toDF("term", "cnt")
-              .withColumn("batch_id", lit(batchId))
-              .withColumn("k", lit(k))
-              .write.mode("overwrite").parquet(summaryPath)
-          }
-        }
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val mg = new graft.functions.MisraGries(k)
+      val mgU = udaf(mg, ExpressionEncoder[String]())
+      val batchSummary: Map[String, Long] = batch
+        .select(explode(split(col("text"), " ")).as("term"))
+        .agg(mgU(col("term")))
+        .head.getAs[scala.collection.Map[String, Long]](0).toMap
+      unlessApplied(spark, summaryPath, batchId) { stored =>
+        val storedMap: Map[String, Long] = stored
+          .map(_.select(col("term"), col("cnt")).collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap)
+          .getOrElse(Map.empty)
+        // the merged frame is pure driver data (both summaries were
+        // already collected — bounded ≤k artifacts), so overwriting
+        // the stored dir needs no cutForOverwrite: nothing in this
+        // plan reads the files being replaced
+        // the artifact records its own k so consumers can validate
+        // the superset guarantee against THEIR support threshold
+        mg.merge(storedMap, batchSummary).toSeq
+          .toDF("term", "cnt")
+          .withColumn("batch_id", lit(batchId))
+          .withColumn("k", lit(k))
+          .write.mode("overwrite").parquet(summaryPath)
       }
-      .start()
+    }
   }
 
   /** Incremental quantile-sample maintenance — the value-carrying
@@ -883,54 +829,40 @@ object EventStream {
     */
   def quantileMaintain(rows: DataFrame, groupCol: String, keyCol: String,
       valueCol: String, sketchPath: String, checkpoint: String,
-      k: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
+      k: Int = 64): StreamingQuery = {
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val bk = udaf(new graft.functions.BottomKSample(k),
-            ExpressionEncoder[(String, Double)]())
-          val batchSk = batch
-            .select(col(groupCol).as("g"),
-              md5(col(keyCol).cast("string").cast("binary")).as("h"),
-              col(valueCol).cast("double").as("v"))
-            .groupBy(col("g")).agg(bk(col("h"), col("v")).as("sk"))
-            .select(col("g"), explode(col("sk")).as("e"))
-            .select(col("g"), col("e._1").as("h"), col("e._2").as("v"))
-            .withColumn("batch_id", lit(batchId))
-          val stored =
-            if (graft.sources.Sinks.hasPartFiles(spark, sketchPath))
-              Some(spark.read.parquet(sketchPath).cutForOverwrite())
-            else None
-          val alreadyApplied = stored.exists(s =>
-            Option(s.select(max(col("batch_id"))).head.get(0))
-              .exists(_.asInstanceOf[Long] >= batchId))
-          if (!alreadyApplied) {
-            val merged = stored match {
-              case Some(s) =>
-                val w = org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("g")).orderBy(col("h"), col("v"))
-                s.unionByName(batchSk)
-                  .groupBy(col("g"), col("h"), col("v"))
-                  .agg(min(col("batch_id")).as("batch_id"))
-                  .withColumn("r", row_number().over(w))
-                  .filter(col("r") <= k)
-                  .select(col("g"), col("h"), col("v"), col("batch_id"))
-              case None => batchSk
-            }
-            merged.cutForOverwrite()
-              .write.mode("overwrite").parquet(sketchPath)
-          }
+    microBatch(rows, checkpoint) { (batch, batchId, _) =>
+      val bk = udaf(new graft.functions.BottomKSample(k),
+        ExpressionEncoder[(String, Double)]())
+      val batchSk = batch
+        .select(col(groupCol).as("g"),
+          md5(col(keyCol).cast("string").cast("binary")).as("h"),
+          col(valueCol).cast("double").as("v"))
+        .groupBy(col("g")).agg(bk(col("h"), col("v")).as("sk"))
+        .select(col("g"), explode(col("sk")).as("e"))
+        .select(col("g"), col("e._1").as("h"), col("e._2").as("v"))
+        .withColumn("batch_id", lit(batchId))
+      unlessApplied(batch.sparkSession, sketchPath, batchId) { stored =>
+        val merged = stored match {
+          case Some(s) =>
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("g")).orderBy(col("h"), col("v"))
+            s.unionByName(batchSk)
+              .groupBy(col("g"), col("h"), col("v"))
+              .agg(min(col("batch_id")).as("batch_id"))
+              .withColumn("r", row_number().over(w))
+              .filter(col("r") <= k)
+              .select(col("g"), col("h"), col("v"), col("batch_id"))
+          case None => batchSk
         }
+        merged.cutForOverwrite()
+          .write.mode("overwrite").parquet(sketchPath)
       }
-      .start()
+    }
   }
 
   /** Ids a PRIOR ATTEMPT of this very batchId admitted — the gate's own
-    * `ingest_batch=<batchId>` output partition, which dynamic overwrite
+    * `ingest_batch=<batchId>` output partition, which [[landBatch]]
     * makes the authoritative per-batch admission record (the
     * [[curationSink]] `batches/` sidecar contract without an extra
     * write: survivors only ever exist in `outPath`, so anything the
@@ -942,9 +874,10 @@ object EventStream {
     * refreshes the gate does not control) reproduces its original
     * decisions instead of self-matching every survivor to zero, while a
     * doc REDELIVERED under a NEW batchId finds its own partition empty,
-    * still matches its earlier indexed copy, and drops. Eagerly
-    * materialized: the same partition is overwritten later in the
-    * batch, so the read must not stay lazy into the write.
+    * still matches its earlier indexed copy, and drops. Cut with
+    * `cutForOverwrite`, which drops the lineage in every materialize
+    * mode: [[landBatch]] deletes this very partition later in the
+    * batch, so nothing may recompute from it after that.
     */
   private def ownAdmitted(spark: SparkSession, outPath: String,
       batchId: Long, idCol: String): DataFrame = {
@@ -952,7 +885,7 @@ object EventStream {
     scala.util.Try(spark.read.parquet(outPath)).toOption
       .map(_.filter(col("ingest_batch") === batchId)
         .select(col(idCol).cast("long").as("corpus_id"))
-        .cutLineage(eager = true))
+        .cutForOverwrite())
       .getOrElse(Seq.empty[Long].toDF("corpus_id"))
   }
 
@@ -960,8 +893,8 @@ object EventStream {
     * [[graft.operators.Dedup.writeMinhashIndex]] corpus index: each
     * micro-batch is MinHash-probed against the stored band keys, docs
     * with a stored near-dup (jaccard ≥ threshold) are dropped, and
-    * survivors append to `outPath`. foreachBatch keeps the gate
-    * stateless on the stream side — the corpus lives in the index
+    * survivors land in `outPath` ([[landBatch]]). foreachBatch keeps
+    * the gate stateless on the stream side — the corpus lives in the index
     * files, shared by every executor and refreshed by rewriting the
     * index, never by growing a state store (a state-store formulation
     * would pin the corpus's shingle sets in executor memory; the probe
@@ -971,33 +904,17 @@ object EventStream {
     * admitted are exempt ([[ownAdmitted]]).
     */
   def nearDupGate(docs: DataFrame, indexPath: String, outPath: String,
-      checkpoint: String, threshold: Double = 0.7)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-          val dups = graft.operators.Dedup
-            .minhashJoinFromIndex(spark, batch, indexPath, threshold)
-            .join(broadcast(own), Seq("corpus_id"), "left_anti")
-            .select(col("batch_id").as("doc_id")).distinct()
-          // survivors land in an ingest_batch=<id> partition under
-          // DYNAMIC overwrite, not a bare append: foreachBatch is
-          // at-least-once, and a replayed batch must rewrite its own
-          // partition instead of appending its survivors a second time
-          // (the dedup gate emitting duplicates on retry would be the
-          // one unacceptable failure mode here)
-          batch.join(dups, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+      checkpoint: String, threshold: Double = 0.7): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
+      val dups = graft.operators.Dedup
+        .minhashJoinFromIndex(spark, batch, indexPath, threshold)
+        .join(broadcast(own), Seq("corpus_id"), "left_anti")
+        .select(col("batch_id").as("doc_id")).distinct()
+      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
+        outPath)
+    }
 
   /** Streaming EXACT set-similarity admission against a materialized
     * [[graft.operators.Dedup.writePpjoinIndex]] corpus index — the
@@ -1012,35 +929,23 @@ object EventStream {
     * dropped. Stateless on the stream side — corpus state lives in the
     * index files, refreshed by [[graft.operators.Dedup
     * .appendToPpjoinIndex]] between batches, never in a state store.
-    * Survivors land in `ingest_batch=<id>` partitions under DYNAMIC
-    * overwrite so an at-least-once replay rewrites its own partition
-    * instead of admitting duplicates twice — including when the index
-    * refresh raced the checkpoint commit: matches against ids this
-    * batchId already admitted are exempt ([[ownAdmitted]]), so the
-    * replay reproduces its decisions instead of self-matching to zero.
+    * Survivors land through [[landBatch]]; when the index refresh raced
+    * the checkpoint commit, matches against ids this batchId already
+    * admitted are exempt ([[ownAdmitted]]), so the replay reproduces
+    * its decisions instead of self-matching to zero.
     */
   def ppjoinGateSink(docs: DataFrame, indexPath: String, outPath: String,
-      checkpoint: String, tNum: Long = 7L, tDen: Long = 10L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-          val dups = graft.operators.Dedup
-            .ppjoinJoinFromIndex(spark, batch, indexPath, tNum, tDen)
-            .join(broadcast(own), Seq("corpus_id"), "left_anti")
-            .select(col("batch_id").as("doc_id")).distinct()
-          batch.join(dups, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+      checkpoint: String, tNum: Long = 7L, tDen: Long = 10L): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
+      val dups = graft.operators.Dedup
+        .ppjoinJoinFromIndex(spark, batch, indexPath, tNum, tDen)
+        .join(broadcast(own), Seq("corpus_id"), "left_anti")
+        .select(col("batch_id").as("doc_id")).distinct()
+      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
+        outPath)
+    }
 
   /** Streaming perceptual-hash admission gate — the media twin of
     * [[nearDupGate]]: each micro-batch of (doc_id, blob) payloads is
@@ -1050,34 +955,22 @@ object EventStream {
     * land. Stateless on the stream side — corpus state lives entirely
     * in the index, refreshed by [[graft.operators.Multimodal
     * .appendToPhashIndex]] between batches, never inside the query.
-    * Survivors land in `ingest_batch=<id>` partitions under DYNAMIC
-    * overwrite so an at-least-once replay rewrites its own partition
-    * instead of admitting duplicates twice; matches against ids this
+    * Survivors land through [[landBatch]]; matches against ids this
     * batchId already admitted are exempt ([[ownAdmitted]]), so a replay
     * racing the external index refresh reproduces its decisions.
     */
   def phashGateSink(media: DataFrame, indexPath: String, outPath: String,
-      checkpoint: String, maxHamming: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-          val dups = graft.operators.Multimodal
-            .phashJoinFromIndex(spark, batch, indexPath, maxHamming)
-            .join(broadcast(own), Seq("corpus_id"), "left_anti")
-            .select(col("batch_id").as("doc_id")).distinct()
-          batch.join(dups, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+      checkpoint: String, maxHamming: Int = 16): StreamingQuery =
+    microBatch(media, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
+      val dups = graft.operators.Multimodal
+        .phashJoinFromIndex(spark, batch, indexPath, maxHamming)
+        .join(broadcast(own), Seq("corpus_id"), "left_anti")
+        .select(col("batch_id").as("doc_id")).distinct()
+      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
+        outPath)
+    }
 
   /** Streaming SimHash admission gate — the BIT-SIGNATURE text leg of
     * the admission family ([[nearDupGate]] MinHash/Jaccard, this sink
@@ -1095,35 +988,23 @@ object EventStream {
     * first gate of a layered admission stack. Stateless on the stream
     * side: corpus state lives entirely in the index, refreshed by
     * [[graft.operators.Dedup.appendToSimhashIndex]] between batches,
-    * never in a state store. Survivors land in `ingest_batch=<id>`
-    * partitions under DYNAMIC overwrite so an at-least-once replay
-    * rewrites its own partition instead of admitting duplicates twice;
+    * never in a state store. Survivors land through [[landBatch]];
     * matches against ids this batchId already admitted are exempt
     * ([[ownAdmitted]]), so a replay racing the external index refresh
     * reproduces its decisions.
     */
   def simhashGateSink(docs: DataFrame, indexPath: String, outPath: String,
-      checkpoint: String, maxHamming: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-          val dups = graft.operators.Dedup
-            .simhashJoinFromIndex(spark, batch, indexPath, maxHamming)
-            .join(broadcast(own), Seq("corpus_id"), "left_anti")
-            .select(col("batch_id").as("doc_id")).distinct()
-          batch.join(dups, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+      checkpoint: String, maxHamming: Int = 3): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
+      val dups = graft.operators.Dedup
+        .simhashJoinFromIndex(spark, batch, indexPath, maxHamming)
+        .join(broadcast(own), Seq("corpus_id"), "left_anti")
+        .select(col("batch_id").as("doc_id")).distinct()
+      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
+        outPath)
+    }
 
   /** Streaming embedding admission gate — the DENSE-vector leg of the
     * modality triptych ([[nearDupGate]] text/MinHash, [[phashGateSink]]
@@ -1150,9 +1031,7 @@ object EventStream {
     * pairwise), which keeps one representative per intra-batch
     * near-dup group. Its residual blind spot (a near-dup pair split
     * across cells) has the same geometry as the unprobed-cell corpus
-    * miss. Survivors land in `ingest_batch=<id>` partitions under
-    * DYNAMIC overwrite so an at-least-once replay rewrites its own
-    * partition instead of admitting duplicates twice; matches against
+    * miss. Survivors land through [[landBatch]]; matches against
     * ids this batchId already admitted are exempt ([[ownAdmitted]]) —
     * the probe runs at k = 2 so a replayed vector's own indexed copy
     * (top-1 at cosine 1.0) cannot shadow a genuine corpus near-dup at
@@ -1162,33 +1041,24 @@ object EventStream {
     */
   def embeddingGateSink(vectors: DataFrame, indexPath: String,
       outPath: String, checkpoint: String, minCos: Double = 0.95,
-      nprobe: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val own = ownAdmitted(spark, outPath, batchId, "vec_id")
-          val dups = graft.operators.Similarity
-            .ivfProbeBatchOn(spark, batch, indexPath, k = 2, nprobe)
-            .join(broadcast(own.select(col("corpus_id").as("vec_id"))),
-              Seq("vec_id"), "left_anti")
-            .filter(col("cos") >= minCos)
-            .select(col("query_id").as("vec_id")).distinct()
-          val survivors = batch.join(dups, Seq("vec_id"), "left_anti")
-          // intra-batch pass: co-arriving novel near-dups keep one
-          // leader per index cell (see semDedupWithinBatch's contract)
-          val kept = graft.operators.Similarity
-            .semDedupWithinBatch(spark, survivors, indexPath, minCos)
-          survivors.join(kept, Seq("vec_id"), "left_semi")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+      nprobe: Int = 4): StreamingQuery =
+    microBatch(vectors, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      val own = ownAdmitted(spark, outPath, batchId, "vec_id")
+      val dups = graft.operators.Similarity
+        .ivfProbeBatchOn(spark, batch, indexPath, k = 2, nprobe)
+        .join(broadcast(own.select(col("corpus_id").as("vec_id"))),
+          Seq("vec_id"), "left_anti")
+        .filter(col("cos") >= minCos)
+        .select(col("query_id").as("vec_id")).distinct()
+      val survivors = batch.join(dups, Seq("vec_id"), "left_anti")
+      // intra-batch pass: co-arriving novel near-dups keep one
+      // leader per index cell (see semDedupWithinBatch's contract)
+      val kept = graft.operators.Similarity
+        .semDedupWithinBatch(spark, survivors, indexPath, minCos)
+      landBatch(survivors.join(kept, Seq("vec_id"), "left_semi"), batchId,
+        outPath)
+    }
 
   /** The unified multi-stage streaming curation sink — the batch
     * [[graft.pipeline.TextCuration]] flow (quality gate → benchmark
@@ -1202,9 +1072,9 @@ object EventStream {
     *     (ingest_batch, stage, n_docs) — the audit trail, partitioned
     *     the same way.
     *
-    * Both land under DYNAMIC partition overwrite, so an at-least-once
-    * replay rewrites its own partitions instead of double-landing —
-    * ONE contract for data and audit.
+    * Both land through [[landBatch]], so an at-least-once replay
+    * rewrites its own partitions instead of double-landing — ONE
+    * contract for data and audit.
     *
     * Stage semantics mirror the batch pipeline per-doc, so cumulative
     * streamed stage counts equal the batch `summaryOn` counts on the
@@ -1260,8 +1130,7 @@ object EventStream {
       cfg: graft.pipeline.TextCuration.Config =
         graft.pipeline.TextCuration.Config(),
       lmModelPath: Option[String] = None,
-      lmMinAvgMicro: Long = 100000L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      lmMinAvgMicro: Long = 100000L): StreamingQuery = {
     import graft.operators.Dedup
     import graft.pipeline.TextCuration
     // static one-row eval hash set, cut once here and broadcast per
@@ -1273,193 +1142,156 @@ object EventStream {
       .distinct()
       .agg(collect_set(col("h")).as("eval_hashes"))
       .cutLineage(eager = true)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val nInput = graft.Materialize.count(batch)
-        if (nInput > 0) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          import org.apache.spark.sql.types.{DataType, LongType}
-          // the sink's own directories, schema pinned; a missing one
-          // fails inside the Try
-          def readOwn(path: String, fields: (String, DataType)*) =
-            scala.util.Try(graft.sources.Tables.pinned(spark, path, fields: _*))
-              .toOption
-          // 1. quality — the batch pipeline's own gate. Each stage's cut
-          // is lazy: the count right after it is also its materializer
-          val qual = TextCuration.qualityGateOn(batch.toDF(), cfg)
-            .cutLineage()
-          val nQual = graft.Materialize.count(qual)
-          // 2. decontam: eval ids out, eval k-gram overlap out. The same
-          // cut carries each survivor's MinHash set and band keys
-          // (hs, n, keys), shingled once for every near-dup step below
-          val clean = Dedup.minhashSigned(qual
-            .filter(col("doc_id") % Dedup.EvalModulus =!= 0)
-            .withColumn("hs",
-              Dedup.shingleHashes(col("text"), cfg.decontamK))
-            .crossJoin(broadcast(evalHashes))
-            .filter(!coalesce(
-              arrays_overlap(col("hs"), col("eval_hashes")), lit(false)))
-            .drop("hs", "eval_hashes"))
-            .cutLineage()
-          val nClean = graft.Materialize.count(clean)
-          // 3. near-dup: ONE band join finds intra-batch pairs and
-          // stored-index pairs; intra-batch clusters keep their lowest
-          // id (the cluster label), then index matches drop
-          val idxPath = new org.apache.hadoop.fs.Path(s"$indexPath/bands")
-          val idxExists = idxPath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(idxPath)
-          val pairs = Dedup.minhashProbe(clean,
-              Some(indexPath).filter(_ => idxExists), withinBatch = true,
-              cfg.dedupThreshold)
-            .cutLineage()
-          val clusters = Dedup.clustersFromPairs(
-            pairs.filter(!col("stored")).select(col("da"), col("db")))
-          val intraLosers = clusters
-            .filter(col("doc_id") =!= col("cluster_id"))
+    microBatch(docs, checkpoint) { (batch, batchId, nInput) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      import org.apache.spark.sql.types.{DataType, LongType}
+      // the sink's own directories, schema pinned; a missing one
+      // fails inside the Try
+      def readOwn(path: String, fields: (String, DataType)*) =
+        scala.util.Try(graft.sources.Tables.pinned(spark, path, fields: _*))
+          .toOption
+      // 1. quality — the batch pipeline's own gate. Each stage's cut
+      // is lazy: the count right after it is also its materializer
+      val qual = TextCuration.qualityGateOn(batch, cfg)
+        .cutLineage()
+      val nQual = graft.Materialize.count(qual)
+      // 2. decontam: eval ids out, eval k-gram overlap out. The same
+      // cut carries each survivor's MinHash set and band keys
+      // (hs, n, keys), shingled once for every near-dup step below
+      val clean = Dedup.minhashSigned(qual
+        .filter(col("doc_id") % Dedup.EvalModulus =!= 0)
+        .withColumn("hs",
+          Dedup.shingleHashes(col("text"), cfg.decontamK))
+        .crossJoin(broadcast(evalHashes))
+        .filter(!coalesce(
+          arrays_overlap(col("hs"), col("eval_hashes")), lit(false)))
+        .drop("hs", "eval_hashes"))
+        .cutLineage()
+      val nClean = graft.Materialize.count(clean)
+      // 3. near-dup: ONE band join finds intra-batch pairs and
+      // stored-index pairs; intra-batch clusters keep their lowest
+      // id (the cluster label), then index matches drop
+      val idxPath = new org.apache.hadoop.fs.Path(s"$indexPath/bands")
+      val idxExists = idxPath
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(idxPath)
+      val pairs = Dedup.minhashProbe(clean,
+          Some(indexPath).filter(_ => idxExists), withinBatch = true,
+          cfg.dedupThreshold)
+        .cutLineage()
+      val clusters = Dedup.clustersFromPairs(
+        pairs.filter(!col("stored")).select(col("da"), col("db")))
+      val intraLosers = clusters
+        .filter(col("doc_id") =!= col("cluster_id"))
+        .select(col("doc_id"))
+      val intraKept = clean.join(intraLosers, Seq("doc_id"), "left_anti")
+      val admitted = (if (idxExists) {
+        // replay contract: exclude ONLY matches against ids THIS
+        // batchId itself indexed (the `batches/` sidecar, partition-
+        // pruned to ingest_batch=batchId) — a same-batchId replay
+        // reproduces its original decisions, while a source that
+        // redelivers an already-landed doc under a NEW batchId still
+        // self-matches its earlier indexed copy and is dropped
+        // instead of double-landing in two ingest_batch partitions.
+        val ownIndexed = readOwn(s"$indexPath/batches",
+            "doc_id" -> clean.schema("doc_id").dataType,
+            "ingest_batch" -> LongType)
+          .map(_.filter(col("ingest_batch") === batchId)
+            .select(col("doc_id").as("db")))
+          .getOrElse(Seq.empty[Long].toDF("db"))
+        val dups = pairs.filter(col("stored"))
+          .join(broadcast(ownIndexed), Seq("db"), "left_anti")
+          .select(col("da").as("doc_id"))
+        intraKept.join(dups, Seq("doc_id"), "left_anti")
+      } else intraKept).cutLineage()
+      val nDedup = graft.Materialize.count(admitted)
+      // 4. (optional) CCNet-style Stupid-Backoff fluency gate
+      // against a STORED reference model — the streaming LM stage
+      // between dedup and the cap, [[sbGateSink]]'s filter inlined
+      // into the unified chain. A decision is a pure function of
+      // (batch, model): the model lives in its artifact
+      // ([[graft.operators.NgramLm.writeNgramLm]] layout,
+      // refreshed out of band), so the stage adds zero state and
+      // the replay contract is untouched — [[landBatch]] rewrites
+      // this batch's partitions whatever the survivor set.
+      val fluent = lmModelPath match {
+        case Some(mp) =>
+          val keep = graft.operators.NgramLm.scoreOn(
+              admitted.select(col("doc_id"), col("text")),
+              graft.operators.NgramLm.lmModelFromIndex(spark, mp))
+            .filter(col("avg_micro") >= lmMinAvgMicro)
             .select(col("doc_id"))
-          val intraKept = clean.join(intraLosers, Seq("doc_id"), "left_anti")
-          val admitted = (if (idxExists) {
-            // replay contract: exclude ONLY matches against ids THIS
-            // batchId itself indexed (the `batches/` sidecar, partition-
-            // pruned to ingest_batch=batchId) — a same-batchId replay
-            // reproduces its original decisions, while a source that
-            // redelivers an already-landed doc under a NEW batchId still
-            // self-matches its earlier indexed copy and is dropped
-            // instead of double-landing in two ingest_batch partitions.
-            val ownIndexed = readOwn(s"$indexPath/batches",
-                "doc_id" -> clean.schema("doc_id").dataType,
-                "ingest_batch" -> LongType)
-              .map(_.filter(col("ingest_batch") === batchId)
-                .select(col("doc_id").as("db")))
-              .getOrElse(Seq.empty[Long].toDF("db"))
-            val dups = pairs.filter(col("stored"))
-              .join(broadcast(ownIndexed), Seq("db"), "left_anti")
-              .select(col("da").as("doc_id"))
-            intraKept.join(dups, Seq("doc_id"), "left_anti")
-          } else intraKept).cutLineage()
-          val nDedup = graft.Materialize.count(admitted)
-          // 4. (optional) CCNet-style Stupid-Backoff fluency gate
-          // against a STORED reference model — the streaming LM stage
-          // between dedup and the cap, [[sbGateSink]]'s filter inlined
-          // into the unified chain. A decision is a pure function of
-          // (batch, model): the model lives in its artifact
-          // ([[graft.operators.NgramLm.writeNgramLm]] layout,
-          // refreshed out of band), so the stage adds zero state and
-          // the replay contract is untouched — the retract-then-write
-          // below already rewrites this batch's partitions whatever
-          // the survivor set.
-          val fluent = lmModelPath match {
-            case Some(mp) =>
-              val keep = graft.operators.NgramLm.scoreOn(
-                  admitted.select(col("doc_id"), col("text")),
-                  graft.operators.NgramLm.lmModelFromIndex(spark, mp))
-                .filter(col("avg_micro") >= lmMinAvgMicro)
-                .select(col("doc_id"))
-              admitted.join(keep, Seq("doc_id"), "left_semi")
-                .cutLineage()
-            case None => admitted
-          }
-          val nLm =
-            if (lmModelPath.isDefined) graft.Materialize.count(fluent) else nDedup
-          // 5. per-source cap net of PRIOR batches' landed docs
-          val docsPath = s"$outPath/docs"
-          // strictly EARLIER batches only: a replayed batch must see the
-          // same prior state it saw originally, never its own partition
-          // nor a later batch that happened to land before the retry
-          val prior = readOwn(docsPath,
-              "source" -> clean.schema("source").dataType,
-              "ingest_batch" -> LongType)
-            .map(_.filter(col("ingest_batch") < batchId)
-              .groupBy(col("source")).agg(count(lit(1)).as("n_prior")))
-          val withPrior = prior
-            .map(p => fluent.join(broadcast(p), Seq("source"), "left"))
-            .getOrElse(fluent.withColumn("n_prior",
-              lit(null).cast("long")))
-            .withColumn("n_prior", coalesce(col("n_prior"), lit(0L)))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("source"))
-            .orderBy(md5(col("doc_id").cast("string").cast("binary")),
-              col("doc_id"))
-          val landed = withPrior
-            .withColumn("pick", row_number().over(w))
-            .filter(col("pick") + col("n_prior") <= cfg.capPerSource)
-            .select(col("doc_id"), col("source"), col("lang"),
-              col("n_tokens"), col("text"))
+          admitted.join(keep, Seq("doc_id"), "left_semi")
             .cutLineage()
-          val nCap = graft.Materialize.count(landed)
-          // Retract-then-write, same hole [[sbGateSink]] closes:
-          // dynamic overwrite only replaces partitions the NEW write
-          // touches, so a replay whose survivor set shrinks to ZERO
-          // (a model refresh racing an at-least-once redelivery with
-          // `lmModelPath` set) would write no docs partition and leave
-          // the stale previously-landed docs standing while the
-          // rewritten ledger reports a zero cap — silently
-          // inconsistent output. Deleting this batch's docs partition
-          // first makes the rewrite unconditional: on-disk state is
-          // exactly the current survivor set, empty included. One
-          // idempotent FS delete per batch; `landed` is already
-          // materialized (its cut landed with the count above), so the
-          // delete cannot race the `prior` read of the same directory.
-          val docsBatchPart = new org.apache.hadoop.fs.Path(
-            s"$docsPath/ingest_batch=$batchId")
-          docsBatchPart
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(docsBatchPart, true)
-          // data + ledger land first, index append after (see scaladoc)
-          landed.withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(docsPath)
-          // stage names are stable when the LM stage is off (the
-          // streamed ≡ batch summary equality depends on them); with
-          // it on, "5_lm" lands between dedup and the cap and the cap
-          // renumbers — the ledger says what actually ran
-          (Seq(("1_input", nInput), ("2_quality", nQual),
-            ("3_decontam", nClean), ("4_dedup", nDedup)) ++
-            (if (lmModelPath.isDefined)
-              Seq(("5_lm", nLm), ("6_cap", nCap))
-            else Seq(("5_cap", nCap))))
-            .toDF("stage", "n_docs")
-            .withColumn("ingest_batch", lit(batchId))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(s"$outPath/ledger")
-          // keep-first index admission: what the DEDUP stage admitted
-          // (pre-cap — a capped-out doc still represents its cluster)
-          if (nDedup > 0) {
-            // sidecar BEFORE the index data: if a crash lands between
-            // them, a replay sees ids in `batches/` that are not yet in
-            // the index — the anti-join excludes nothing extra and the
-            // retry re-lands identically. The reverse order would let a
-            // replay self-match docs it legitimately indexed. Dynamic
-            // overwrite keeps a replayed batch rewriting its own
-            // partition, so the sidecar never accumulates duplicates.
-            admitted.select(col("doc_id"))
-              .withColumn("ingest_batch", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("ingest_batch").parquet(s"$indexPath/batches")
-            // straight from the cut: its (hs, n, keys) are the rows the
-            // index stores, so nothing re-shingles
-            Dedup.writeMinhashFrames(admitted, indexPath,
-              if (idxExists) "append" else "overwrite")
-          }
-          // a broadcast-sized pair list comes back as a local frame,
-          // which holds no cut to release
-          val clustersCut = !clusters.queryExecution.analyzed
-            .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-          (Seq(qual, clean, pairs, admitted, landed) ++
-            (if (clustersCut) Seq(clusters) else Nil) ++
-            (if (lmModelPath.isDefined) Seq(fluent) else Nil))
-            .foreach(graft.Materialize.release)
-        }
+        case None => admitted
       }
-      .start()
+      val nLm =
+        if (lmModelPath.isDefined) graft.Materialize.count(fluent) else nDedup
+      // 5. per-source cap net of PRIOR batches' landed docs
+      val docsPath = s"$outPath/docs"
+      // strictly EARLIER batches only: a replayed batch must see the
+      // same prior state it saw originally, never its own partition
+      // nor a later batch that happened to land before the retry
+      val prior = readOwn(docsPath,
+          "source" -> clean.schema("source").dataType,
+          "ingest_batch" -> LongType)
+        .map(_.filter(col("ingest_batch") < batchId)
+          .groupBy(col("source")).agg(count(lit(1)).as("n_prior")))
+      val withPrior = prior
+        .map(p => fluent.join(broadcast(p), Seq("source"), "left"))
+        .getOrElse(fluent.withColumn("n_prior",
+          lit(null).cast("long")))
+        .withColumn("n_prior", coalesce(col("n_prior"), lit(0L)))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source"))
+        .orderBy(md5(col("doc_id").cast("string").cast("binary")),
+          col("doc_id"))
+      val landed = withPrior
+        .withColumn("pick", row_number().over(w))
+        .filter(col("pick") + col("n_prior") <= cfg.capPerSource)
+        .select(col("doc_id"), col("source"), col("lang"),
+          col("n_tokens"), col("text"))
+        .cutLineage()
+      val nCap = graft.Materialize.count(landed)
+      // data + ledger land first, index append after (see scaladoc).
+      // `landed` is materialized by its counted cut, so the retract
+      // cannot race the `prior` read of the same directory
+      landBatch(landed, batchId, docsPath)
+      // stage names are stable when the LM stage is off (the
+      // streamed ≡ batch summary equality depends on them); with
+      // it on, "5_lm" lands between dedup and the cap and the cap
+      // renumbers — the ledger says what actually ran
+      landBatch((Seq(("1_input", nInput), ("2_quality", nQual),
+        ("3_decontam", nClean), ("4_dedup", nDedup)) ++
+        (if (lmModelPath.isDefined)
+          Seq(("5_lm", nLm), ("6_cap", nCap))
+        else Seq(("5_cap", nCap))))
+        .toDF("stage", "n_docs").coalesce(1), batchId, s"$outPath/ledger")
+      // keep-first index admission: what the DEDUP stage admitted
+      // (pre-cap — a capped-out doc still represents its cluster)
+      if (nDedup > 0) {
+        // sidecar BEFORE the index data: if a crash lands between
+        // them, a replay sees ids in `batches/` that are not yet in
+        // the index — the anti-join excludes nothing extra and the
+        // retry re-lands identically. The reverse order would let a
+        // replay self-match docs it legitimately indexed.
+        landBatch(admitted.select(col("doc_id")), batchId,
+          s"$indexPath/batches")
+        // straight from the cut: its (hs, n, keys) are the rows the
+        // index stores, so nothing re-shingles
+        Dedup.writeMinhashFrames(admitted, indexPath,
+          if (idxExists) "append" else "overwrite")
+      }
+      // a broadcast-sized pair list comes back as a local frame,
+      // which holds no cut to release
+      val clustersCut = !clusters.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      (Seq(qual, clean, pairs, admitted, landed) ++
+        (if (clustersCut) Seq(clusters) else Nil) ++
+        (if (lmModelPath.isDefined) Seq(fluent) else Nil))
+        .foreach(graft.Materialize.release)
+    }
   }
 
   /** Streaming distribution gate from a maintained [[quantileMaintain]]
@@ -1480,14 +1312,11 @@ object EventStream {
     * distribution fence. The cut frame's columns carry a reserved
     * `__qgate_` prefix so a batch schema may itself contain `g`, `lo`,
     * or `hi` without ambiguity (spec-pinned on a colliding schema).
-    * Survivors land in `ingest_batch=<id>` partitions under DYNAMIC
-    * overwrite so a replayed batch rewrites its own partition instead
-    * of appending twice.
+    * Survivors land through [[landBatch]].
     */
   def quantileGateSink(rows: DataFrame, groupCol: String, valueCol: String,
       sketchPath: String, outPath: String, checkpoint: String,
-      qLo: Double = 0.01, qHi: Double = 0.99)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      qLo: Double = 0.01, qHi: Double = 0.99): StreamingQuery = {
     // Same domain contract as quantileFromSample's qs validation: an
     // inverted or out-of-(0,1] band would silently drop EVERY non-null
     // row of known groups (and q <= 0 would misindex element_at) — fail
@@ -1504,26 +1333,16 @@ object EventStream {
         sampleQuantile(col("vs"), col("n"), qLo).as("__qgate_lo"),
         sampleQuantile(col("vs"), col("n"), qHi).as("__qgate_hi"))
       .persist()
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch
-            .join(broadcast(cuts),
-              batch(groupCol) === cuts("__qgate_g"), "left")
-            .filter(col("__qgate_g").isNull
-              || col(valueCol).isNull
-              || (col(valueCol).cast("double") >= col("__qgate_lo")
-                && col(valueCol).cast("double") <= col("__qgate_hi")))
-            .drop("__qgate_g", "__qgate_lo", "__qgate_hi")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+    microBatch(rows, checkpoint) { (batch, batchId, _) =>
+      landBatch(batch
+        .join(broadcast(cuts),
+          batch(groupCol) === cuts("__qgate_g"), "left")
+        .filter(col("__qgate_g").isNull
+          || col(valueCol).isNull
+          || (col(valueCol).cast("double") >= col("__qgate_lo")
+            && col(valueCol).cast("double") <= col("__qgate_hi")))
+        .drop("__qgate_g", "__qgate_lo", "__qgate_hi"), batchId, outPath)
+    }
   }
 
   /** Streaming token accounting from a materialized
@@ -1531,43 +1350,32 @@ object EventStream {
     * micro-batch of incoming documents is tokenized by the stored
     * word → subwords dict (one explode + one equi-join — the serving
     * join, with AQE broadcasting the Heaps-bounded dict) and the
-    * per-doc counts land in an `ingest_batch=<id>` partition under
-    * DYNAMIC overwrite (replays rewrite their own partition; the token
-    * ledger double-counting a replayed batch would corrupt every
-    * budget decision downstream). Training NEVER runs in the stream —
+    * per-doc counts land through [[landBatch]] (the token ledger
+    * double-counting a replayed batch would corrupt every budget
+    * decision downstream). Training NEVER runs in the stream —
     * the dict is refreshed by rewriting the artifact, the same
     * contract as [[nearDupGate]]'s MinHash index. This is the ingest
     * half of a token-budget pipeline: the batch analogue feeding
     * mixture/pack decisions is [[graft.operators.Sampling.tokenPack]].
     */
   def tokenAccountingSink(docs: DataFrame, dictPath: String,
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      outPath: String, checkpoint: String): StreamingQuery = {
     // ONE dict frame for the life of the stream, persisted so batches
     // after the first read cached blocks instead of re-listing and
     // re-scanning the artifact parquet per trigger; a dict refresh is
     // a new sink, matching the rewrite-the-artifact contract.
     val dict = docs.sparkSession.read.parquet(dictPath + "/dict").persist()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // the SAME serving join the batch tokenizer uses (shared
-          // helper — including the left-join re-attach, so a doc whose
-          // words all miss the dict still gets a 0-count ledger row
-          // instead of silently vanishing from the token accounting)
-          graft.operators.Bpe
-            .tokenizeWithDict(batch.select(col("doc_id"), col("text")),
-              dict, "n_tokens")
-            .select(col("doc_id"), col("n_words"), col("n_tokens"))
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      // the SAME serving join the batch tokenizer uses (shared
+      // helper — including the left-join re-attach, so a doc whose
+      // words all miss the dict still gets a 0-count ledger row
+      // instead of silently vanishing from the token accounting)
+      landBatch(graft.operators.Bpe
+        .tokenizeWithDict(batch.select(col("doc_id"), col("text")),
+          dict, "n_tokens")
+        .select(col("doc_id"), col("n_words"), col("n_tokens")),
+        batchId, outPath)
+    }
   }
 
   /** Streaming perplexity gate from a materialized
@@ -1575,40 +1383,29 @@ object EventStream {
     * micro-batch of incoming documents is scored against the stored
     * vocab count tables (the batch's own bigram explode + two lookup
     * joins — AQE broadcasts the Heaps-bounded tables) and lands with
-    * its `keep` verdict in an `ingest_batch=<id>` partition under
-    * DYNAMIC overwrite (replays rewrite their own partition, never
-    * double-gate). Unseen transitions score p = 0 — exactly the
+    * its `keep` verdict through [[landBatch]] (a replay never
+    * double-gates). Unseen transitions score p = 0 — exactly the
     * out-of-distribution signal the gate wants on fresh crawl data.
     * Training NEVER runs in the stream: the LM refreshes by rewriting
     * the artifact, the same contract as [[nearDupGate]]'s MinHash index
     * and [[tokenAccountingSink]]'s dict.
     */
   def lmGateSink(docs: DataFrame, lmPath: String, outPath: String,
-      checkpoint: String, minP: Double = 0.033)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String, minP: Double = 0.033): StreamingQuery = {
     val spark = docs.sparkSession
     // ONE pair of LM tables for the life of the stream, persisted so
     // batches after the first read cached blocks instead of re-scanning
     // the artifact parquet per trigger
     val cab = spark.read.parquet(lmPath + "/bigrams").persist()
     val ca = spark.read.parquet(lmPath + "/prefixes").persist()
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.TextAnalysis
-            .scoreWithLmTables(batch.select(col("doc_id"), col("text")),
-              cab, ca)
-            .withColumn("keep",
-              coalesce(col("mean_cond_p") >= lit(minP), lit(true)))
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(outPath)
-        }
-      }
-      .start()
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      landBatch(graft.operators.TextAnalysis
+        .scoreWithLmTables(batch.select(col("doc_id"), col("text")),
+          cab, ca)
+        .withColumn("keep",
+          coalesce(col("mean_cond_p") >= lit(minP), lit(true))),
+        batchId, outPath)
+    }
   }
 
   /** Streaming blocklist admission gate — the exact-banned-sequence
@@ -1621,51 +1418,45 @@ object EventStream {
     * `flags/` with their per-phrase hit rows; clean docs land in
     * `docs/`. STATELESS by construction (the phrase list is the whole
     * gate state, broadcast per batch), so replay safety needs no
-    * ledger: a retried batch recomputes identical per-doc decisions and
-    * the ingest_batch-partitioned dynamic overwrite replaces its own
-    * partition idempotently — the same contract every stateless sink
-    * here carries.
+    * ledger: a retried batch recomputes its per-doc decisions and
+    * [[landBatch]] replaces both of its partitions, so a phrase-list
+    * change between attempts leaves no stale docs or flags behind.
     */
   def blocklistGateSink(docs: DataFrame, phrases: Seq[Seq[String]],
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          import graft.Materialize.MatOps
-          val hits = graft.operators.TextAnalysis
-            .blocklistHitsOn(batch.toDF(), phrases)
-            .cutLineage(eager = true) // read twice: flags write + anti-join
-          hits.withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(s"$outPath/flags")
-          batch.toDF()
-            .join(hits.select(col("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(s"$outPath/docs")
-          graft.Materialize.release(hits)
-        }
-      }
-      .start()
+      outPath: String, checkpoint: String): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val hits = graft.operators.TextAnalysis
+        .blocklistHitsOn(batch, phrases)
+        .cutLineage(eager = true) // read twice: flags write + anti-join
+      landBatch(hits, batchId, s"$outPath/flags")
+      landBatch(batch.join(hits.select(col("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti"), batchId, s"$outPath/docs")
+      graft.Materialize.release(hits)
+    }
 
+  /** Stream → warehouse sink: each micro-batch of the (Update-mode)
+    * hourly aggregate overwrites only the panes it touched — dynamic
+    * partition overwrite, so late updates replace a pane in place and
+    * re-running a batch is idempotent. This is the serving-table pattern
+    * the reference implements as SQLite truncate+reload (S9), minus the
+    * full-table rewrite.
+    *
+    * The physical partitioning is (hour, event_type) — the SAME key as
+    * the aggregation groups, which is load-bearing: Update mode emits
+    * only changed groups, so overwrite granularity coarser than group
+    * granularity (e.g. hour alone) would silently drop an hour's
+    * unchanged event types whenever one type in that hour updates.
+    *
+    * Returns the started query; the caller owns its lifecycle.
+    */
   def hourlyToParquet(events: DataFrame, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    hourlyCounts(events)
-      .writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      checkpoint: String): StreamingQuery =
+    microBatch(hourlyCounts(events), checkpoint, OutputMode.Update) {
+      (batch, _, _) =>
         // writer-scoped option, NOT a session-conf mutation: dynamic
         // overwrite must apply to this sink only, no global side effect
         batch.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("hour", "event_type").parquet(outPath)
-      }
-      .start()
+    }
 }
