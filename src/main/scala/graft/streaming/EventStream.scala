@@ -357,50 +357,68 @@ object EventStream {
       col("source"), col("lang"))
   }
 
-  /** The one micro-batch skeleton of every sink below: a `foreachBatch`
-    * query on `checkpoint` that counts each batch once
-    * ([[graft.Materialize.count]], one job), skips an empty batch, and
-    * hands `body` the batch, its id and its row count. Returns the
-    * started query; the caller owns its lifecycle.
+  /** The one streaming skeleton: a `foreachBatch` query on `checkpoint`
+    * that hands `body` each batch and its id, with no probe of its own.
+    * Only [[hourlyToParquet]] calls it directly: its batches are the
+    * output of a stateful aggregation, so any probe would re-run the
+    * shuffle and the state-store load. Returns the started query; the
+    * caller owns its lifecycle.
     */
-  private def microBatch(df: DataFrame, checkpoint: String,
-      mode: OutputMode = OutputMode.Append)(
-      body: (DataFrame, Long, Long) => Unit): StreamingQuery =
+  private def eachBatch(df: DataFrame, checkpoint: String,
+      mode: OutputMode)(body: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .outputMode(mode)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val n = graft.Materialize.count(batch)
-        if (n > 0) body(batch, batchId, n)
-      }
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
+        body(batch, batchId))
       .start()
 
+  /** The micro-batch runner of every stateless sink below: counts each
+    * batch once ([[graft.Materialize.count]], one job), skips an empty
+    * batch, and hands `body` the batch, its id and its row count.
+    */
+  private def microBatch(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long, Long) => Unit): StreamingQuery =
+    eachBatch(df, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      val n = graft.Materialize.count(batch)
+      if (n > 0) body(batch, batchId, n)
+    }
+
   /** Land `frame` as batch `batchId`'s `ingest_batch=<batchId>` partition
-    * of `path`, retract-then-write. foreachBatch is at-least-once, so a
-    * replayed batch must rewrite its own partition instead of landing its
-    * rows a second time: the write is a per-writer DYNAMIC partition
-    * overwrite. Dynamic overwrite alone only replaces the partitions the
-    * new write touches, so a replay whose rows shrink to zero (an index,
-    * model, band or phrase-list refresh racing the redelivery) would
-    * write nothing and leave the previous attempt's rows standing.
-    * Deleting the partition first makes the rewrite unconditional: the
-    * batch's on-disk state is exactly its current rows, empty included.
-    * One idempotent FS delete per call.
+    * of `path`. foreachBatch is at-least-once, so a replayed batch must
+    * rewrite its own partition instead of landing its rows a second
+    * time: the write is a per-writer DYNAMIC partition overwrite, which
+    * replaces the partition only at the job's commit. Dynamic overwrite
+    * alone leaves a partition the write does not touch, so a replay
+    * whose rows shrink to zero (an index, model, band or phrase-list
+    * refresh racing the redelivery) would leave the previous attempt's
+    * rows standing. The partition is therefore retracted AFTER the
+    * write, and only when the write left its file listing unchanged: a
+    * non-empty write always changes it, since new part files carry the
+    * new job's id. The batch's on-disk state is exactly its current
+    * rows, empty included, and a write that fails leaves the previous
+    * attempt's partition in place — the admission record
+    * [[ownAdmitted]] reads on the next replay.
     *
-    * Precondition: `frame` must not lazily read the partition being
-    * retracted. A frame derived from it must be cut first, with a cut
-    * that drops its lineage ([[ownAdmitted]]'s `cutForOverwrite`, or a
-    * counted lazy cut in `local`/`reliable` materialize mode).
+    * A frame the caller reuses after this call must not lazily read the
+    * partition: cut it first with a cut that drops its lineage
+    * ([[ownAdmitted]]'s `cutForOverwrite`, or a counted lazy cut in
+    * `local`/`reliable` materialize mode).
     */
   private def landBatch(frame: DataFrame, batchId: Long,
       path: String): Unit = {
     val part = new org.apache.hadoop.fs.Path(s"$path/ingest_batch=$batchId")
-    part.getFileSystem(frame.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(part, true)
+    val fs = part.getFileSystem(
+      frame.sparkSession.sparkContext.hadoopConfiguration)
+    def listing =
+      try fs.listStatus(part).map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    val before = listing
     frame.withColumn("ingest_batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ingest_batch").parquet(path)
+    if (before.nonEmpty && listing == before) fs.delete(part, true)
   }
 
   /** Streaming CDC apply: maintain a parquet serving table from a change
@@ -876,8 +894,8 @@ object EventStream {
     * doc REDELIVERED under a NEW batchId finds its own partition empty,
     * still matches its earlier indexed copy, and drops. Cut with
     * `cutForOverwrite`, which drops the lineage in every materialize
-    * mode: [[landBatch]] deletes this very partition later in the
-    * batch, so nothing may recompute from it after that.
+    * mode: [[landBatch]] replaces or retracts this very partition
+    * later in the batch, so nothing may recompute from it after that.
     */
   private def ownAdmitted(spark: SparkSession, outPath: String,
       batchId: Long, idCol: String): DataFrame = {
@@ -1254,9 +1272,7 @@ object EventStream {
           col("n_tokens"), col("text"))
         .cutLineage()
       val nCap = graft.Materialize.count(landed)
-      // data + ledger land first, index append after (see scaladoc).
-      // `landed` is materialized by its counted cut, so the retract
-      // cannot race the `prior` read of the same directory
+      // data + ledger land first, index append after (see scaladoc)
       landBatch(landed, batchId, docsPath)
       // stage names are stable when the LM stage is off (the
       // streamed ≡ batch summary equality depends on them); with
@@ -1275,7 +1291,8 @@ object EventStream {
         // them, a replay sees ids in `batches/` that are not yet in
         // the index — the anti-join excludes nothing extra and the
         // retry re-lands identically. The reverse order would let a
-        // replay self-match docs it legitimately indexed.
+        // replay self-match docs it legitimately indexed. Never
+        // empty here, so the landing replaces and never retracts.
         landBatch(admitted.select(col("doc_id")), batchId,
           s"$indexPath/batches")
         // straight from the cut: its (hs, n, keys) are the rows the
@@ -1451,8 +1468,8 @@ object EventStream {
     */
   def hourlyToParquet(events: DataFrame, outPath: String,
       checkpoint: String): StreamingQuery =
-    microBatch(hourlyCounts(events), checkpoint, OutputMode.Update) {
-      (batch, _, _) =>
+    eachBatch(hourlyCounts(events), checkpoint, OutputMode.Update) {
+      (batch, _) =>
         // writer-scoped option, NOT a session-conf mutation: dynamic
         // overwrite must apply to this sink only, no global side effect
         batch.write.mode("overwrite")

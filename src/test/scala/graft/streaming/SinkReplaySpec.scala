@@ -14,7 +14,9 @@ import graft.TestSpark
   * own-id replay exemption does not apply; a quantile band that excludes
   * every value; a phrase list that hits every doc or none). The replay
   * writes nothing, so the only way its `ingest_batch=0` partition can
-  * disappear is the sink retracting it before the write.
+  * disappear is the sink retracting it. A second set of cases fails a
+  * replay's write job instead: the partition must survive it, so that
+  * the next replay's own-id exemption still finds the batch's ids.
   */
 class SinkReplaySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -134,6 +136,52 @@ class SinkReplaySpec extends AnyFunSuite {
           root.resolve("out").toString, ck))
       }))
 
+  /** Text gates whose replay exemption reads their own landed partition
+    * (`ownAdmitted`): with the writer of their index layout. */
+  private val ownAdmittedGates: Seq[(String, (DataFrame, String) => Unit,
+      (DataFrame, String, String, String) => StreamingQuery)] = Seq(
+    ("nearDupGate", graft.operators.Dedup.writeMinhashIndex(_, _),
+      EventStream.nearDupGate(_, _, _, _)),
+    ("ppjoinGateSink", graft.operators.Dedup.writePpjoinIndex(_, _),
+      EventStream.ppjoinGateSink(_, _, _, _)),
+    ("simhashGateSink", graft.operators.Dedup.writeSimhashIndex(_, _),
+      EventStream.simhashGateSink(_, _, _, _)))
+
+  ownAdmittedGates.foreach { case (name, write, sink) =>
+    test(s"$name: a replay whose write fails keeps the partition the " +
+        "next replay's own-id exemption reads") {
+      val root = Files.createTempDirectory(SinkReplaySpec.FailMarker)
+      val out = root.resolve("out").toString
+      def landed = spark.read.parquet(out).collect()
+        .map(_.getAs[Long]("doc_id")).toSet
+      def run(idx: String, ck: String) = drain(sink(textStream(batchDocs),
+        idx, out, root.resolve(ck).toString))
+      val idx0 = root.resolve("idx0").toString
+      write(otherDocs.toDF("doc_id", "text"), idx0)
+      run(idx0, "ck0")
+      val first = landed
+      assert(first == batchDocs.map(_._1).toSet, s"first attempt: $first")
+      // survivors land -> the index is refreshed WITH them -> a crash
+      // before the checkpoint commit replays batch 0, and that replay's
+      // write job fails (the query clones the session conf at start)
+      val idx1 = root.resolve("idx1").toString
+      write((otherDocs ++ batchDocs).toDF("doc_id", "text"), idx1)
+      val key = "spark.sql.parquet.output.committer.class"
+      spark.conf.set(key, classOf[FailingParquetCommitter].getName)
+      val failed =
+        try intercept[Exception](run(idx1, "ck1"))
+        finally spark.conf.unset(key)
+      assert(Iterator.iterate[Throwable](failed)(_.getCause)
+          .takeWhile(_ != null).exists(e =>
+            String.valueOf(e.getMessage).contains("injected write failure")),
+        s"the replay must fail in its write: $failed")
+      assert(landed == first, "a failed write must not touch batch 0")
+      run(idx1, "ck2")
+      assert(landed == first,
+        "the replay after a failed write must re-land batch 0")
+    }
+  }
+
   cases.foreach { c =>
     test(s"${c.name}: a zero-survivor replay of batch 0 retracts the " +
         "partition the first attempt landed") {
@@ -148,4 +196,24 @@ class SinkReplaySpec extends AnyFunSuite {
         "the zero-survivor replay must delete its stale partition")
     }
   }
+}
+
+object SinkReplaySpec {
+  /** Temp-dir prefix of the failed-write cases: the only output paths
+    * [[FailingParquetCommitter]] fails. */
+  val FailMarker = "graft_replay_fail"
+}
+
+/** A parquet committer whose task commit fails for output under a
+  * [[SinkReplaySpec.FailMarker]] directory: a write job that dies after
+  * its tasks ran, before anything is committed.
+  */
+class FailingParquetCommitter(out: org.apache.hadoop.fs.Path,
+    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+  override def commitTask(
+      c: org.apache.hadoop.mapreduce.TaskAttemptContext): Unit =
+    if (out.toString.contains(SinkReplaySpec.FailMarker))
+      throw new java.io.IOException("injected write failure")
+    else super.commitTask(c)
 }
