@@ -16,12 +16,15 @@ import graft.sources.Tables
   * bucket-collision candidates, which is what keeps near-dedup feasible at
   * 100 TB (all-pairs is O(n²); LSH is ~O(n · bands)).
   *
-  * Each operator evaluates its own lineage — the MinHash verify stage,
-  * for instance, re-derives the shingle sets for both join sides (the
-  * native kernel makes a pass cheap). When chaining several near-dup
-  * strategies over one corpus at scale, build [[shingled]] once (cached)
-  * and feed the `*FromShingled` variants instead of paying a source scan
-  * and a shingle kernel pass per operator.
+  * The two exact-verify families each have ONE pair core that every
+  * call shape (corpus self-join, in-memory batch ⋈ corpus join, stored
+  * index probe) feeds with its two sides: [[minhashPairs]] over
+  * [[minhashIndexFrames]] and [[ppjoinVerified]] over [[prefixUnder]]
+  * postings, both verifying through [[verified]]. Each operator
+  * evaluates its own lineage; when chaining several near-dup strategies
+  * over one corpus at scale, build [[shingled]] once (cached) and feed
+  * the `*FromShingled` variants instead of paying a source scan and a
+  * shingle kernel pass per operator.
   */
 object Dedup {
 
@@ -130,42 +133,20 @@ object Dedup {
   private val BandRows = 3
   private val Bands = 21 // 63 hashes; see minhashNearDup for the r/b math
 
-  /** (doc_id, band, h) bucket keys of a shingled (doc_id, sh) frame — the
-    * unit the LSH joins exchange: 21 rows per document, never the
-    * shingle sets. One generated kernel call per row
-    * ([[graft.functions.MinhashBandKernel]]: 63 Kirsch–Mitzenmacher
-    * MinHash slots from two xxhash64 string hashes per shingle, each
-    * 3-slot band xxhash64'd into its key), so no exchange or aggregation
-    * sits between the shingles and the keys. `band` is int and `h` is
-    * bigint, the on-disk [[writeMinhashIndex]] schema. Keys are per ROW:
-    * a frame that repeats a doc_id gets one key set per row, not one
-    * signature over the union of those rows' shingles.
+  /** The 21 band keys of a shingle array, in band order: one generated
+    * kernel call per row ([[graft.functions.MinhashBandKernel]]: 63
+    * Kirsch–Mitzenmacher MinHash slots from two xxhash64 string hashes
+    * per shingle, each 3-slot band xxhash64'd into its key). Docs sharing
+    * any band key are candidates. Detection probability for Jaccard j is
+    * 1-(1-j³)²¹: miss ≈ 1.5e-4 at j=0.7 (the verify threshold), ≈1e-12 at
+    * j=0.9 — r=3 bands trade a few more spurious candidates (cheap, the
+    * verify is exact) for near-total recall at the threshold itself,
+    * where 4-row bands leave a ~1% deterministic hole.
     */
-  private def bandBuckets(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), posexplode(bandKeys(col("sh"))).as(Seq("band", "h")))
-
-  /** The 21 band keys of a shingle array, in band order. */
   private def bandKeys(sh: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.functions.MinhashBands(
       ColumnBridge.expression(sh), Bands, BandRows))
-  }
-
-  /** Candidate pairs from banded LSH: docs sharing any 3-row band bucket.
-    * Detection probability for Jaccard j is 1-(1-j³)²¹: miss ≈ 1.5e-4 at
-    * j=0.7 (the verify threshold), ≈1e-12 at j=0.9 — r=3 bands trade a
-    * few more spurious candidates (cheap, the verify is exact) for
-    * near-total recall at the threshold itself, where 4-row bands leave a
-    * ~1% deterministic hole.
-    */
-  private def candidatePairs(docs: DataFrame): DataFrame = {
-    val buckets = bandBuckets(docs)
-    val a = buckets.as("a")
-    val b = buckets.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.h") === col("b.h")
-        && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
   }
 
   /** The banding-recall curve of the SHIPPED LSH configuration
@@ -263,19 +244,9 @@ object Dedup {
       documents.select(col("doc_id"), shingles(col("text")).as("sh")),
       threshold)
 
-  /** Same, over a pre-[[shingled]] frame — the chaining entry point.
-    *
-    * The exact-Jaccard verify runs on per-doc SORTED xxhash64 sets via
-    * the codegen'd merge kernel ([[graft.functions.SortedIntersectCount]])
-    * instead of `array_intersect`/`array_union` over the raw shingle
-    * strings — the latter hash-builds and materializes two scratch
-    * arrays of strings per candidate pair, which at a dup-dense corpus's
-    * candidate volume dominated the whole build (sf1 replica corpus:
-    * ~87% of cross-replica pairs collide in some band at the 0.7
-    * banding, 21.5 s → 6.2 s for the pair-memo build). |∪| falls out as
-    * na + nb − |∩| on set-semantic arrays. Same 8-byte-key contract and
-    * ~1e-9 deterministic collision caveat the blocked Jaccard path
-    * documents.
+  /** Same, over a pre-[[shingled]] frame — the chaining entry point:
+    * [[minhashPairs]] over the frame signed from its `sh` column, with
+    * the frame itself on both sides of the band join.
     */
   def minhashFromShingled(docs: DataFrame, threshold: Double): DataFrame =
     minhashFromShingledUnordered(docs, threshold)
@@ -283,25 +254,16 @@ object Dedup {
 
   /** [[minhashFromShingled]] without the final (da, db) sort, for callers
     * that cut or aggregate the pairs anyway: the global sort costs a
-    * range-sampling job plus a sort whose order nobody reads.
+    * range-sampling job plus a sort whose order nobody reads. The signed
+    * frame is not cut: a corpus-sized cut would stay resident, and a
+    * caller's cached `sh` frame stays the plan's only leaf
+    * (`DedupChainSpec`).
     */
   private[graft] def minhashFromShingledUnordered(docs: DataFrame,
-      threshold: Double): DataFrame = {
-    val cands = candidatePairs(docs)
-    cands.join(hashedSets(docs, "da", "hsa", "na"), "da")
-      .join(hashedSets(docs, "db", "hsb", "nb"), "db")
-      .withColumn("jaccard", kernelJaccard)
-      .filter(col("jaccard") >= threshold)
+      threshold: Double): DataFrame =
+    minhashPairs(minhashSigned(docs.select(col("doc_id"), col("sh")),
+        col("sh")), None, withinBatch = true, threshold, probe = false)
       .select(col("da"), col("db"), col("jaccard"))
-  }
-
-  /** Per-doc sorted xxhash64 shingle set, aliased for a join side — the
-    * shared projection every kernel-verify site reads.
-    */
-  private def hashedSets(docs: DataFrame, idAs: String, hsAs: String,
-      nAs: String): DataFrame =
-    docs.select(col("doc_id").as(idAs), hashedSet(col("sh")).as(hsAs))
-      .withColumn(nAs, size(col(hsAs)))
 
   /** Sorted distinct xxhash64 set of an `array<string>` column in one
     * generated kernel call ([[graft.functions.HashedSet]]) — replaces
@@ -314,15 +276,32 @@ object Dedup {
       graft.functions.HashedSet(ColumnBridge.expression(sh)))
   }
 
-  /** The merge-kernel Jaccard over (hsa, na, hsb, nb) columns — one
-    * definition so every verify site computes the identical expression.
+  /** The verify both set-similarity families share, over candidate rows
+    * carrying two per-doc SORTED xxhash64 sets (`hsa`, `hsb`) and their
+    * sizes (`na`, `nb`): `common` = |hsa ∩ hsb| by the codegen'd
+    * two-pointer merge ([[graft.functions.SortedIntersectCount]]) and
+    * `jaccard` = common / (na + nb − common), |∪| falling out of
+    * set-semantic arrays; the sets are dropped. The merge replaced
+    * `array_intersect`/`array_union` over the raw shingle strings, which
+    * hash-build and materialize two scratch arrays per candidate pair
+    * (sf1 replica corpus, pair-memo build: 21.5 s → 6.2 s). Same 8-byte
+    * key contract and ~1e-9 deterministic collision caveat as
+    * [[ngramJaccardPairs]].
+    *
+    * The kernel runs once per candidate pair: `common` comes out of a
+    * one-element `explode`, and a threshold filter on a generated column
+    * stays above the generator. Predicate pushdown would inline a
+    * projected `common` into the join that brings `hsb`, running the
+    * kernel in the join condition and again in the projection (PlanSpec).
     */
-  private def kernelJaccard: Column = {
-    val common = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.SortedIntersectCount(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("hsa")),
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("hsb"))))
-    common / (col("na") + col("nb") - common)
+  private def verified(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val common = ColumnBridge.column(graft.functions.SortedIntersectCount(
+      ColumnBridge.expression(col("hsa")), ColumnBridge.expression(col("hsb"))))
+    pairs.withColumn("common", explode(array(common)))
+      .drop("hsa", "hsb")
+      .withColumn("jaccard",
+        col("common") / (col("na") + col("nb") - col("common")))
   }
 
   /** Cross-source duplication matrix: near-dup PAIR counts per
@@ -378,24 +357,35 @@ object Dedup {
     * day's admission pays signatures for the batch plus a key-join,
     * never a corpus re-shingle. Same r/b recall math as
     * [[minhashNearDup]]: miss ≈ 1.5e-4 at j = 0.7.
+    *
+    * It is the [[minhashJoinFromIndex]] probe with the index frames
+    * derived in memory: the batch is signed once and cut, the corpus
+    * contributes [[minhashIndexFrames]] of its uncut signature. The
+    * candidates are not broadcast: a batch here may be any size (with
+    * the hint, `q_minhash_join` at sf0.1 on 4 cores took 1.03 s, not
+    * 0.80 s).
     */
   def minhashJoinOn(batch: DataFrame, corpus: DataFrame,
-      threshold: Double): DataFrame = {
-    val bs = batch.select(col("doc_id"), shingles(col("text")).as("sh"))
-    val cs = corpus.select(col("doc_id"), shingles(col("text")).as("sh"))
-    val cands = bandBuckets(bs).as("a")
-      .join(bandBuckets(cs).as("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h"))
-      .select(col("a.doc_id").as("batch_id"), col("b.doc_id").as("corpus_id"))
-      .distinct()
-    cands
-      .join(hashedSets(bs, "batch_id", "hsa", "na"), "batch_id")
-      .join(hashedSets(cs, "corpus_id", "hsb", "nb"), "corpus_id")
-      .withColumn("jaccard", kernelJaccard)
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+      threshold: Double): DataFrame =
+    batchCorpus(minhashPairs(signedCut(batch),
+      Some(minhashIndexFrames(
+        minhashSigned(corpus.select(col("doc_id"), col("text"))))),
+      withinBatch = false, threshold, probe = false))
+
+  /** A (doc_id, text) frame signed ([[minhashSigned]]) and cut without
+    * its text, for the several branches that read it.
+    */
+  private def signedCut(docs: DataFrame): DataFrame =
+    minhashSigned(docs.select(col("doc_id"), col("text"))).drop("text")
+      .cutLineage()
+
+  /** A (da, db, jaccard) pair frame of a batch ⋈ corpus join as the
+    * cross-corpus joins emit it: (batch_id, corpus_id, jaccard), sorted.
+    */
+  private def batchCorpus(pairs: DataFrame): DataFrame =
+    pairs.select(col("da").as("batch_id"), col("db").as("corpus_id"),
+        col("jaccard"))
       .orderBy(col("batch_id"), col("corpus_id"))
-  }
 
   /** Materialize the corpus side of [[minhashJoinOn]] as an on-disk
     * admission index of two flat parquet directories:
@@ -418,37 +408,45 @@ object Dedup {
     * precomputed frames.
     */
   def writeMinhashIndex(corpus: DataFrame, path: String): Unit = {
-    val signed = minhashSigned(corpus.select(col("doc_id"), col("text")))
-      .cutLineage()
+    val signed = signedCut(corpus)
     writeMinhashFrames(signed, path, "overwrite")
     graft.Materialize.release(signed)
   }
 
-  /** (hs, n, keys) added to a (doc_id, text, …) frame from ONE
-    * `word_shingles` call per row: `hs` is the verify's sorted hashed
-    * set ([[hashedSet]]), `n` its size, `keys` the 21 band keys in band
-    * order (`minhash_bands`, see [[bandBuckets]]). A frame read by more
-    * than one branch must be cut: each branch of an uncut plan re-runs
-    * the kernels.
+  /** (hs, n, keys) added to a (doc_id, …) frame from ONE shingle array
+    * per row, by default one `word_shingles` call on `text`: `hs` is the
+    * verify's sorted hashed set ([[hashedSet]]), `n` its size, `keys`
+    * the 21 band keys in band order ([[bandKeys]]). Keys are per ROW: a
+    * frame that repeats a doc_id gets one key set per row. A frame read
+    * by more than one branch must be cut: each branch of an uncut plan
+    * re-runs the kernels.
     */
-  private[graft] def minhashSigned(docs: DataFrame): DataFrame = {
-    val sh = col("__mh_sh")
-    docs.withColumn("__mh_sh", shingles(col("text")))
-      .withColumn("hs", hashedSet(sh))
-      .withColumn("keys", bandKeys(sh))
+  private[graft] def minhashSigned(docs: DataFrame,
+      sh: Column = shingles(col("text"))): DataFrame =
+    docs.withColumn("__mh_sh", sh)
+      .withColumn("hs", hashedSet(col("__mh_sh")))
+      .withColumn("keys", bandKeys(col("__mh_sh")))
       .withColumn("n", size(col("hs")))
       .drop("__mh_sh")
-  }
 
-  /** The two frames an index write lands, projected from a
-    * [[minhashSigned]] frame: (doc_id, hs, n) for `sets/` and
-    * (band, h, doc_id) for `bands/`. Package-private so the spec can pin
-    * that they read the batch alone.
+  /** The two frames every MinHash path joins and verifies against,
+    * projected from a [[minhashSigned]] frame: (doc_id, hs, n) for
+    * `sets/` and (band, h, doc_id) for `bands/` (`band` int, `h`
+    * bigint: the on-disk [[writeMinhashIndex]] schema). Package-private
+    * so the spec can pin that they read the batch alone.
+    *
+    * The keys explode OUTER, and the empty-set rows it keeps are dropped
+    * above it: an inner explode of the `keys` column makes the optimizer
+    * infer a `size(keys) > 0` filter, which over an uncut signature is
+    * pushed below the projection as two more band-kernel calls per doc
+    * (PlanSpec's kernel census).
     */
   private[operators] def minhashIndexFrames(
       signed: DataFrame): (DataFrame, DataFrame) =
     (signed.select(col("doc_id"), col("hs"), col("n")),
-      signed.select(col("doc_id"), posexplode(col("keys")).as(Seq("band", "h")))
+      signed.select(col("doc_id"),
+          posexplode_outer(col("keys")).as(Seq("band", "h")))
+        .filter(col("h").isNotNull)
         .select(col("band"), col("h"), col("doc_id")))
 
   /** Write a [[minhashSigned]] frame's sets and band keys into the
@@ -482,8 +480,7 @@ object Dedup {
     */
   def appendToMinhashIndex(batch: DataFrame, path: String): Unit = {
     requireMinhashSets(batch.sparkSession, path)
-    val signed = minhashSigned(batch.select(col("doc_id"), col("text")))
-      .cutLineage()
+    val signed = signedCut(batch)
     writeMinhashFrames(signed, path, "append")
     graft.Materialize.release(signed)
   }
@@ -502,48 +499,62 @@ object Dedup {
         "Dedup.writeMinhashIndex")
   }
 
-  /** Verified near-dup pairs of a [[minhashSigned]] batch against the
-    * stored index at `indexPath` and, with `withinBatch`, against
-    * itself — candidates from ONE band join of the batch's keys against
-    * batch keys ∪ stored `bands/`. The verify reads the batch side's
-    * `hs` from `signed` and the stored side's from `sets/`, keeping only
-    * candidate ids (the candidates are the broadcast build side, so no
-    * per-batch hash table grows with the index); nothing here shingles.
-    * `signed` is read by several branches, so pass a cut. Stored frames
-    * are read with pinned schemas, doc_id typed as the batch's. Output
-    * (da, db, stored, jaccard): `da` is a batch id; `db` is a stored id
-    * when `stored`, else a batch id above `da`.
+  /** THE MinHash pair core, behind every MinHash path: verified near-dup
+    * pairs of a [[minhashSigned]] frame against `stored` (sets, bands)
+    * frames in the [[minhashIndexFrames]] shape — read from an index or
+    * derived in memory — and, with `withinBatch`, against itself.
+    * Candidates come from ONE band join of the frame's keys against its
+    * own keys ∪ the stored keys; the [[verified]] side reads the frame's
+    * `hs` and the other side's `sets/`, keeping only candidate ids.
+    * `probe` broadcasts the candidates, which a streaming batch bounds
+    * (no per-batch hash table grows with the index); the corpus
+    * self-join and the in-memory join leave that join to the planner. Output (da, db, stored, jaccard):
+    * `da` is a frame id; `db` is a stored id when `stored`, else a frame
+    * id above `da`.
+    */
+  private def minhashPairs(signed: DataFrame,
+      stored: Option[(DataFrame, DataFrame)], withinBatch: Boolean,
+      threshold: Double, probe: Boolean): DataFrame = {
+    val (sets, bands) = minhashIndexFrames(signed)
+    val sides = (if (withinBatch) Seq((sets, bands) -> false) else Nil) ++
+      stored.map(_ -> true)
+    def others(frame: ((DataFrame, DataFrame)) => DataFrame): DataFrame =
+      sides.map { case (f, st) => frame(f).withColumn("stored", lit(st)) }
+        .reduce(_ union _).withColumnRenamed("doc_id", "db")
+    val cands = bands.withColumnRenamed("doc_id", "da")
+      .join(others(_._2), Seq("band", "h"))
+      .filter(col("stored") || col("da") < col("db"))
+      .select(col("da"), col("db"), col("stored"))
+      .distinct()
+      .join(sets.select(col("doc_id").as("da"), col("hs").as("hsa"),
+        col("n").as("na")), "da")
+    verified(others(_._1).select(col("db"), col("stored"),
+        col("hs").as("hsb"), col("n").as("nb"))
+      .join(if (probe) broadcast(cands) else cands, Seq("db", "stored")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("da"), col("db"), col("stored"), col("jaccard"))
+  }
+
+  /** [[minhashPairs]] of a cut [[minhashSigned]] batch against the
+    * stored index at `indexPath` (if any) and, with `withinBatch`,
+    * against itself: the per-batch probe of the streaming gates. Stored
+    * frames are read with pinned schemas, doc_id typed as the batch's;
+    * nothing here shingles.
     */
   private[graft] def minhashProbe(signed: DataFrame, indexPath: Option[String],
       withinBatch: Boolean, threshold: Double): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
     val idType = signed.schema("doc_id").dataType
-    val sides = (if (withinBatch) Seq(minhashIndexFrames(signed) -> false)
-      else Nil) ++ indexPath.map { p =>
-        requireMinhashSets(signed.sparkSession, p)
-        def read(dir: String, fields: (String, DataType)*) =
-          Tables.pinned(signed.sparkSession, s"$p/$dir", fields: _*)
-        (read("sets", "doc_id" -> idType, "hs" -> ArrayType(LongType),
-          "n" -> IntegerType),
-          read("bands", "band" -> IntegerType, "h" -> LongType,
-            "doc_id" -> idType)) -> true
-      }
-    def others(frame: ((DataFrame, DataFrame)) => DataFrame): DataFrame =
-      sides.map { case (f, st) => frame(f).withColumn("stored", lit(st)) }
-        .reduce(_ union _).withColumnRenamed("doc_id", "db")
-    val cands = minhashIndexFrames(signed)._2.withColumnRenamed("doc_id", "da")
-      .join(others(_._2), Seq("band", "h"))
-      .filter(col("stored") || col("da") < col("db"))
-      .select(col("da"), col("db"), col("stored"))
-      .distinct()
-      .join(signed.select(col("doc_id").as("da"), col("hs").as("hsa"),
-        col("n").as("na")), "da")
-    others(_._1).select(col("db"), col("stored"), col("hs").as("hsb"),
-        col("n").as("nb"))
-      .join(broadcast(cands), Seq("db", "stored"))
-      .withColumn("jaccard", kernelJaccard)
-      .filter(col("jaccard") >= threshold)
-      .select(col("da"), col("db"), col("stored"), col("jaccard"))
+    val stored = indexPath.map { p =>
+      requireMinhashSets(signed.sparkSession, p)
+      def read(dir: String, fields: (String, DataType)*) =
+        Tables.pinned(signed.sparkSession, s"$p/$dir", fields: _*)
+      (read("sets", "doc_id" -> idType, "hs" -> ArrayType(LongType),
+        "n" -> IntegerType),
+        read("bands", "band" -> IntegerType, "h" -> LongType,
+          "doc_id" -> idType))
+    }
+    minhashPairs(signed, stored, withinBatch, threshold, probe = true)
   }
 
   /** [[minhashJoinOn]] with the corpus side served from a materialized
@@ -552,16 +563,12 @@ object Dedup {
     * candidate join and stored `sets/` to the verify — no corpus
     * re-shingle, no corpus signature pass (plan-proved in
     * `MinhashIndexSpec`). Results are identical to the in-memory path by
-    * construction (same kernels, same band hashing, same verify metric).
+    * construction: both run [[minhashPairs]] on the same frame shapes.
     */
   def minhashJoinFromIndex(spark: SparkSession, batch: DataFrame,
       indexPath: String, threshold: Double): DataFrame =
-    minhashProbe(
-      minhashSigned(batch.select(col("doc_id"), col("text"))).cutLineage(),
-      Some(indexPath), withinBatch = false, threshold)
-      .select(col("da").as("batch_id"), col("db").as("corpus_id"),
-        col("jaccard"))
-      .orderBy(col("batch_id"), col("corpus_id"))
+    batchCorpus(minhashProbe(signedCut(batch), Some(indexPath),
+      withinBatch = false, threshold))
 
   /** [[minhashJoinOn]] over the documents table, doc_id ≡ 7 (mod 10) as
     * the incoming batch against the rest as corpus (the
@@ -725,37 +732,85 @@ object Dedup {
   def ppjoinPairsOn(documents: DataFrame, tNum: Long, tDen: Long): DataFrame =
     ppjoinFromShingled(shingleProjection(documents), tNum, tDen)
 
-  /** Same, over a pre-[[shingled]] frame — the chaining entry point. */
+  /** Same, over a pre-[[shingled]] frame — the chaining entry point:
+    * [[ppjoinVerified]] with the frame's own prefix postings and sets on
+    * both sides.
+    */
   def ppjoinFromShingled(shingledDocs: DataFrame, tNum: Long,
       tDen: Long): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum <= tDen,
-      s"threshold must be a rational in (0, 1]: $tNum/$tDen")
-    import org.apache.spark.sql.expressions.Window
-    // per-doc hashed shingle SETS, one row per doc — the frame both the
-    // prefix derivation (exploded) and the verify read; array_distinct
-    // guards set semantics against the ~1e-9 hash collision, and the
-    // sort is the verify kernel's precondition (sorted_intersect_count)
-    val hdocs = shingledDocs
+    val t = Ratio(tNum, tDen)
+    // per-doc hashed shingle SETS, one row per doc — the frame the df
+    // count, the prefix derivation and the verify all read
+    val sets = shingledDocs
       .select(col("doc_id"), hashedSet(col("sh")).as("hs"))
       .cutLineage()
-    val ex = hdocs.select(col("doc_id"), size(col("hs")).as("n"),
-      explode(col("hs")).as("h"))
-    val dfreq = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    // prefix length ⌈t·n⌉ via integer ceil-div — see the float caveat above
-    // double division then floor is exact here: numerator < 2⁵³ and a
-    // true integer quotient is exactly representable, so the correctly-
-    // rounded IEEE quotient never crosses an integer boundary
-    val ceilTn = floor((lit(tNum) * col("n") + lit(tDen - 1)) / lit(tDen))
-      .cast("long")
     // eagerly cut: BOTH sides of the candidate self-join read this frame,
     // and without the cut Spark re-runs the df-aggregate + window subtree
     // per side (plan-audited — it doubled the operator's cost)
-    val prefix = ex.join(dfreq, "h")
+    val prefix = prefixUnder(docFreq(sets), sets, t).cutLineage(eager = true)
+    ppjoinVerified((prefix, sets), (prefix, sets), t, self = true)
+      .orderBy(col("da"), col("db"))
+  }
+
+  /** A ppjoin threshold: the rational `num/den`, checked to lie in
+    * (0, 1] when it is built. Every ppjoin entry (the three joins, the
+    * index write and append) builds one before it reads or writes
+    * anything: `num > den` empties every prefix and `num = 0` passes
+    * every candidate, so either would silently admit or drop everything.
+    */
+  private final case class Ratio(num: Long, den: Long) {
+    require(num > 0 && den > 0 && num <= den,
+      s"threshold must be a rational in (0, 1]: $num/$den")
+  }
+
+  /** Document frequency (h, df) of the tokens of a (doc_id, hs) frame. */
+  private def docFreq(sets: DataFrame): DataFrame =
+    sets.select(explode(col("hs")).as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("df"))
+
+  /** THE ppjoin prefix derivation: rank a (doc_id, hs) frame's tokens
+    * under a df order and keep each doc's prefix postings (h, doc_id, n,
+    * rnk). The order is (coalesce(df, 0), h): tokens `dfreq` has never
+    * seen rank rarest-first. Any FIXED total order keeps the prefix
+    * lemma valid — df only tunes selectivity — so a stored index's
+    * frozen order stays correct as the indexed corpus drifts, the same
+    * frozen-artifact contract as the IVF codebook.
+    */
+  private def prefixUnder(dfreq: DataFrame, sets: DataFrame,
+      t: Ratio): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // prefix length ⌈t·n⌉ via integer ceil-div — see the float caveat at
+    // ppjoinPairs. Double division then floor is exact here: numerator
+    // < 2⁵³ and a true integer quotient is exactly representable, so the
+    // correctly-rounded IEEE quotient never crosses an integer boundary
+    val ceilTn = floor((lit(t.num) * col("n") + lit(t.den - 1)) / lit(t.den))
+      .cast("long")
+    sets.select(col("doc_id"), size(col("hs")).as("n"),
+        explode(col("hs")).as("h"))
+      .join(dfreq, Seq("h"), "left")
+      .withColumn("df", coalesce(col("df"), lit(0L)))
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
       .filter(col("rnk") <= col("n") - ceilTn + lit(1))
       .select(col("h"), col("doc_id"), col("n"), col("rnk"))
-      .cutLineage(eager = true)
+  }
+
+  /** THE ppjoin pair core, behind every ppjoin path. Each side is
+    * (prefix postings (h, doc_id, n, rnk), sets (doc_id, hs)) under ONE
+    * shared token order; the paths differ only in where the sides come
+    * from. Prefix postings equi-join on `h` (`self` keeps da < db), the
+    * symmetric size filter t·max(na, nb) ≤ min(na, nb) and the
+    * positional filter prune the candidates, and the exact rational
+    * test common·den ≥ num·(na + nb − common) decides on [[verified]]
+    * pairs. Output (da, db, jaccard), unsorted.
+    */
+  private def ppjoinVerified(a: (DataFrame, DataFrame),
+      b: (DataFrame, DataFrame), t: Ratio, self: Boolean): DataFrame = {
+    def postings(side: (DataFrame, DataFrame), s: String): DataFrame =
+      side._1.select(col("h"), col("doc_id").as(s"d$s"),
+        col("n").as(s"n$s"), col("rnk").as(s"r$s"))
+    def sets(side: (DataFrame, DataFrame), s: String): DataFrame =
+      side._2.select(col("doc_id").as(s"d$s"), col("hs").as(s"hs$s"))
     // positional filter (the "P" in PPJoin): a valid pair's FIRST shared
     // token — necessarily inside both prefixes — admits overlap at most
     // 1 + min(suffix lengths past it), so a pair none of whose collisions
@@ -764,42 +819,24 @@ object Dedup {
     // prefix length. Measured at sf0.1: 104k → 33k surviving candidate
     // pairs (the verify stage carries two hash arrays per pair, so the
     // 3× cut halved the operator's wall time).
-    val alpha = floor((lit(tNum) * (col("na") + col("nb"))
-      + lit(tNum + tDen - 1)) / lit(tNum + tDen)).cast("long")
-    val cands = prefix.select(col("h"), col("doc_id").as("da"),
-        col("n").as("na"), col("rnk").as("ra"))
-      .join(prefix.select(col("h"), col("doc_id").as("db"),
-        col("n").as("nb"), col("rnk").as("rb")), Seq("h"))
-      .filter(col("da") < col("db"))
-      // symmetric size filter: t·max ≤ min, integer cross-multiplied
-      .filter(greatest(col("na"), col("nb")) * lit(tNum)
-        <= least(col("na"), col("nb")) * lit(tDen))
+    val alpha = floor((lit(t.num) * (col("na") + col("nb"))
+      + lit(t.num + t.den - 1)) / lit(t.num + t.den)).cast("long")
+    val cands = postings(a, "a").join(postings(b, "b"), Seq("h"))
+      .filter(!lit(self) || col("da") < col("db"))
+      .filter(greatest(col("na"), col("nb")) * lit(t.num)
+        <= least(col("na"), col("nb")) * lit(t.den))
       .filter(lit(1) + least(col("na") - col("ra"), col("nb") - col("rb"))
         >= alpha)
       .select(col("da"), col("db"), col("na"), col("nb"))
       .distinct()
-    // exact verify on candidates only, via set intersection of the two
-    // per-doc hash arrays: joins move the COMPACT doc-keyed frame (one
-    // row per doc), never the exploded postings — the exploded
+    // exact verify on candidates only: joins move the COMPACT doc-keyed
+    // sets (one row per doc), never the exploded postings — the exploded
     // formulation tempted the planner into broadcasting the corpus-sized
     // token frame, a plan that dies at real scale
-    cands
-      .join(hdocs.select(col("doc_id").as("da"), col("hs").as("hsa")), "da")
-      .join(hdocs.select(col("doc_id").as("db"), col("hs").as("hsb")), "db")
-      .select(col("da"), col("db"), col("na"), col("nb"),
-        // two-pointer merge count (native kernel): |∩| without hashing
-        // or materializing the intersection array per candidate pair
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.SortedIntersectCount(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("hsa")),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("hsb"))))
-          .as("common"))
-      .filter(col("common") * lit(tDen)
-        >= lit(tNum) * (col("na") + col("nb") - col("common")))
-      .select(col("da"), col("db"),
-        (col("common") / (col("na") + col("nb") - col("common")))
-          .as("jaccard"))
-      .orderBy(col("da"), col("db"))
+    verified(cands.join(sets(a, "a"), "da").join(sets(b, "b"), "db"))
+      .filter(col("common") * lit(t.den)
+        >= lit(t.num) * (col("na") + col("nb") - col("common")))
+      .select(col("da"), col("db"), col("jaccard"))
   }
 
   /** Cross-corpus EXACT set-similarity admission join — the
@@ -809,69 +846,20 @@ object Dedup {
     * only needs ONE total token order shared by both sides; document
     * frequency over the UNION provides it (df is a performance
     * heuristic — rare tokens up front — not a correctness input), so
-    * the batch and corpus prefixes are directly joinable.
-    *
-    * Same stages as [[ppjoinFromShingled]] with the self-join replaced
-    * by batch-prefix ⋈ corpus-prefix (no batch×batch, no
-    * corpus×corpus), the same positional filter, and the same
-    * merge-kernel verify.
+    * the batch and corpus prefixes are directly joinable:
+    * [[ppjoinVerified]] with batch prefix ⋈ corpus prefix (no
+    * batch×batch, no corpus×corpus).
     */
   def ppjoinJoinOn(batch: DataFrame, corpus: DataFrame,
       tNum: Long = 7L, tDen: Long = 10L): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum <= tDen,
-      s"threshold must be a rational in (0, 1]: $tNum/$tDen")
-    import org.apache.spark.sql.expressions.Window
-    def hsets(docs: DataFrame): DataFrame = docs
-      .select(col("doc_id"),
-        shingleHashes(col("text"), sorted = true).as("hs"))
-      .cutLineage()
-    val hb = hsets(batch)
-    val hc = hsets(corpus)
-    def exploded(h: DataFrame): DataFrame =
-      h.select(col("doc_id"), size(col("hs")).as("n"),
-        explode(col("hs")).as("h"))
-    val exB = exploded(hb)
-    val exC = exploded(hc)
-    // ONE shared order: union df (computed once, broadcast-joined into
-    // both prefix derivations)
-    val dfreq = exB.union(exC).groupBy(col("h"))
-      .agg(count(lit(1)).as("df")).cutLineage(eager = true)
-    val ceilTn = floor((lit(tNum) * col("n") + lit(tDen - 1)) / lit(tDen))
-      .cast("long")
-    def prefixOf(ex: DataFrame): DataFrame = ex.join(dfreq, "h")
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      .filter(col("rnk") <= col("n") - ceilTn + lit(1))
-      .select(col("h"), col("doc_id"), col("n"), col("rnk"))
-    val alpha = floor((lit(tNum) * (col("na") + col("nb"))
-      + lit(tNum + tDen - 1)) / lit(tNum + tDen)).cast("long")
-    val cands = prefixOf(exB).select(col("h"),
-        col("doc_id").as("batch_id"), col("n").as("na"), col("rnk").as("ra"))
-      .join(prefixOf(exC).select(col("h"),
-        col("doc_id").as("corpus_id"), col("n").as("nb"),
-        col("rnk").as("rb")), Seq("h"))
-      .filter(greatest(col("na"), col("nb")) * lit(tNum)
-        <= least(col("na"), col("nb")) * lit(tDen))
-      .filter(lit(1) + least(col("na") - col("ra"), col("nb") - col("rb"))
-        >= alpha)
-      .select(col("batch_id"), col("corpus_id"), col("na"), col("nb"))
-      .distinct()
-    cands
-      .join(hb.select(col("doc_id").as("batch_id"), col("hs").as("hsa")),
-        "batch_id")
-      .join(hc.select(col("doc_id").as("corpus_id"), col("hs").as("hsb")),
-        "corpus_id")
-      .withColumn("common",
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.SortedIntersectCount(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("hsa")),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("hsb")))))
-      .filter(col("common") * lit(tDen)
-        >= lit(tNum) * (col("na") + col("nb") - col("common")))
-      .select(col("batch_id"), col("corpus_id"),
-        (col("common") / (col("na") + col("nb") - col("common")))
-          .as("jaccard"))
-      .orderBy(col("batch_id"), col("corpus_id"))
+    val t = Ratio(tNum, tDen)
+    val hb = ppjoinSets(batch).cutLineage()
+    val hc = ppjoinSets(corpus).cutLineage()
+    // ONE shared order: union df, computed once and read by both prefix
+    // derivations
+    val dfreq = docFreq(hb.union(hc)).cutLineage(eager = true)
+    batchCorpus(ppjoinVerified((prefixUnder(dfreq, hb, t), hb),
+      (prefixUnder(dfreq, hc, t), hc), t, self = false))
   }
 
   /** [[ppjoinJoinOn]] over the documents table with the
@@ -885,32 +873,12 @@ object Dedup {
       docs.filter(col("doc_id") % 10 =!= 7), tNum, tDen)
   }
 
-  /** The hashed-set projection every ppjoin index path shares. */
+  /** The hashed-set projection of a (doc_id, text) frame that the
+    * cross-corpus ppjoin paths share.
+    */
   private def ppjoinSets(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"),
       shingleHashes(col("text"), sorted = true).as("hs"))
-
-  /** Rank a side's tokens under a STORED df order and keep its prefix.
-    * The order is (coalesce(stored df, 0), h): tokens the stored corpus
-    * has never seen rank rarest-first. Any FIXED total order keeps the
-    * prefix lemma valid — df only tunes selectivity — so the frozen
-    * order stays correct as the indexed corpus drifts, the same
-    * frozen-artifact contract as the IVF codebook.
-    */
-  private def prefixUnder(dfreq: DataFrame, sets: DataFrame,
-      tNum: Long, tDen: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ceilTn = floor((lit(tNum) * col("n") + lit(tDen - 1)) / lit(tDen))
-      .cast("long")
-    sets.select(col("doc_id"), size(col("hs")).as("n"),
-        explode(col("hs")).as("h"))
-      .join(dfreq, Seq("h"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
-      .filter(col("rnk") <= col("n") - ceilTn + lit(1))
-      .select(col("h"), col("doc_id"), col("n"), col("rnk"))
-  }
 
   /** Materialize the corpus side of [[ppjoinJoinOn]] as an on-disk
     * EXACT admission index — the zero-miss sibling of
@@ -923,16 +891,20 @@ object Dedup {
     */
   def writePpjoinIndex(corpus: DataFrame, path: String,
       tNum: Long = 7L, tDen: Long = 10L): Unit = {
+    val t = Ratio(tNum, tDen)
     val spark = corpus.sparkSession
     ppjoinSets(corpus).write.mode("overwrite").parquet(s"$path/sets")
     val sets = spark.read.parquet(s"$path/sets")
-    sets.select(explode(col("hs")).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$path/dfreq")
-    prefixUnder(spark.read.parquet(s"$path/dfreq"), sets, tNum, tDen)
-      .repartition(col("h")).sortWithinPartitions(col("h"), col("doc_id"))
-      .write.mode("overwrite").parquet(s"$path/prefix")
+    docFreq(sets).write.mode("overwrite").parquet(s"$path/dfreq")
+    writePrefix(prefixUnder(spark.read.parquet(s"$path/dfreq"), sets, t),
+      path, "overwrite")
   }
+
+  /** Write prefix postings into `path/prefix`, clustered by h. */
+  private def writePrefix(prefix: DataFrame, path: String,
+      mode: String): Unit =
+    prefix.repartition(col("h")).sortWithinPartitions(col("h"), col("doc_id"))
+      .write.mode(mode).parquet(s"$path/prefix")
 
   /** Admit a batch into a stored [[writePpjoinIndex]] layout: sets and
     * prefix postings append; `dfreq/` stays FROZEN (the order is a
@@ -944,58 +916,29 @@ object Dedup {
     */
   def appendToPpjoinIndex(batch: DataFrame, path: String,
       tNum: Long = 7L, tDen: Long = 10L): Unit = {
+    val t = Ratio(tNum, tDen)
     val spark = batch.sparkSession
-    import graft.Materialize.MatOps
     val sets = ppjoinSets(batch).cutLineage(eager = true)
     sets.write.mode("append").parquet(s"$path/sets")
-    prefixUnder(spark.read.parquet(s"$path/dfreq"), sets, tNum, tDen)
-      .repartition(col("h")).sortWithinPartitions(col("h"), col("doc_id"))
-      .write.mode("append").parquet(s"$path/prefix")
+    writePrefix(prefixUnder(spark.read.parquet(s"$path/dfreq"), sets, t),
+      path, "append")
     graft.Materialize.release(sets)
   }
 
   /** [[ppjoinJoinOn]] with the corpus side served from a stored
-    * [[writePpjoinIndex]] layout: the batch is shingled/ranked live
-    * under the index's frozen df order; the corpus contributes stored
-    * prefix postings to the candidate join and stored sets to the
-    * verify — no corpus re-shingle anywhere in the plan.
+    * [[writePpjoinIndex]] layout: [[ppjoinVerified]] with the batch
+    * shingled and ranked live under the index's frozen df order against
+    * the stored `prefix/` postings and `sets/` — no corpus re-shingle
+    * anywhere in the plan.
     */
   def ppjoinJoinFromIndex(spark: SparkSession, batch: DataFrame,
       indexPath: String, tNum: Long = 7L, tDen: Long = 10L): DataFrame = {
-    import graft.Materialize.MatOps
+    val t = Ratio(tNum, tDen)
     val bs = ppjoinSets(batch).cutLineage()
-    val dfreq = spark.read.parquet(s"$indexPath/dfreq")
-    val alpha = floor((lit(tNum) * (col("na") + col("nb"))
-      + lit(tNum + tDen - 1)) / lit(tNum + tDen)).cast("long")
-    val cands = prefixUnder(dfreq, bs, tNum, tDen)
-      .select(col("h"), col("doc_id").as("batch_id"), col("n").as("na"),
-        col("rnk").as("ra"))
-      .join(spark.read.parquet(s"$indexPath/prefix")
-        .select(col("h"), col("doc_id").as("corpus_id"), col("n").as("nb"),
-          col("rnk").as("rb")), Seq("h"))
-      .filter(greatest(col("na"), col("nb")) * lit(tNum)
-        <= least(col("na"), col("nb")) * lit(tDen))
-      .filter(lit(1) + least(col("na") - col("ra"), col("nb") - col("rb"))
-        >= alpha)
-      .select(col("batch_id"), col("corpus_id"), col("na"), col("nb"))
-      .distinct()
-    cands
-      .join(bs.select(col("doc_id").as("batch_id"), col("hs").as("hsa")),
-        "batch_id")
-      .join(spark.read.parquet(s"$indexPath/sets")
-        .select(col("doc_id").as("corpus_id"), col("hs").as("hsb")),
-        "corpus_id")
-      .withColumn("common",
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.SortedIntersectCount(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("hsa")),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("hsb")))))
-      .filter(col("common") * lit(tDen)
-        >= lit(tNum) * (col("na") + col("nb") - col("common")))
-      .select(col("batch_id"), col("corpus_id"),
-        (col("common") / (col("na") + col("nb") - col("common")))
-          .as("jaccard"))
-      .orderBy(col("batch_id"), col("corpus_id"))
+    def stored(dir: String): DataFrame =
+      spark.read.parquet(s"$indexPath/$dir")
+    batchCorpus(ppjoinVerified((prefixUnder(stored("dfreq"), bs, t), bs),
+      (stored("prefix"), stored("sets")), t, self = false))
   }
 
   /** Duplicated-span coverage (Lee et al. 2021, "Deduplicating Training

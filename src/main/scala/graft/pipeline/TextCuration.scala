@@ -80,37 +80,28 @@ object TextCuration {
     * per count.
     */
   def summary(spark: SparkSession, dir: String,
-      cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-    val qualityDf = qualityGateOn(docs, cfg).persist()
-    val cleanDf = decontaminatedOn(docs, qualityDf, cfg).persist()
-    val dedupDf = keptAfterDedupFrom(cleanDf, cfg,
-      Some(Dedup.nearDupPairs(spark, dir, cfg.dedupThreshold))).persist()
-    try {
-      val input = docs.count()
-      val quality = qualityDf.count()
-      val clean = cleanDf.count()
-      val deduped = dedupDf.count()
-      val capped = keptAfterCapFrom(dedupDf, cfg).count()
-      Seq(("1_input", input), ("2_quality", quality), ("3_decontam", clean),
-        ("4_dedup", deduped), ("5_cap", capped)).toDF("stage", "n_docs")
-    } finally {
-      dedupDf.unpersist(); cleanDf.unpersist(); qualityDf.unpersist()
-    }
-  }
+      cfg: Config = Config()): DataFrame =
+    summaryFrom(Tables.documents(spark, dir), cfg,
+      Some(Dedup.nearDupPairs(spark, dir, cfg.dedupThreshold)))
 
   /** [[summary]] over any documents-shaped frame (near-dup pairs
     * computed inline) — the batch reference the streaming
     * [[graft.streaming.EventStream.curationSink]] spec compares
     * stage counts against.
     */
-  def summaryOn(docs: DataFrame, cfg: Config = Config()): DataFrame = {
+  def summaryOn(docs: DataFrame, cfg: Config = Config()): DataFrame =
+    summaryFrom(docs, cfg, None)
+
+  /** The one body of [[summary]] and [[summaryOn]]; `fullPairs` as in
+    * [[runOn]].
+    */
+  private def summaryFrom(docs: DataFrame, cfg: Config,
+      fullPairs: Option[DataFrame]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val qualityDf = qualityGateOn(docs, cfg).persist()
     val cleanDf = decontaminatedOn(docs, qualityDf, cfg).persist()
-    val dedupDf = keptAfterDedupFrom(cleanDf, cfg).persist()
+    val dedupDf = keptAfterDedupFrom(cleanDf, cfg, fullPairs).persist()
     try {
       val input = docs.count()
       val quality = qualityDf.count()
@@ -125,10 +116,6 @@ object TextCuration {
   }
 
   /** Stage 1: quality gate over (doc_id, source, lang, n_tokens). */
-  private[pipeline] def qualityGate(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    qualityGateOn(Tables.documents(spark, dir), cfg)
-
   private[graft] def qualityGateOn(docs: DataFrame, cfg: Config): DataFrame = {
     val t = split(col("text"), " ")
     docs
@@ -149,12 +136,6 @@ object TextCuration {
     * non-eval quality survivors, and overlap is word `decontamK`-gram
     * membership.
     */
-  private[pipeline] def decontaminated(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    decontaminatedOn(docs, qualityGateOn(docs, cfg), cfg)
-  }
-
   private def decontaminatedOn(docs: DataFrame,
       quality: DataFrame, cfg: Config): DataFrame =
     Dedup.decontaminateOn(
@@ -210,10 +191,6 @@ object TextCuration {
   }
 
   /** Stage 4: per-source cap with deterministic md5 priority. */
-  private[pipeline] def keptAfterCap(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    keptAfterCapFrom(keptAfterDedup(spark, dir, cfg), cfg)
-
   private def keptAfterCapFrom(deduped: DataFrame, cfg: Config): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))

@@ -907,6 +907,26 @@ object EventStream {
       .getOrElse(Seq.empty[Long].toDF("corpus_id"))
   }
 
+  /** The micro-batch body of the id-keyed dedup gates ([[nearDupGate]],
+    * [[ppjoinGateSink]], [[phashGateSink]], [[simhashGateSink]]):
+    * `probe(spark, batch)` yields the batch's (batch_id, corpus_id)
+    * matches against the stored index; matches against ids this batchId
+    * already admitted are exempt ([[ownAdmitted]]), every other matched
+    * doc drops, and the survivors land through [[landBatch]].
+    */
+  private def probeGate(docs: DataFrame, outPath: String,
+      checkpoint: String)(
+      probe: (SparkSession, DataFrame) => DataFrame): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
+      val dups = probe(spark, batch)
+        .join(broadcast(own), Seq("corpus_id"), "left_anti")
+        .select(col("batch_id").as("doc_id")).distinct()
+      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
+        outPath)
+    }
+
   /** Streaming fuzzy admission against a materialized
     * [[graft.operators.Dedup.writeMinhashIndex]] corpus index: each
     * micro-batch is MinHash-probed against the stored band keys, docs
@@ -923,16 +943,8 @@ object EventStream {
     */
   def nearDupGate(docs: DataFrame, indexPath: String, outPath: String,
       checkpoint: String, threshold: Double = 0.7): StreamingQuery =
-    microBatch(docs, checkpoint) { (batch, batchId, _) =>
-      val spark = batch.sparkSession
-      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-      val dups = graft.operators.Dedup
-        .minhashJoinFromIndex(spark, batch, indexPath, threshold)
-        .join(broadcast(own), Seq("corpus_id"), "left_anti")
-        .select(col("batch_id").as("doc_id")).distinct()
-      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
-        outPath)
-    }
+    probeGate(docs, outPath, checkpoint)(graft.operators.Dedup
+      .minhashJoinFromIndex(_, _, indexPath, threshold))
 
   /** Streaming EXACT set-similarity admission against a materialized
     * [[graft.operators.Dedup.writePpjoinIndex]] corpus index — the
@@ -954,16 +966,8 @@ object EventStream {
     */
   def ppjoinGateSink(docs: DataFrame, indexPath: String, outPath: String,
       checkpoint: String, tNum: Long = 7L, tDen: Long = 10L): StreamingQuery =
-    microBatch(docs, checkpoint) { (batch, batchId, _) =>
-      val spark = batch.sparkSession
-      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-      val dups = graft.operators.Dedup
-        .ppjoinJoinFromIndex(spark, batch, indexPath, tNum, tDen)
-        .join(broadcast(own), Seq("corpus_id"), "left_anti")
-        .select(col("batch_id").as("doc_id")).distinct()
-      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
-        outPath)
-    }
+    probeGate(docs, outPath, checkpoint)(graft.operators.Dedup
+      .ppjoinJoinFromIndex(_, _, indexPath, tNum, tDen))
 
   /** Streaming perceptual-hash admission gate — the media twin of
     * [[nearDupGate]]: each micro-batch of (doc_id, blob) payloads is
@@ -979,16 +983,8 @@ object EventStream {
     */
   def phashGateSink(media: DataFrame, indexPath: String, outPath: String,
       checkpoint: String, maxHamming: Int = 16): StreamingQuery =
-    microBatch(media, checkpoint) { (batch, batchId, _) =>
-      val spark = batch.sparkSession
-      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-      val dups = graft.operators.Multimodal
-        .phashJoinFromIndex(spark, batch, indexPath, maxHamming)
-        .join(broadcast(own), Seq("corpus_id"), "left_anti")
-        .select(col("batch_id").as("doc_id")).distinct()
-      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
-        outPath)
-    }
+    probeGate(media, outPath, checkpoint)(graft.operators.Multimodal
+      .phashJoinFromIndex(_, _, indexPath, maxHamming))
 
   /** Streaming SimHash admission gate — the BIT-SIGNATURE text leg of
     * the admission family ([[nearDupGate]] MinHash/Jaccard, this sink
@@ -1013,16 +1009,8 @@ object EventStream {
     */
   def simhashGateSink(docs: DataFrame, indexPath: String, outPath: String,
       checkpoint: String, maxHamming: Int = 3): StreamingQuery =
-    microBatch(docs, checkpoint) { (batch, batchId, _) =>
-      val spark = batch.sparkSession
-      val own = ownAdmitted(spark, outPath, batchId, "doc_id")
-      val dups = graft.operators.Dedup
-        .simhashJoinFromIndex(spark, batch, indexPath, maxHamming)
-        .join(broadcast(own), Seq("corpus_id"), "left_anti")
-        .select(col("batch_id").as("doc_id")).distinct()
-      landBatch(batch.join(dups, Seq("doc_id"), "left_anti"), batchId,
-        outPath)
-    }
+    probeGate(docs, outPath, checkpoint)(graft.operators.Dedup
+      .simhashJoinFromIndex(_, _, indexPath, maxHamming))
 
   /** Streaming embedding admission gate — the DENSE-vector leg of the
     * modality triptych ([[nearDupGate]] text/MinHash, [[phashGateSink]]

@@ -607,5 +607,52 @@ class PlanSpec extends AnyFunSuite {
     // every inferred isnotnull filter on a kernel column, re-runs a kernel
     assert(calls(Dedup.minhashProbe(signed, Some(idx), withinBatch = true,
       0.7)).size > 3)
+    // the uncut paths run each kernel once per frame branch and never in
+    // an inferred filter: the corpus self-join's two band-join sides and
+    // two verify sides, and the in-memory join's corpus sets and bands
+    // (its batch is a cut)
+    val selfJoin = calls(Dedup.minhashNearDupOn(docs, 0.7))
+    assert(selfJoin.sorted == Seq.fill(2)("HashedSetKernel$") ++
+      Seq.fill(2)("MinhashBandKernel$") ++ Seq.fill(4)("ShingleKernel$"),
+      selfJoin)
+    val joinOn = calls(Dedup.minhashJoinOn(
+      docs.filter(col("doc_id") % 10 === 7),
+      docs.filter(col("doc_id") % 10 =!= 7), 0.7))
+    assert(joinOn.sorted == Seq("HashedSetKernel$", "MinhashBandKernel$",
+      "ShingleKernel$", "ShingleKernel$"), joinOn)
+  }
+
+  test("set-similarity verify: the sorted-merge kernel appears once in " +
+    "every ppjoin and MinHash pair path, never copied into a join " +
+    "condition or filter") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.functions.col
+    import graft.functions.SortedIntersectKernel
+    def merges(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case s: StaticInvoke
+          if s.staticObject == SortedIntersectKernel.getClass => s
+      })).size
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val batch = docs.filter(col("doc_id") % 10 === 7)
+      .select(col("doc_id"), col("text"))
+    val corpus = docs.filter(col("doc_id") % 10 =!= 7)
+      .select(col("doc_id"), col("text"))
+    def tmp(name: String): String =
+      java.nio.file.Files.createTempDirectory(name).toString
+    val pp = tmp("graft_plan_pp")
+    Dedup.writePpjoinIndex(corpus, pp)
+    val mh = tmp("graft_plan_mhv")
+    Dedup.writeMinhashIndex(corpus, mh)
+    val paths = Seq(
+      "ppjoinPairsOn" -> Dedup.ppjoinPairsOn(docs, 7L, 10L),
+      "ppjoinJoinOn" -> Dedup.ppjoinJoinOn(batch, corpus),
+      "ppjoinJoinFromIndex" -> Dedup.ppjoinJoinFromIndex(spark, batch, pp),
+      "minhashNearDupOn" -> Dedup.minhashNearDupOn(docs, 0.7),
+      "minhashJoinOn" -> Dedup.minhashJoinOn(batch, corpus, 0.7),
+      "minhashJoinFromIndex" ->
+        Dedup.minhashJoinFromIndex(spark, batch, mh, 0.7))
+    for ((name, df) <- paths)
+      assert(merges(df) == 1, s"$name: ${merges(df)} merge-kernel calls")
   }
 }

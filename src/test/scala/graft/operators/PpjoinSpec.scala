@@ -147,6 +147,36 @@ class PpjoinSpec extends AnyFunSuite {
     assert(viaAppend == served)
   }
 
+  test("every ppjoin path rejects a threshold outside (0, 1] before it " +
+    "reads or writes anything") {
+    val batch = docs.filter(col("doc_id") <= 8L)
+      .select(col("doc_id"), col("text"))
+    val corpus = docs.filter(col("doc_id") >= 9L)
+      .select(col("doc_id"), col("text"))
+    val idx = java.nio.file.Files.createTempDirectory("graft_ppbad").toString
+    Dedup.writePpjoinIndex(corpus, idx)
+    val fresh = s"$idx-unwritten"
+    def files(dir: String): Int =
+      Option(new java.io.File(dir).list()).map(_.length).getOrElse(0)
+    val before = Seq("sets", "prefix").map(d => files(s"$idx/$d"))
+    // num > den empties every prefix (the gate would admit everything);
+    // num = 0 passes every candidate (it would drop every doc sharing a
+    // prefix token); den = 0 is no rational
+    for ((num, den) <- Seq((8L, 7L), (0L, 10L), (1L, 0L));
+         attempt <- Seq[() => Unit](
+           () => Dedup.writePpjoinIndex(corpus, fresh, num, den),
+           () => Dedup.appendToPpjoinIndex(batch, idx, num, den),
+           () => Dedup.ppjoinJoinFromIndex(spark, batch, idx, num, den),
+           () => Dedup.ppjoinJoinOn(batch, corpus, num, den),
+           () => Dedup.ppjoinPairsOn(docs, num, den))) {
+      val e = intercept[IllegalArgumentException](attempt())
+      assert(e.getMessage.contains(s"$num/$den"), e.getMessage)
+    }
+    assert(!new java.io.File(fresh).exists, "a rejected write wrote")
+    assert(Seq("sets", "prefix").map(d => files(s"$idx/$d")) == before,
+      "a rejected append appended")
+  }
+
   test("completeness the blocked sibling lacks: cross-bucket and cross-lang") {
     val blocked = Dedup.ngramJaccardPairsOn(docs, 0.7, maxDf = None)
     val blockedPairs = pairSet(blocked)
