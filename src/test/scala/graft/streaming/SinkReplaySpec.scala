@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{FailingParquetCommitter, TestSpark}
 
 /** Zero-survivor replay, one case per sink whose output can be empty for
   * a non-empty batch. Each case lands batch 0, then replays the same
@@ -150,7 +150,7 @@ class SinkReplaySpec extends AnyFunSuite {
   ownAdmittedGates.foreach { case (name, write, sink) =>
     test(s"$name: a replay whose write fails keeps the partition the " +
         "next replay's own-id exemption reads") {
-      val root = Files.createTempDirectory(SinkReplaySpec.FailMarker)
+      val root = Files.createTempDirectory(FailingParquetCommitter.FailMarker)
       val out = root.resolve("out").toString
       def landed = spark.read.parquet(out).collect()
         .map(_.getAs[Long]("doc_id")).toSet
@@ -166,14 +166,9 @@ class SinkReplaySpec extends AnyFunSuite {
       // write job fails (the query clones the session conf at start)
       val idx1 = root.resolve("idx1").toString
       write((otherDocs ++ batchDocs).toDF("doc_id", "text"), idx1)
-      val key = "spark.sql.parquet.output.committer.class"
-      spark.conf.set(key, classOf[FailingParquetCommitter].getName)
-      val failed =
-        try intercept[Exception](run(idx1, "ck1"))
-        finally spark.conf.unset(key)
-      assert(Iterator.iterate[Throwable](failed)(_.getCause)
-          .takeWhile(_ != null).exists(e =>
-            String.valueOf(e.getMessage).contains("injected write failure")),
+      val failed = FailingParquetCommitter.during(spark)(
+        intercept[Exception](run(idx1, "ck1")))
+      assert(FailingParquetCommitter.injected(failed),
         s"the replay must fail in its write: $failed")
       assert(landed == first, "a failed write must not touch batch 0")
       run(idx1, "ck2")
@@ -196,24 +191,4 @@ class SinkReplaySpec extends AnyFunSuite {
         "the zero-survivor replay must delete its stale partition")
     }
   }
-}
-
-object SinkReplaySpec {
-  /** Temp-dir prefix of the failed-write cases: the only output paths
-    * [[FailingParquetCommitter]] fails. */
-  val FailMarker = "graft_replay_fail"
-}
-
-/** A parquet committer whose task commit fails for output under a
-  * [[SinkReplaySpec.FailMarker]] directory: a write job that dies after
-  * its tasks ran, before anything is committed.
-  */
-class FailingParquetCommitter(out: org.apache.hadoop.fs.Path,
-    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
-    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
-  override def commitTask(
-      c: org.apache.hadoop.mapreduce.TaskAttemptContext): Unit =
-    if (out.toString.contains(SinkReplaySpec.FailMarker))
-      throw new java.io.IOException("injected write failure")
-    else super.commitTask(c)
 }
