@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
 
 /** EP1 orchestration (`/root/reference/main.py:128-174` +
@@ -71,21 +72,17 @@ object Pipeline {
         t.setDaemon(true)
         t
       })
-      val written = try saves.map { case (name, frame) =>
-        pool.submit(new Callable[String] {
+      // invokeAll returns once every write has ended, failed or not
+      val written = try pool.invokeAll(saves.map { case (name, frame) =>
+        new Callable[String] {
           def call(): String = {
             spark.sparkContext.setJobDescription(s"pipeline.save.$name")
             val p = s"$outDir/$name"
             saveParquet(frame(), p)
             p
           }
-        })
-      } finally {
-        // every write ends, failed or not, before a failure is rethrown
-        // and before the cache it may still be reading is dropped
-        pool.shutdown()
-        while (!pool.awaitTermination(1, TimeUnit.MINUTES)) {}
-      }
+        }
+      }.asJava).asScala.toSeq finally pool.shutdown()
       val outcomes = saves.map(_._1).zip(written.map { f =>
         try Success(f.get()) catch { case e: ExecutionException => Failure(e.getCause) }
       })

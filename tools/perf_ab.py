@@ -1,17 +1,18 @@
 #!/usr/bin/env python3
 """Alternating-pair A/B of one perfbench workload: a parent revision
-against the working tree (or a second revision).
+against the working tree.
 
     python3 tools/perf_ab.py --parent <rev> --workload <name> --pairs <n>
-        [--change <rev>] [--seconds 12] [--first-seed 1] [--out ab.json]
+        [--out ab.json]
 
-Run from the repository root. Each side that names a revision is
-`git archive`d into a temporary directory; the working tree side runs in
-place. Pair i runs seed first_seed + i on both sides, the parent first on
-odd seeds and the change first on even ones, so a drift in machine speed
-over the session falls on both sides alike. Every run is
+Run from the repository root. The parent revision is `git archive`d into
+a temporary directory; the working tree runs in place. Pair i runs seed
+i (from 1) on both sides, the parent first on odd seeds and the change
+first on even ones, so a drift in machine speed over the session falls
+on both sides alike. Every run is
 `python3 perfbench/run.py --workload W --seed s --seconds S --trace 0`
-with its own build directory per side.
+with its own build directory per side, S being BENCHMARK.json's
+`run_seconds`.
 
 For each end-to-end metric BENCHMARK.json lists, it prints the median
 [Q1, Q3] of each side, how many pairs the change won (by the metric's
@@ -91,11 +92,8 @@ def summarize(spec, pairs):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="revision of the baseline side")
-    ap.add_argument("--change", help="revision of the changed side (default: working tree)")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=int, default=12)
-    ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--out", help="write every run's result and the summary here as JSON")
     a = ap.parse_args()
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
@@ -103,16 +101,14 @@ def main():
         raise SystemExit(f"perf_ab: unknown workload {a.workload}")
     with tempfile.TemporaryDirectory(prefix="perf_ab_") as tmp:
         tmp = Path(tmp)
-        trees = {"parent": archive(a.parent, tmp / "parent"),
-                 "change": archive(a.change, tmp / "change") if a.change else ROOT}
+        trees = {"parent": archive(a.parent, tmp / "parent"), "change": ROOT}
         pairs = []
-        for i in range(a.pairs):
-            seed = a.first_seed + i
+        for seed in range(1, a.pairs + 1):
             order = ("parent", "change") if seed % 2 else ("change", "parent")
             pair = {"seed": seed, "first": order[0]}
             for side in order:
                 pair[side] = run(trees[side], tmp / f"{side}_build", a.workload,
-                                 seed, a.seconds)
+                                 seed, spec["run_seconds"])
             ok = all(pair[s]["correct"] and pair[s]["failed"] == 0 for s in order)
             print(f"[perf_ab] seed {seed} ({order[0]} first): " + "  ".join(
                 f"{s} op_s_p50 {pair[s]['metrics']['op_s_p50']['value']:.4f}"
@@ -122,8 +118,8 @@ def main():
     rows = summarize(spec, pairs)
     if a.out:
         Path(a.out).write_text(json.dumps({
-            "workload": a.workload, "parent": a.parent, "change": a.change or "working tree",
-            "seconds": a.seconds, "pairs": pairs, "summary": rows}, indent=1) + "\n")
+            "workload": a.workload, "parent": a.parent, "change": "working tree",
+            "seconds": spec["run_seconds"], "pairs": pairs, "summary": rows}, indent=1) + "\n")
 
 
 if __name__ == "__main__":
