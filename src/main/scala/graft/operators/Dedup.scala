@@ -409,7 +409,8 @@ object Dedup {
     */
   def writeMinhashIndex(corpus: DataFrame, path: String): Unit = {
     val signed = signedCut(corpus)
-    writeMinhashFrames(signed, path, "overwrite")
+    val (sets, bands) = writeMinhashFrames(signed, path, "overwrite")
+    sets(); bands()
     graft.Materialize.release(signed)
   }
 
@@ -449,16 +450,19 @@ object Dedup {
         .filter(col("h").isNotNull)
         .select(col("band"), col("h"), col("doc_id")))
 
-  /** Write a [[minhashSigned]] frame's sets and band keys into the
-    * [[writeMinhashIndex]] layout at `path` under save `mode`. Both
-    * writes read `signed`, so it should be a cut.
+  /** The writes of a [[minhashSigned]] frame's sets and band keys into
+    * the [[writeMinhashIndex]] layout at `path` under save `mode`, as
+    * thunks `(sets, bands)`. Run `bands` once `sets` has ended: a probe
+    * finds candidates only through `bands/`, so sets without their keys
+    * are inert, while keys without sets fail [[requireMinhashSets]]. Both
+    * read `signed`, so it should be a cut.
     */
   private[graft] def writeMinhashFrames(signed: DataFrame, path: String,
-      mode: String): Unit = {
+      mode: String): (() => Unit, () => Unit) = {
     val (sets, bands) = minhashIndexFrames(signed)
-    sets.write.mode(mode).parquet(s"$path/sets")
-    bands.sortWithinPartitions(col("band"), col("h"))
-      .write.mode(mode).parquet(s"$path/bands")
+    (() => sets.write.mode(mode).parquet(s"$path/sets"),
+      () => bands.sortWithinPartitions(col("band"), col("h"))
+        .write.mode(mode).parquet(s"$path/bands"))
   }
 
   /** Incrementally admit a batch into a materialized
@@ -481,7 +485,8 @@ object Dedup {
   def appendToMinhashIndex(batch: DataFrame, path: String): Unit = {
     requireMinhashSets(batch.sparkSession, path)
     val signed = signedCut(batch)
-    writeMinhashFrames(signed, path, "append")
+    val (sets, bands) = writeMinhashFrames(signed, path, "append")
+    sets(); bands()
     graft.Materialize.release(signed)
   }
 

@@ -1,8 +1,6 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
 
 /** EP1 orchestration (`/root/reference/main.py:128-174` +
@@ -13,17 +11,15 @@ import scala.util.{Failure, Success}
   *   - `covid.cache()` — the reference feeds covid_df into four separate
   *     actions with no persist (its README claims caching that the code
   *     never does; SURVEY.md §4), recomputing the full transform 4×.
-  *   - the five writes run as concurrent Spark jobs, one thread per
-  *     dataset on a pool made for the call. At the reference's sizes each
-  *     write is a chain of one-task jobs with planning and commit gaps
-  *     between them, so one after another they leave most cores idle.
+  *   - the five writes run as concurrent Spark jobs through
+  *     [[graft.Concurrently]]: one `pipeline-save` thread per dataset,
+  *     its jobs tagged `pipeline.save.<dataset>`, the caller's job group
+  *     inherited. At the reference's sizes each write is a chain of
+  *     one-task jobs, so one after another they leave most cores idle.
   *     The cache is still built once: the four covid writes' tasks that
   *     reach a cached partition not built yet wait on its block write
   *     lock for the one task building it, then read it, so the CSV parse
   *     and the transform run once (`PipelineSpec` counts the rows read).
-  *     Each thread tags its jobs `spark.job.description =
-  *     pipeline.save.<dataset>`; it inherits the caller's other local
-  *     properties, job group included.
   *   - no pandas/SQLite hop — the serving store stays Parquet + temp
   *     views, queried with Spark SQL.
   *
@@ -67,25 +63,14 @@ object Pipeline {
       vaccCsv.map(p => "vaccinations" -> (() =>
         Transforms.transformVaccinations(readVaccinationsCsv(spark, p))))
     try {
-      val pool = Executors.newFixedThreadPool(saves.size, { r: Runnable =>
-        val t = new Thread(r, "pipeline-save")
-        t.setDaemon(true)
-        t
-      })
-      // invokeAll returns once every write has ended, failed or not
-      val written = try pool.invokeAll(saves.map { case (name, frame) =>
-        new Callable[String] {
-          def call(): String = {
-            spark.sparkContext.setJobDescription(s"pipeline.save.$name")
+      val outcomes = saves.map(_._1).zip(graft.Concurrently(spark,
+        "pipeline-save", saves.map { case (name, frame) =>
+          s"pipeline.save.$name" -> { () =>
             val p = s"$outDir/$name"
             saveParquet(frame(), p)
             p
           }
-        }
-      }.asJava).asScala.toSeq finally pool.shutdown()
-      val outcomes = saves.map(_._1).zip(written.map { f =>
-        try Success(f.get()) catch { case e: ExecutionException => Failure(e.getCause) }
-      })
+        }))
       // Fail-soft: the reference continues when vaccinations are absent
       // (data_transformer.py:399-407).
       val (skipped, failed) = outcomes.collect { case (name, Failure(e)) => name -> e }
@@ -93,8 +78,7 @@ object Pipeline {
       skipped.foreach { case (_, e) =>
         System.err.println(s"[pipeline] vaccination branch skipped: ${e.getMessage}")
       }
-      failed.map(_._2).reduceOption { (first, later) => first.addSuppressed(later); first }
-        .foreach(throw _)
+      graft.Concurrently.rethrow(failed.map(_._2))
       outcomes.collect { case (name, Success(p)) => name -> p }.toMap
     } finally covid.unpersist()
   }

@@ -1127,9 +1127,15 @@ object EventStream {
     *      equal the batch cap's min(n, cap) even though the batch
     *      picks by global md5 priority and the stream by arrival.
     *
-    * Index writes happen AFTER the data/ledger writes: a crash between
-    * the two leaves an admitted batch not yet indexed — the next
-    * attempt re-probes without self-matches and re-lands identically.
+    * A batch lands in two waves of concurrent writes
+    * ([[graft.Concurrently]]), the second only once the first has ended
+    * with no failure: (1) `docs`, `ledger` and, with any admissions, the
+    * `batches/` sidecar and the index's `sets/`; (2) `bands/`. A
+    * candidate pair comes only from `bands/`, so whatever of wave 1 a
+    * crash leaves standing, the replay probes as the batch did and
+    * re-lands identically. `bands/` goes after the sidecar so a replay
+    * exempts its own indexed ids instead of self-matching to zero, and
+    * after `sets/` since keys without sets fail every probe of a new index.
     */
   def curationSink(docs: DataFrame, evalSet: DataFrame, indexPath: String,
       outPath: String, checkpoint: String,
@@ -1260,34 +1266,36 @@ object EventStream {
           col("n_tokens"), col("text"))
         .cutLineage()
       val nCap = graft.Materialize.count(landed)
-      // data + ledger land first, index append after (see scaladoc)
-      landBatch(landed, batchId, docsPath)
       // stage names are stable when the LM stage is off (the
       // streamed ≡ batch summary equality depends on them); with
       // it on, "5_lm" lands between dedup and the cap and the cap
       // renumbers — the ledger says what actually ran
-      landBatch((Seq(("1_input", nInput), ("2_quality", nQual),
+      val ledger = (Seq(("1_input", nInput), ("2_quality", nQual),
         ("3_decontam", nClean), ("4_dedup", nDedup)) ++
         (if (lmModelPath.isDefined)
           Seq(("5_lm", nLm), ("6_cap", nCap))
         else Seq(("5_cap", nCap))))
-        .toDF("stage", "n_docs").coalesce(1), batchId, s"$outPath/ledger")
+        .toDF("stage", "n_docs").coalesce(1)
       // keep-first index admission: what the DEDUP stage admitted
-      // (pre-cap — a capped-out doc still represents its cluster)
-      if (nDedup > 0) {
-        // sidecar BEFORE the index data: if a crash lands between
-        // them, a replay sees ids in `batches/` that are not yet in
-        // the index — the anti-join excludes nothing extra and the
-        // retry re-lands identically. The reverse order would let a
-        // replay self-match docs it legitimately indexed. Never
-        // empty here, so the landing replaces and never retracts.
-        landBatch(admitted.select(col("doc_id")), batchId,
-          s"$indexPath/batches")
-        // straight from the cut: its (hs, n, keys) are the rows the
-        // index stores, so nothing re-shingles
-        Dedup.writeMinhashFrames(admitted, indexPath,
-          if (idxExists) "append" else "overwrite")
-      }
+      // (pre-cap — a capped-out doc still represents its cluster),
+      // from the cut's (hs, n, keys), so nothing re-shingles. The
+      // sidecar is never empty, so it is replaced and never retracted
+      val index = if (nDedup > 0) Some(Dedup.writeMinhashFrames(admitted,
+        indexPath, if (idxExists) "append" else "overwrite")) else None
+      // the two waves (see scaladoc)
+      def wave(writes: Seq[(String, () => Unit)]): Unit =
+        graft.Concurrently.rethrow(graft.Concurrently(spark,
+          "curation-land", writes).flatMap(_.failed.toOption))
+      wave(Seq(
+        "curation.land.docs" -> (() => landBatch(landed, batchId, docsPath)),
+        "curation.land.ledger" -> (() =>
+          landBatch(ledger, batchId, s"$outPath/ledger"))) ++
+        index.toSeq.flatMap { case (sets, _) => Seq(
+          "curation.land.batches" -> (() => landBatch(
+            admitted.select(col("doc_id")), batchId, s"$indexPath/batches")),
+          "curation.index.sets" -> sets) })
+      index.foreach { case (_, bands) =>
+        wave(Seq("curation.index.bands" -> bands)) }
       // a broadcast-sized pair list comes back as a local frame,
       // which holds no cut to release
       val clustersCut = !clusters.queryExecution.analyzed

@@ -858,20 +858,29 @@ class EventStreamSpec extends AnyFunSuite {
     val evalSet = evalTexts.zipWithIndex.map { case (t, i) =>
       (20L * (i + 1), t, "s0", "en")
     }.toDF("doc_id", "text", "source", "lang")
-    // Spark jobs per batch: the listener bus is asynchronous, so after
-    // each batch a marker job runs on this thread; once its start event
-    // arrives, every job of the batch has been counted
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    // Spark jobs per batch as (description, start, end): the listener
+    // bus is asynchronous, so after each batch a marker job runs on this
+    // thread; once its start event arrives, every job of the batch has
+    // been counted and has ended. The bus calls the listener from one
+    // thread, and the queue hands each batch's jobs to this one
+    case class Job(tag: String, start: Long, end: Long = Long.MaxValue)
+    var jobs = Map.empty[Int, Job]
+    val marker = new java.util.concurrent.LinkedBlockingQueue[Seq[Job]]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == "census-marker"))
-          marker.put(jobs.getAndSet(0))
-        else jobs.incrementAndGet()
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == "census-marker")) {
+          marker.put(jobs.values.toSeq)
+          jobs = Map.empty
+        } else jobs += e.jobId ->
+          Job(props.map(_.getProperty("spark.job.description")).orNull, e.time)
+      }
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobs.get(e.jobId).foreach(j => jobs += e.jobId -> j.copy(end = e.time))
     }
-    def jobsSinceMarker(): Int = {
+    def jobsSinceMarker(): Seq[Job] = {
       spark.sparkContext.setJobGroup("census-marker", "census marker")
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.clearJobGroup()
@@ -883,7 +892,7 @@ class EventStreamSpec extends AnyFunSuite {
       root.resolve("idx").toString, root.resolve("out").toString,
       root.resolve("ck").toString)
     spark.sparkContext.addSparkListener(listener)
-    val (compiles, jobCounts) = try {
+    val (compiles, census) = try {
       jobsSinceMarker()
       batches.map { b =>
         val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -906,7 +915,22 @@ class EventStreamSpec extends AnyFunSuite {
     // a steady batch runs 28 jobs here (48 while its intra-batch
     // components ran the pointer-doubling loop, 56 before the near-dup
     // stage became one band join over the decontam cut)
+    val jobCounts = census.map(_.size)
     assert(jobCounts.last <= 30, s"Spark jobs per batch: $jobCounts")
+    // the landing: every batch admits docs, so each tags all five
+    // writes, and bands/ starts only once the first wave has ended.
+    // Only the order is asserted: whether the first wave's jobs overlap
+    // depends on the machine's load
+    val firstWave = Seq("curation.land.docs", "curation.land.ledger",
+      "curation.land.batches", "curation.index.sets")
+    census.zipWithIndex.foreach { case (jobs, b) =>
+      val tags = jobs.map(_.tag).toSet
+      assert((firstWave :+ "curation.index.bands").forall(tags), s"batch $b: $tags")
+      val firstWaveEnd = jobs.filter(j => firstWave.contains(j.tag)).map(_.end).max
+      assert(jobs.filter(_.tag == "curation.index.bands")
+        .forall(_.start >= firstWaveEnd),
+        s"batch $b: a bands/ job started before the first wave ended: $jobs")
+    }
   }
 
   test("curationSink with the LM stage: streamed admissions equal the " +

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -16,7 +18,8 @@ import graft.{FailingParquetCommitter, TestSpark}
   * writes nothing, so the only way its `ingest_batch=0` partition can
   * disappear is the sink retracting it. A second set of cases fails a
   * replay's write job instead: the partition must survive it, so that
-  * the next replay's own-id exemption still finds the batch's ids.
+  * the next replay's own-id exemption still finds the batch's ids. The
+  * last cases fail one side of `curationSink`'s first landing wave.
   */
 class SinkReplaySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -189,6 +192,115 @@ class SinkReplaySpec extends AnyFunSuite {
       c.run(root, true, root.resolve("ck1").toString)
       assert(!fs.exists(part),
         "the zero-survivor replay must delete its stale partition")
+    }
+  }
+
+  /** (description, end time) of each job `body` starts, complete once it
+    * returns: a marker job closes the window, and the listener bus posts
+    * in order. A job that never ended reads `Long.MaxValue`.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[(String, Long)]) = {
+    val sc = spark.sparkContext
+    val tags = scala.collection.mutable.Map.empty[Int, String]
+    val ends = scala.collection.mutable.Map.empty[Int, Long]
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == "jobs-marker"))
+          closed.countDown()
+        else tags(e.jobId) = p.map(_.getProperty("spark.job.description")).orNull
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ends(e.jobId) = e.time
+    }
+    sc.addSparkListener(listener)
+    val result = try {
+      try body finally {
+        sc.setJobGroup("jobs-marker", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        closed.await()
+      }
+    } finally sc.removeSparkListener(listener)
+    (result, tags.toSeq.map { case (id, tag) =>
+      (tag, ends.getOrElse(id, Long.MaxValue)) })
+  }
+
+  private def words(seed: Int): String = {
+    val r = new scala.util.Random(seed)
+    Seq.fill(30)(s"w${r.nextInt(500)}").mkString(" ")
+  }
+  /** curationSink's index docs, and a batch of six novel docs plus a
+    * copy of an index doc under a new id, which the stored index drops.
+    */
+  private val curationIndex = (0 until 5).map(i => (1000L + i, words(100 + i)))
+  private val curationBatch =
+    (1 to 6).map(i => (i.toLong, words(i), s"s${i % 2}", "en")) :+
+      ((7L, words(100), "s0", "en"))
+
+  // curationSink lands a batch in two waves: docs, ledger, batches/ and
+  // sets/, then bands/. One case fails the index side of the first wave,
+  // the other the output side
+  Seq("an index" -> "idx", "an output" -> "out").foreach { case (side, failing) =>
+    test(s"curationSink: $side write that fails stops the batch before " +
+        "bands/, once its wave has ended, and the replay re-lands what a " +
+        "clean run lands") {
+      import graft.operators.Dedup
+      def setUp(root: Path, fail: Boolean): (String, String) = {
+        val Seq(idx, out) = Seq("idx", "out").map(d => root.resolve(
+          if (fail && d == failing) s"${FailingParquetCommitter.FailMarker}_$d"
+          else d).toString)
+        Dedup.writeMinhashIndex(curationIndex.toDF("doc_id", "text"), idx)
+        (idx, out)
+      }
+      def sink(idx: String, out: String, ck: String): Unit = {
+        implicit val sql = spark.sqlContext
+        val in = MemoryStream[(Long, String, String, String)]
+        in.addData(curationBatch: _*)
+        drain(EventStream.curationSink(
+          in.toDF().toDF("doc_id", "text", "source", "lang"),
+          Seq((20L, words(999))).toDF("doc_id", "text"), idx, out, ck))
+      }
+      def ids(path: String) =
+        spark.read.parquet(path).select("doc_id").as[Long].collect().toSet
+      def ledger(out: String) = spark.read.parquet(s"$out/ledger").collect()
+        .map(r => r.getAs[String]("stage") -> r.getAs[Long]("n_docs")).toSet
+      val ref = Files.createTempDirectory("graft_waves_ref")
+      val (refIdx, refOut) = setUp(ref, fail = false)
+      sink(refIdx, refOut, ref.resolve("ck").toString)
+      val admitted = ids(s"$refIdx/batches")
+      assert(admitted.nonEmpty && ids(s"$refOut/docs").nonEmpty)
+      assert(!admitted.contains(7L), "the stored index must drop doc 7")
+
+      val root = Files.createTempDirectory("graft_waves")
+      val (idx, out) = setUp(root, fail = true)
+      val ((failed, caughtAt), jobs) = jobsOf {
+        val e = FailingParquetCommitter.during(spark)(
+          intercept[Exception](sink(idx, out, root.resolve("ck1").toString)))
+        (e, System.currentTimeMillis())
+      }
+      assert(FailingParquetCommitter.injected(failed), failed)
+      val landing = jobs.filter { case (tag, _) =>
+        String.valueOf(tag).startsWith("curation.") }
+      assert(landing.map(_._1).toSet == Set("curation.land.docs",
+        "curation.land.ledger", "curation.land.batches", "curation.index.sets"),
+        s"the whole first wave and nothing else must start: $landing")
+      assert(landing.forall(_._2 <= caughtAt),
+        s"the batch must throw only once its wave has ended: $landing")
+      assert((ids(s"$idx/bands") & curationBatch.map(_._1).toSet).isEmpty,
+        "bands/ must hold nothing of the failed batch")
+      if (failing == "idx")
+        assert(ids(s"$out/docs") == ids(s"$refOut/docs") &&
+          ledger(out) == ledger(refOut), "docs/ and the ledger must land")
+      else
+        assert(ids(s"$idx/batches") == admitted &&
+          admitted.subsetOf(ids(s"$idx/sets")), "batches/ and sets/ must land")
+      // the replay sees whatever the failed attempt left and must admit
+      // what the clean run admitted: no self-match to zero
+      sink(idx, out, root.resolve("ck2").toString)
+      assert(ids(s"$out/docs") == ids(s"$refOut/docs"))
+      assert(ledger(out) == ledger(refOut))
+      assert(ids(s"$idx/batches") == admitted)
     }
   }
 }
