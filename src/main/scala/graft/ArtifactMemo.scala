@@ -31,8 +31,7 @@ object ArtifactMemo {
     * retrains instead of serving a poisoned artifact — which is also
     * the recovery path if a cached frame's unreplicated checkpoint
     * blocks die with an executor: call [[invalidate]] and the next
-    * serve retrains (or run under
-    * `spark.graft.materialize.mode=reliable`, where blocks survive).
+    * serve retrains.
     */
   private final class Holder(val spark: SparkSession, train: () => AnyRef) {
     lazy val value: AnyRef = train()

@@ -59,10 +59,5 @@ object GraftSession {
       // side) keep it out of toy-scale plans and engage it exactly in the
       // 100 TB regime it exists for. Plan proof: PlanSpec's bloom test.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // Reliable-mode materialization ([[graft.Materialize]]) writes
-      // checkpoint files; this lets the ContextCleaner delete them once
-      // the frame is unreferenced — without it a long run under
-      // mode=reliable leaks checkpoint storage without bound.
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
 }

@@ -16,18 +16,14 @@ import graft.sources.Tables
   * this file is a final ORDER BY for deterministic output.
   *
   * Multi-consumer frames here use `cutLineage()` ([[graft.Materialize]]):
-  * by default a lazy `localCheckpoint` into UNREPLICATED executor-local
-  * blocks with the lineage truncated. The trade-off is deliberate and
-  * worth naming once for the whole file: losing an executor (or a
-  * dynamic-allocation decommission) makes those blocks unrecoverable and
-  * FAILS the job instead of recomputing — acceptable for the bounded
-  * batch jobs these operators run in (a retry restarts one job, no
-  * partial state). A long multi-stage run on a preemptible/dynamic
-  * cluster sets `spark.graft.materialize.mode=reliable` (checkpoint to
-  * cluster storage) or `persist` (lineage kept, lost blocks recompute) —
-  * see [[graft.Materialize]]; no operator code changes. The cost
-  * ranking — one materialization vs one corpus re-scan per extra
-  * consumer — is unchanged in every mode.
+  * a lazy `localCheckpoint` into UNREPLICATED executor-local blocks with
+  * the lineage truncated. The trade-off is deliberate and worth naming
+  * once for the whole file: losing an executor (or a dynamic-allocation
+  * decommission) makes those blocks unrecoverable and FAILS the job
+  * instead of recomputing — acceptable for the bounded batch jobs these
+  * operators run in (a retry restarts one job, no partial state). One
+  * materialization costs less than one corpus re-scan per extra
+  * consumer.
   */
 object TextAnalysis {
 

@@ -26,10 +26,6 @@ object Transforms {
     }
   }
 
-  /** T3 (data_transformer.py:148-154): case-fatality rate, NULL unless
-    * total_cases is strictly positive (NULL cases and 0 cases both yield
-    * NULL — `when` without `otherwise` defaults to NULL).
-    */
   /** Schema-drift-tolerant union: combine snapshots whose column sets
     * evolved over time (a column added in March, another dropped in
     * June), yielding the union of all columns with NULLs where a
@@ -45,6 +41,10 @@ object Transforms {
     frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
+  /** T3 (data_transformer.py:148-154): case-fatality rate, NULL unless
+    * total_cases is strictly positive (NULL cases and 0 cases both yield
+    * NULL — `when` without `otherwise` defaults to NULL).
+    */
   def withCaseFatalityRate(df: DataFrame): DataFrame =
     df.withColumn("case_fatality_rate",
       when(col("total_cases") > 0,

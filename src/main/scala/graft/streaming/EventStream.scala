@@ -402,8 +402,7 @@ object EventStream {
     *
     * A frame the caller reuses after this call must not lazily read the
     * partition: cut it first with a cut that drops its lineage
-    * ([[ownAdmitted]]'s `cutForOverwrite`, or a counted lazy cut in
-    * `local`/`reliable` materialize mode).
+    * ([[ownAdmitted]]'s `cutForOverwrite`, or a counted lazy cut).
     */
   private def landBatch(frame: DataFrame, batchId: Long,
       path: String): Unit = {
@@ -893,9 +892,9 @@ object EventStream {
     * decisions instead of self-matching every survivor to zero, while a
     * doc REDELIVERED under a NEW batchId finds its own partition empty,
     * still matches its earlier indexed copy, and drops. Cut with
-    * `cutForOverwrite`, which drops the lineage in every materialize
-    * mode: [[landBatch]] replaces or retracts this very partition
-    * later in the batch, so nothing may recompute from it after that.
+    * `cutForOverwrite`, which drops the lineage: [[landBatch]]
+    * replaces or retracts this very partition later in the batch, so
+    * nothing may recompute from it after that.
     */
   private def ownAdmitted(spark: SparkSession, outPath: String,
       batchId: Long, idCol: String): DataFrame = {

@@ -2,61 +2,51 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** The materialization modes are a durability knob, not a semantics knob:
-  * every mode must yield byte-identical results, and the
-  * read-before-overwrite cut must stay safe even in the mode whose normal
-  * cut keeps lineage (persist).
+/** Every lineage cut is a `localCheckpoint` made in [[Materialize]]: the
+  * read-before-overwrite cut must not depend on the files it replaces,
+  * `release` frees only a frame that is exactly one cut, and no other
+  * file in the engine cuts lineage on its own.
   */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** Fresh session (own SQLConf, shared context) so mode changes can't
-    * race other suites running against the shared session.
-    */
-  private def sessionWithMode(mode: String) = {
+  test("cutForOverwrite is independent of its source files: an " +
+      "overwrite after the cut is not seen") {
     val s = spark.newSession()
-    s.conf.set(Materialize.ModeKey, mode)
-    s
+    import s.implicits._
+    import Materialize.MatOps
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_mat").toString + "/t"
+    Seq(1, 2, 3).toDF("v").write.parquet(dir)
+    val cut = s.read.parquet(dir).cutForOverwrite()
+    // overwrite the very files the cut was read from
+    Seq(100, 200).toDF("v").write.mode("overwrite").parquet(dir)
+    assert(cut.orderBy("v").as[Int].collect().toSeq == Seq(1, 2, 3),
+      "the cut must not see post-overwrite data")
   }
 
-  test("local, reliable, and persist modes agree on an iterative " +
-      "multi-cut operator (connected components)") {
-    val results = Seq("local", "reliable", "persist").map { m =>
-      val s = sessionWithMode(m)
-      // broadcast off, so these few pairs take the loop, not the driver
-      KernelPaths.LoopOnly.foreach { case (k, v) => s.conf.set(k, v) }
-      import s.implicits._
-      // two chains and a singleton exercise >1 pointer-doubling round
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
-        (20L, 21L)).toDF("da", "db")
-      graft.operators.Dedup.clustersFromPairs(pairs)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    }
-    assert(results(0) == results(1) && results(1) == results(2))
-  }
-
-  test("cutForOverwrite is independent of its source files in every " +
-      "mode, including persist (which would otherwise keep lineage " +
-      "pointing at the doomed files)") {
-    for (m <- Seq("local", "reliable", "persist")) {
-      val s = sessionWithMode(m)
-      import s.implicits._
-      import Materialize.MatOps
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_mat_$m").toString + "/t"
-      Seq(1, 2, 3).toDF("v").write.parquet(dir)
-      val cut = s.read.parquet(dir).cutForOverwrite()
-      // overwrite the very files the cut was read from
-      Seq(100, 200).toDF("v").write.mode("overwrite").parquet(dir)
-      assert(cut.orderBy("v").as[Int].collect().toSeq == Seq(1, 2, 3),
-        s"mode=$m must not see post-overwrite data")
-    }
+  test("Materialize is the only engine file that cuts lineage: no other " +
+      "file calls localCheckpoint, checkpoint or setCheckpointDir") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val cut = raw"localCheckpoint\(|\.checkpoint\(|setCheckpointDir".r
+    val comment = raw"^\s*(//|/?\*)".r
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.exists(_.endsWith("Materialize.scala")))
+    val calls = for {
+      f <- files if !f.endsWith("Materialize.scala")
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if comment.findFirstIn(line).isEmpty && cut.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(calls.isEmpty, calls.mkString("\n"))
   }
 
   test("release frees an earlier cut's blocks once its consumer has " +
       "eagerly materialized, and the consumer's data survives") {
-    val s = sessionWithMode("local")
+    val s = spark.newSession()
     import s.implicits._
     import Materialize.MatOps
     val before = s.sparkContext.getPersistentRDDs.keySet
@@ -78,7 +68,7 @@ class MaterializeSpec extends AnyFunSuite {
       "cuts: after each call the persistent RDDs hold only the returned " +
       "frame's") {
     import graft.operators.Dedup
-    val s = sessionWithMode("local")
+    val s = spark.newSession()
     import s.implicits._
     def persisted() = s.sparkContext.getPersistentRDDs.keySet
     // a chain takes more than one round, so a round's labels are released
@@ -114,7 +104,7 @@ class MaterializeSpec extends AnyFunSuite {
   test("release refuses a frame that is not exactly one cut: a derived " +
       "frame joining two cuts would release blocks shared with other " +
       "consumers") {
-    val s = sessionWithMode("local")
+    val s = spark.newSession()
     import s.implicits._
     import Materialize.MatOps
     val a = (1 to 3).toDF("v").cutLineage(eager = true)
@@ -126,27 +116,6 @@ class MaterializeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("exactly one materialized scan"))
     // and both cuts must still be readable — nothing was released
     assert(a.count() == 3 && b.count() == 3)
-  }
-
-  test("release in persist mode keeps lineage, so even a released frame " +
-      "recomputes instead of failing") {
-    val s = sessionWithMode("persist")
-    import s.implicits._
-    import Materialize.MatOps
-    val f = (1 to 3).toDF("v").cutLineage(eager = true)
-    Materialize.release(f)
-    // persist-mode release unpersists but lineage was kept: reads recompute
-    assert(f.orderBy("v").as[Int].collect().toSeq == Seq(1, 2, 3))
-  }
-
-  test("unknown mode fails loudly") {
-    val s = sessionWithMode("replicated")
-    import s.implicits._
-    import Materialize.MatOps
-    val e = intercept[IllegalArgumentException] {
-      Seq(1).toDF("v").cutLineage()
-    }
-    assert(e.getMessage.contains(Materialize.ModeKey))
   }
 
   test("artifactDir replaces on rebuild: re-requesting a name deletes " +

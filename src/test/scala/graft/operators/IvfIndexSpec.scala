@@ -182,6 +182,27 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("codebook sidecar"))
   }
 
+  test("checkUniqueIds on: a duplicated vec_id fails naming the id and " +
+    "unique ids probe normally; unset: no check runs") {
+    val batch = Tables.embeddings(spark, dir)
+      .filter(col("vec_id").isin(0L, 7L))
+      .select(col("vec_id"), vecD(col("embedding")).as("v"))
+    val dup = batch.unionByName(batch.filter(col("vec_id") === 7L))
+    def probe(s: org.apache.spark.sql.SparkSession,
+        b: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfProbeBatchOn(s, b, indexPath)
+        .collect().map(_.toString).toSeq
+    val unchecked = spark.newSession()
+    val checked = spark.newSession()
+    checked.conf.set("spark.graft.ivf.checkUniqueIds", "true")
+    val e = intercept[IllegalArgumentException](probe(checked, dup))
+    assert(e.getMessage.contains("vec_id 7 appears 2 times"), e.getMessage)
+    assert(probe(checked, batch) == probe(unchecked, batch))
+    // unset, the duplicated batch is probed as is: its two id-7 vectors
+    // merge into one ranking instead of failing
+    assert(probe(unchecked, dup).nonEmpty)
+  }
+
   // --- hot-cell rebalance ---
 
   /** Skewed fixture: every cell-3 member cloned 3× (fresh ids), so cell
