@@ -34,30 +34,14 @@ object Materialize {
     /** Multi-consumer / iterative lineage cut (situation 1 above). Lazy
       * by default, where Spark's own `localCheckpoint()` is eager.
       */
-    def cutLineage(eager: Boolean = false): DataFrame = {
-      val cut = df.localCheckpoint(eager)
-      if (!eager) lazySources.put(cut, df)
-      cut
-    }
+    def cutLineage(eager: Boolean = false): DataFrame =
+      df.localCheckpoint(eager)
 
     /** Eager cut guaranteeing independence from the frame's source files
       * (situation 2 above).
       */
     def cutForOverwrite(): DataFrame = df.localCheckpoint(eager = true)
   }
-
-  /** A lazy cut's source frame, kept for as long as the cut lives. The
-    * source plan owns the metrics that the tasks computing the cut
-    * report into. When one job finishes computing the cut, Spark marks
-    * it checkpointed and drops that lineage, while another job's stage
-    * may still be computing it: AQE runs the stages of a multi-consumer
-    * cut (`Privacy.tClosenessOn`'s cells) side by side. Without this
-    * reference the source plan could be collected, its accumulators
-    * removed, and those tasks' metric updates lost ("Failed to update
-    * accumulator"). An eager cut is complete before it is returned.
-    */
-  private val lazySources = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, DataFrame]())
 
   /** Resolve a root for an on-disk serving artifact built INSIDE a query
     * (the [[graft.operators.Retrieval.rrfFusion]] index pair). Uses
